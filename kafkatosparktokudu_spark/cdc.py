@@ -22,6 +22,7 @@ batch instead of once per record.
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -41,13 +42,18 @@ from .operators.ogg import (
     with_time_stamp,
 )
 
-DEFAULT_FIXTURE = "/root/repo/fixtures/ogg_changes.jsonl"
+# the repository's sample OGG change log, next to the package
+DEFAULT_FIXTURE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "fixtures",
+    "ogg_changes.jsonl",
+)
 
 
 def read_fixture(spark: SparkSession, path: str = DEFAULT_FIXTURE) -> DataFrame:
     """Raw change lines as a one-column ('value') DataFrame — the batch
     stand-in for the Kafka value column."""
-    return spark.read.text(path).withColumnRenamed("value", "value")
+    return spark.read.text(path)
 
 
 def apply_changes(
@@ -333,7 +339,13 @@ def sync_batch(
                             epoch_id,
                         )
                     pre_snaps.append((spec, tstore, vstore, pre))
-            upsert_many(spark, merges, affected=affected)
+            # a table without rows this batch has no affected entry; left
+            # in, upsert_many would run its (empty) fold to prove it
+            upsert_many(
+                spark,
+                [(s, b) for s, b in merges if affected.get(s.path.rsplit("/", 1)[-1])],
+                affected=affected,
+            )
             if rollups:
                 from .operators.rollup import (
                     clear_pending,

@@ -10,7 +10,7 @@ a local/managed table root.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -62,8 +62,3 @@ class PipelineConfig:
     # dead-letter capture (None = count-only, the reference's drop+log
     # semantics; a path makes bad input replayable after a parser fix)
     dead_letter_dir: str | None = None
-
-    # audit table name — KuduManager.scala:137 ("pub_event")
-    event_table: str = "pub_event"
-
-    extra: dict = field(default_factory=dict)

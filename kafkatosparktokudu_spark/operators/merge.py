@@ -1,8 +1,8 @@
 """Keyed upsert state store: insert-or-update by primary key on plain parquet.
 
 Re-expresses the reference's Kudu upsert sink (S18: ``newUpsert`` +
-``session.apply`` per record, /root/reference/.../KuduManager.scala:70-73,114)
-as a set-oriented MERGE inside ``foreachBatch``. Semantics preserved
+``session.apply`` per record, KuduManager.scala:70-73,114) as a
+set-oriented MERGE inside ``foreachBatch``. Semantics preserved
 (SURVEY.md §2.1 "semantics worth preserving"):
 
 1. upsert = insert-or-update by PK; replays converge (idempotent)
@@ -10,24 +10,40 @@ as a set-oriented MERGE inside ``foreachBatch``. Semantics preserved
 3. partial update: absent/null payload keys leave prior values
 4. at-least-once delivery absorbed by upsert idempotence
 
-Scale design (the reason this isn't a read-all/overwrite-all loop):
+Layout: state is **hash-bucketed on the key**
+(``_bucket = pmod(xxhash64(key), N)``), one parquet directory per bucket.
+A batch reads and rewrites only the buckets its keys hash into, so both
+sides of the merge join are bounded by maxOffsetsPerTrigger and the cost
+tracks the batch, not the table.
 
-- State is **hash-bucketed on the key** (``_bucket = pmod(xxhash64(key), N)``)
-  and stored as a partitioned parquet layout. A micro-batch only reads and
-  rewrites the buckets its keys hash into — partition pruning on read,
-  stage-and-rename per touched bucket on write. At 100 TB with N=8192, a
-  50k-record batch touches at most 50k buckets' worth of data, not the table.
-- The merge itself joins the (small, rate-capped) folded batch against only
-  the affected buckets — both sides are bounded by maxOffsetsPerTrigger,
-  so the join never shuffles the full table.
-- On a lakehouse table format (Delta/Iceberg — jars not in this image) this
-  whole class collapses into ``MERGE INTO``; the public API here is shaped
-  so that swap is a drop-in.
+One write protocol (``_stage_and_swap``) serves every mutation except
+``rebucket``. The caller names, per store, the buckets it replaces:
 
-Crash safety: the bucket-directory swap is atomic per partition, not
-across partitions; recovery relies on checkpoint replay + upsert idempotence
-(exactly the reference's model: offsets persisted after writes,
-ConsumerMain.scala:128-151, duplicates absorbed by upsert).
+1. stage: ONE Spark job writes the new contents of those buckets to
+   ``{path}.__staging__`` beside the first store, partitioned by
+   (position in the call, bucket);
+2. guard: every staged bucket must be in its store's list. A staged
+   bucket outside the list means the caller under-declared it — its
+   state was never read, so swapping it in would replace that bucket's
+   history with batch-only rows. The swap raises ``ValueError`` before
+   any directory moves, leaving every store unchanged;
+3. swap: for each listed bucket, remove the live directory and rename
+   the staged one in when it exists (a listed bucket with no staged rows
+   is left empty), then delete the staging dir.
+
+``upsert_many`` is the only merge path (``upsert_batch`` is a one-store
+call of it); ``rewrite_buckets`` stages caller-supplied contents and
+``purge_soft_deleted`` is a probe job plus ``rewrite_buckets``.
+
+Crash safety: the swap is atomic per bucket directory, not across buckets
+or stores; recovery relies on checkpoint replay + upsert idempotence
+(the reference's model: offsets persisted after writes,
+ConsumerMain.scala:128-151, duplicates absorbed by upsert). A leftover
+staging dir is overwritten by the next write. ``rebucket`` alone swaps the
+whole directory behind a commit marker (``_recover_rebucket`` heals it).
+
+On a lakehouse table format (Delta/Iceberg) this whole class collapses
+into ``MERGE INTO``; the public API is shaped so that swap is a drop-in.
 """
 
 from __future__ import annotations
@@ -289,57 +305,11 @@ class StateStore:
 
     # -- the merge ----------------------------------------------------------
     def upsert_batch(self, batch: DataFrame, replace_rows: bool = False) -> None:
-        """MERGE the (already folded, typed) batch into the store.
-
-        Reads only the buckets the batch touches, merges, writes the merged
-        buckets to a staging dir in ONE job, then swaps each touched bucket
-        directory into place — the same stage-and-rename protocol dynamic
-        partition overwrite uses internally, minus the extra materialization
-        pass a self-overwrite would force (we read the old files while
-        writing the staging copy, so no checkpoint is needed). Atomicity is
-        per partition, matching the reference's non-transactional writes;
-        recovery = checkpoint replay + upsert idempotence.
-        """
-        batch = batch.select([F.col(f.name) for f in self.schema.fields]).withColumn(
-            _BUCKET, self._bucket_col()
-        )
-        if not self.exists():
-            (
-                batch.repartition(_BUCKET)
-                .write.mode("overwrite")
-                .partitionBy(_BUCKET)
-                .parquet(self.path)
-            )
-            self._write_meta()  # pin the geometry at creation
-            return
-        # Cache the folded batch: it is read twice (affected-bucket scan
-        # + the merge itself) and folding is the expensive part.
-        batch = batch.persist()
-        affected = [r[0] for r in batch.select(_BUCKET).distinct().collect()]
-        state = self.read_buckets(affected)  # partition-pruned scan
-        merged = merge_upserts(
-            state, batch.drop(_BUCKET), self.key_cols, replace_rows=replace_rows
-        ).withColumn(_BUCKET, self._bucket_col())
-        # Repartition on the bucket so the staging write emits one file per
-        # touched bucket, then swap directories. On HDFS/object storage the
-        # os-level moves become FileSystem.rename calls.
-        staging = f"{self.path}.__staging__"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            merged.repartition(_BUCKET)
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(staging)
-        )
-        batch.unpersist()
-        for b in affected:
-            src = os.path.join(staging, f"{_BUCKET}={b}")
-            dst = os.path.join(self.path, f"{_BUCKET}={b}")
-            if os.path.isdir(src):
-                shutil.rmtree(dst, ignore_errors=True)
-                os.rename(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-
+        """MERGE the (already folded, typed) batch into the store — a
+        one-store ``upsert_many``: one job collects the touched buckets,
+        one job merges them against their state and stages the result,
+        then the staged buckets swap in (module docstring)."""
+        upsert_many(self.spark, [(self, batch)], replace_rows=replace_rows)
 
     def snapshot(self):
         """Context manager yielding a snapshot-isolated view of the store.
@@ -400,10 +370,11 @@ class StateStore:
         """Replace the given buckets' contents WHOLESALE with ``content``
         (the caller supplies exactly those buckets' intended rows — this
         is the delete-capable primitive upsert can't be: rows absent from
-        ``content`` are gone after the swap). Same staged-write +
-        per-bucket directory rename protocol as the merge path; a bucket
-        with no surviving rows is removed outright. Cost tracks the
-        rewritten buckets, never the table.
+        ``content`` are gone after the swap). Same stage-and-swap protocol
+        as the merge path, including its guard: a content row hashing
+        outside ``buckets`` raises instead of vanishing with the staging
+        dir. A bucket with no surviving rows is removed outright. Cost
+        tracks the rewritten buckets, never the table.
 
         Crash contract — atomic PER BUCKET, not across buckets: the final
         swap is a loop of rmtree+rename, so a crash mid-loop leaves some
@@ -419,41 +390,12 @@ class StateStore:
         this local-FS store deliberately keeps out of scope."""
         if not buckets:
             return
-        df = content.select(
-            [F.col(f.name) for f in self.schema.fields]
-        ).withColumn(_BUCKET, self._bucket_col())
-        staging = f"{self.path}.__rewrite_staging__"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            df.repartition(_BUCKET)
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(staging)
+        _stage_and_swap(
+            content.select([F.col(f.name) for f in self.schema.fields])
+            .withColumn(_BUCKET, self._bucket_col())
+            .withColumn(_TABLE, F.lit(0)),
+            [(self, buckets)],
         )
-        # Guard against silent loss: a content row hashing OUTSIDE the
-        # bucket list would be written to staging and then deleted with
-        # the staging dir. The staged directory listing is the cheap,
-        # job-free place to catch that caller bug as an error.
-        staged = {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(staging)
-            if e.startswith(f"{_BUCKET}=")
-        }
-        extra = staged - set(buckets)
-        if extra:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise ValueError(
-                f"rewrite_buckets: content contains rows for buckets "
-                f"{sorted(extra)} not in the rewrite list {sorted(buckets)} "
-                "— refusing to drop them"
-            )
-        for b in buckets:
-            src = os.path.join(staging, f"{_BUCKET}={b}")
-            dst = os.path.join(self.path, f"{_BUCKET}={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):
-                os.rename(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
 
     def rebucket(self, n_new: int) -> None:
         """Online bucket-count migration (VERDICT r10 #2 — the last 100 TB
@@ -531,9 +473,9 @@ class StateStore:
         reference semantics keep D rows with delete_state='1' forever).
 
         Only buckets CONTAINING purgeable rows are rewritten (one pruned
-        probe for the bucket set, then the same staged per-bucket swap the
-        merge uses); a bucket left empty is removed outright. Returns the
-        number of rows purged. At 100 TB the cost tracks the purgeable
+        probe for the bucket set, then ``rewrite_buckets``); a bucket left
+        empty is removed outright. Returns the number of rows purged.
+        At 100 TB the cost tracks the purgeable
         buckets, not the table — and because every bucket is one file,
         the rewrite is a bounded, restartable job (idempotent: re-running
         purges nothing the second time)."""
@@ -550,35 +492,66 @@ class StateStore:
         if not probe:
             return 0
         affected = [r[_BUCKET] for r in probe]
-        n_purged = sum(r["count"] for r in probe)
-        kept = (
-            self._read_with_bucket()
-            .filter(F.col(_BUCKET).isin(affected))
-            .filter(~purgeable)
-        )
-        staging = f"{self.path}.__purge_staging__"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            kept.repartition(_BUCKET)
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(staging)
-        )
-        for b in affected:
-            src = os.path.join(staging, f"{_BUCKET}={b}")
-            dst = os.path.join(self.path, f"{_BUCKET}={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):
-                os.rename(src, dst)
-            # else: the bucket held only purgeable rows — it stays gone
-        shutil.rmtree(staging, ignore_errors=True)
-        return int(n_purged)
+        self.rewrite_buckets(affected, self.read_buckets(affected).filter(~purgeable))
+        return int(sum(r["count"] for r in probe))
 
 
 _TABLE = "_table"
 
-# names safe to round-trip through a Spark partition directory unescaped
-_SAFE_NAME = re.compile(r"^[A-Za-z0-9_.\-]+$")
+
+def _stage_and_swap(
+    staged: DataFrame, targets: list[tuple[StateStore, list[int]]]
+) -> None:
+    """The one write protocol (module docstring). ``staged`` carries
+    ``_table`` (an index into ``targets``) and ``_bucket``; each target
+    store's listed buckets are replaced wholesale by its staged rows.
+
+    Staged under the first store's sibling ``{path}.__staging__``, so the
+    renames stay on that store's filesystem."""
+    staging = targets[0][0].path.rstrip("/") + ".__staging__"
+    (
+        staged.repartition(_TABLE, _BUCKET)
+        .write.mode("overwrite")
+        .partitionBy(_TABLE, _BUCKET)
+        .parquet(staging)
+    )
+    srcs = [os.path.join(staging, f"{_TABLE}={i}") for i in range(len(targets))]
+    # Guard against silent loss, checked for every store before anything
+    # moves: a staged bucket outside its list was never read as state, so
+    # swapping it in would drop that bucket's history. The staged
+    # directory listing is the cheap, job-free place to catch it.
+    for src, (store, buckets) in zip(srcs, targets):
+        staged_buckets = {
+            int(e.split("=", 1)[1])
+            for e in (os.listdir(src) if os.path.isdir(src) else [])
+            if e.startswith(f"{_BUCKET}=")
+        }
+        extra = staged_buckets - set(buckets)
+        if extra:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise ValueError(
+                f"{store.path}: staged rows for buckets {sorted(extra)} not "
+                f"in the bucket list {sorted(buckets)} — refusing to drop them"
+            )
+    for src, (store, buckets) in zip(srcs, targets):
+        if os.path.isdir(src):
+            os.makedirs(store.path, exist_ok=True)
+        for b in buckets:
+            src_b = os.path.join(src, f"{_BUCKET}={b}")
+            dst = os.path.join(store.path, f"{_BUCKET}={b}")
+            shutil.rmtree(dst, ignore_errors=True)
+            if os.path.isdir(src_b):
+                os.rename(src_b, dst)
+        if store._read_meta() is None:
+            store._write_meta()  # first write of this store: pin its geometry
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def _union_by_name(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
 
 
 def _schemas_compatible(stores: list[StateStore]) -> bool:
@@ -598,132 +571,84 @@ def upsert_many(
     spark: SparkSession,
     merges: list[tuple[StateStore, DataFrame]],
     affected: dict[str, list[int]] | None = None,
+    replace_rows: bool = False,
 ) -> None:
-    """MERGE several tables' batches in at most TWO Spark jobs total,
-    instead of two jobs per table.
+    """MERGE several stores' folded batches with ONE staged write — the
+    only merge path (``StateStore.upsert_batch`` is a one-store call).
 
-    The per-table ``upsert_batch`` costs one job to materialize the fold
-    (persist + affected-bucket collect) and one to write the merged
-    buckets; with T tables that is 2T jobs whose fixed scheduling cost
-    dominates a rate-capped micro-batch on a big cluster. Here:
+    1. Buckets to rewrite, per store: supplied by the caller
+       (``affected``, keyed by store basename — cdc.sync_batch derives it
+       from the pre-fold keys, overlapped with its stats job), or computed
+       by tagging each batch with its position in ``merges``, unioning,
+       persisting and collecting the distinct (position, bucket) pairs —
+       one job.
+    2. Each batch full-outer-merges (``merge_upserts``) against only those
+       buckets of its store; the merged outputs, tagged by position, are
+       unioned by name and handed to ``_stage_and_swap``. With
+       ``affected`` supplied the folds, merges and staged write fuse into
+       a single Spark job.
 
-    1. the affected (table → buckets) set is either supplied by the caller
-       (``affected`` — cdc.sync_batch derives it from the pre-fold keys,
-       one cheap distinct, overlapped with its stats job) or computed by
-       tagging + unioning + persisting all batches (one job);
-    2. each table's batch full-outer-merges against its bucket-pruned
-       state, the merged outputs are unioned by name, and ONE staged write
-       partitioned by (_table, _bucket) lands everything — when
-       ``affected`` was supplied, the folds, merges and write all fuse
-       into this single job; the bucket directories are then swapped per
-       table exactly like upsert_batch.
+    Guard: ``affected`` must cover every bucket each batch touches; a
+    store with no entry is declared to have no rows. A missed bucket's
+    state was never read, so its staged copy would hold batch-only rows:
+    the swap sees the staged bucket outside the list and raises
+    ``ValueError`` before any store changes (pinned by
+    test_upsert_many_refuses_missed_bucket).
 
-    CALLER CONTRACT for ``affected``: it must be a superset of the buckets
-    each batch actually touches (under-approximation would replace an
-    unread state bucket with batch-only rows and lose history — pinned by
-    test_upsert_many_affected_matches_bucket_col).
-
-    The staged files carry the union-by-name schema (absent columns are
-    null-RLE, ~free in parquet); reads stay correct because StateStore.read
-    prunes to each table's declared schema. If two tables declare the same
-    column name with different types the union is ill-typed, so we fall
-    back to per-table upserts (same semantics, more jobs).
+    ``replace_rows`` applies to every store (see ``merge_upserts``). The
+    staged files carry the union-by-name schema (absent columns are
+    null-RLE, ~free in parquet); reads prune to each store's declared
+    schema. Stores declaring one column name with different types cannot
+    share a union, so they take one call each (same semantics, more jobs).
     """
     merges = [(s, b) for s, b in merges if b is not None]
     if not merges:
         return
-    # Fall back to per-table upserts when the combined write can't be
-    # trusted: conflicting column types break the unionByName; a table
-    # name Spark would percent-escape in a partition path (space, ':',
-    # '%', …) would break the literal f"_table={name}" directory lookup in
-    # the swap loop — the batch would be written to staging and then
-    # silently discarded; and two stores from DIFFERENT parent dirs with
-    # the SAME basename would collide on the _table= tag and cross-merge
-    # each other's rows (VERDICT r4 #5 / ADVICE — unreachable from cdc.py's
-    # single warehouse dir, but the public function allows it).
-    basenames = [os.path.basename(s.path.rstrip("/")) for s, _ in merges]
-    if (
-        not _schemas_compatible([s for s, _ in merges])
-        or not all(_SAFE_NAME.match(n) for n in basenames)
-        or len(set(basenames)) != len(basenames)
-    ):
-        for store, batch in merges:
-            store.upsert_batch(batch)
+    stores = [s for s, _ in merges]
+    if not _schemas_compatible(stores):
+        for m in merges:
+            upsert_many(spark, [m], affected, replace_rows)
         return
-
-    union = None
+    batches = [b.select([F.col(f.name) for f in s.schema.fields]) for s, b in merges]
+    tagged = None
     if affected is None:
-        tagged = []
-        for store, batch in merges:
-            tagged.append(
-                batch.select([F.col(f.name) for f in store.schema.fields])
-                .withColumn(_BUCKET, store._bucket_col())
-                .withColumn(_TABLE, F.lit(os.path.basename(store.path)))
-            )
-        union = tagged[0]
-        for t in tagged[1:]:
-            union = union.unionByName(t, allowMissingColumns=True)
-        union = union.persist()
+        tagged = _union_by_name(
+            [
+                b.withColumn(_BUCKET, s._bucket_col()).withColumn(_TABLE, F.lit(i))
+                for i, (s, b) in enumerate(zip(stores, batches))
+            ]
+        ).persist()
     try:
-        if union is not None:
-            affected = {}
-            for r in union.select(_TABLE, _BUCKET).distinct().collect():
-                affected.setdefault(r[_TABLE], []).append(r[_BUCKET])
-
-        merged_parts = []
-        for store, batch in merges:
-            name = os.path.basename(store.path)
-            if not affected.get(name):
-                continue  # no rows for this table in the batch (S5 per table)
-            if union is not None:
-                part = union.filter(F.col(_TABLE) == name).select(
-                    [F.col(f.name) for f in store.schema.fields]
+        if tagged is None:
+            buckets = [
+                list(affected.get(os.path.basename(s.path.rstrip("/")), []))
+                for s in stores
+            ]
+        else:
+            buckets = [[] for _ in stores]
+            for r in tagged.select(_TABLE, _BUCKET).distinct().collect():
+                buckets[r[_TABLE]].append(r[_BUCKET])
+            if not any(buckets):
+                return  # every batch is empty
+            batches = [
+                tagged.filter(F.col(_TABLE) == i).select(b.columns)
+                for i, b in enumerate(batches)
+            ]
+        merged = []
+        for i, (store, batch, bs) in enumerate(zip(stores, batches, buckets)):
+            if bs and store.exists():
+                batch = merge_upserts(
+                    store.read_buckets(bs), batch, store.key_cols,
+                    replace_rows=replace_rows,
                 )
-            else:
-                part = batch.select(
-                    [F.col(f.name) for f in store.schema.fields]
-                )
-            if store.exists():
-                state = store.read_buckets(affected[name])
-                part = merge_upserts(state, part, store.key_cols)
-            merged_parts.append(
-                part.withColumn(_BUCKET, store._bucket_col()).withColumn(
-                    _TABLE, F.lit(name)
-                )
+            merged.append(
+                batch.withColumn(_BUCKET, store._bucket_col())
+                .withColumn(_TABLE, F.lit(i))
             )
-        if not merged_parts:
-            return
-        out = merged_parts[0]
-        for p in merged_parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-
-        staging_root = os.path.dirname(merges[0][0].path.rstrip("/"))
-        staging = os.path.join(staging_root, "__staging_many__")
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            out.repartition(F.col(_TABLE), F.col(_BUCKET))
-            .write.mode("overwrite")
-            .partitionBy(_TABLE, _BUCKET)
-            .parquet(staging)
-        )
+        _stage_and_swap(_union_by_name(merged), list(zip(stores, buckets)))
     finally:
-        if union is not None:
-            union.unpersist()
-    for store, _ in merges:
-        name = os.path.basename(store.path)
-        src_tab = os.path.join(staging, f"{_TABLE}={name}")
-        if not os.path.isdir(src_tab):
-            continue
-        os.makedirs(store.path, exist_ok=True)
-        for entry in os.listdir(src_tab):
-            if not entry.startswith(f"{_BUCKET}="):
-                continue
-            dst = os.path.join(store.path, entry)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(os.path.join(src_tab, entry), dst)
-        if store._read_meta() is None:
-            store._write_meta()  # first write of this table: pin geometry
-    shutil.rmtree(staging, ignore_errors=True)
+        if tagged is not None:
+            tagged.unpersist()
 
 
 def propagate_deletes(

@@ -15,13 +15,14 @@ Rules that keep value-hashes identical between engines:
 
 from __future__ import annotations
 
+from ..cdc import DEFAULT_FIXTURE as _FIXTURE
+
 # ---------------------------------------------------------------------------
-# CDC fold oracle: replays /root/repo/fixtures/ogg_changes.jsonl with the
+# CDC fold oracle: replays the cdc.DEFAULT_FIXTURE change log with the
 # same last-write-wins sort key the Spark fold uses (current_ts # zero-padded
 # arrival pos), via arg_max ... FILTER — semantically identical to Spark's
 # max-over-(order,value)-struct aggregation.
 # ---------------------------------------------------------------------------
-_FIXTURE = "/root/repo/fixtures/ogg_changes.jsonl"
 _NOW = "2024-06-01 00:00:00"
 
 _CDC_VALID = f"""

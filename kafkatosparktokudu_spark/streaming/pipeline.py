@@ -68,6 +68,36 @@ def file_source(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _start_foreach_batch(
+    stream: DataFrame,
+    body: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    query_name: str,
+    available_now: bool,
+    trigger_interval: str,
+) -> StreamingQuery:
+    """The wiring every ``start_*`` shares: run ``body`` on each non-empty
+    micro-batch (empty-batch guard, S5, ConsumerMain.scala:94) under a
+    named query with its checkpoint. ``available_now=True`` drains
+    everything currently in the source and stops; otherwise the trigger
+    fires every ``trigger_interval`` of processing time."""
+
+    def _run(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            body(batch_df, epoch_id)
+
+    writer = (
+        stream.writeStream.foreachBatch(_run)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName(query_name)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
+
+
 def start_cdc_sync(
     spark: SparkSession,
     source: DataFrame,
@@ -91,8 +121,6 @@ def start_cdc_sync(
 
     def _sync(batch_df: DataFrame, epoch_id: int) -> None:
         start = time.time()
-        if batch_df.isEmpty():  # empty-batch guard (S5, ConsumerMain.scala:94)
-            return
         seq = F.col("seq") if "seq" in batch_df.columns else None
         raw = batch_df.select("value") if seq is None else batch_df
         m = sync_batch(
@@ -111,16 +139,10 @@ def start_cdc_sync(
         if on_batch:
             on_batch(epoch_id, m)
 
-    writer = (
-        source.writeStream.foreachBatch(_sync)
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .queryName("cdc_sync")
+    return _start_foreach_batch(
+        source, _sync, cfg.checkpoint_dir,
+        "cdc_sync", available_now, cfg.trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=cfg.trigger_interval)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -373,8 +395,6 @@ def start_dedup_ingest(
     """
 
     def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from ..operators.dedup import incremental_neardup_ingest
 
         flags = incremental_neardup_ingest(
@@ -396,16 +416,10 @@ def start_dedup_ingest(
         )
         flags.write.mode("overwrite").parquet(f"{flags_dir}/epoch={epoch_id}")
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("dedup_ingest")
+    return _start_foreach_batch(
+        docs_stream, _ingest, checkpoint_dir,
+        "dedup_ingest", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def ingest_shards_epoch(
@@ -569,22 +583,14 @@ def start_ingest_shard_pipeline(
     (doc_id, text, n_chars)."""
 
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_shards_epoch(
             batch_df, epoch_id, store_dir, out_dir, threshold, n_shards, n_bands
         )
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("ingest_shards")
+    return _start_foreach_batch(
+        docs_stream, _epoch, checkpoint_dir,
+        "ingest_shards", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def hll_monitor_epoch(
@@ -657,20 +663,11 @@ def start_hll_monitor(
     associativity), pinned against sk04 by test."""
 
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         hll_monitor_epoch(batch_df, col, store_dir, p, epoch_id=epoch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("hll_monitor")
+    return _start_foreach_batch(
+        stream, _epoch, checkpoint_dir, "hll_monitor", available_now, trigger_interval
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def read_hll_estimate(spark: SparkSession, store_dir: str, p: int = 12) -> DataFrame:
@@ -769,22 +766,14 @@ def start_histogram_monitor(
     discipline), pinned against the batch twin by test."""
 
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         histogram_monitor_epoch(
             batch_df, col, store_dir, cents_per_bucket, epoch_id=epoch_id
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("histogram_monitor")
+    return _start_foreach_batch(
+        stream, _epoch, checkpoint_dir,
+        "histogram_monitor", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 # quantiles served by the monitor: label -> p/q (exact rational, so the
@@ -917,20 +906,12 @@ def start_state_enriched_stream(
     test_stream_static_enrichment_sees_dim_updates)."""
 
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         enrich_epoch(batch_df, epoch_id, store, out_dir, join_key)
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("state_enriched")
+    return _start_foreach_batch(
+        stream, _epoch, checkpoint_dir,
+        "state_enriched", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def read_shard_assignment(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -975,23 +956,15 @@ def start_scd2_sync(
     store = Scd2Store(spark, store_dir, cat[table])
 
     def _sync(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         seq = F.col("seq") if "seq" in batch_df.columns else None
         valid, _dead = split_valid(parse_ogg(batch_df, seq_col=seq))
         changes = normalize(valid).filter(F.col("tab_name") == table)
         store.apply_batch(changes, epoch=epoch_id)
 
-    writer = (
-        source.writeStream.foreachBatch(_sync)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(f"scd2_sync_{table}")
+    return _start_foreach_batch(
+        source, _sync, checkpoint_dir,
+        f"scd2_sync_{table}", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def start_quality_monitor(
@@ -1017,24 +990,16 @@ def start_quality_monitor(
     from ..operators.quality_checks import constraint_report
 
     def _check(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         tables = {table_name: batch_df, **(static_tables or {})}
         report = constraint_report(spark, tables, checks).withColumn(
             "epoch", F.lit(epoch_id).cast("long")
         )
         report.write.mode("overwrite").parquet(f"{report_dir}/epoch={epoch_id}")
 
-    writer = (
-        stream.writeStream.foreachBatch(_check)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("quality_monitor")
+    return _start_foreach_batch(
+        stream, _check, checkpoint_dir,
+        "quality_monitor", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def stream_topk_per_key(
@@ -1555,8 +1520,6 @@ def start_bm25_index_sync(
     )
 
     def _sync(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         docs = batch_df.select("doc_id", "text")
         try:
             _read_bm25_meta(spark, index_path)
@@ -1577,16 +1540,10 @@ def start_bm25_index_sync(
             return
         append_bm25_index(docs, index_path, epoch=int(epoch_id))
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(_sync)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("bm25_index_sync")
+    return _start_foreach_batch(
+        docs_stream, _sync, checkpoint_dir,
+        "bm25_index_sync", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def start_ivf_index_sync(
@@ -1636,8 +1593,6 @@ def start_ivf_index_sync(
     )
 
     def _sync(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         try:
             _read_ivf_meta(spark, index_path)
         except FileNotFoundError:
@@ -1652,13 +1607,7 @@ def start_ivf_index_sync(
             return
         upsert_ivf_index(batch_df, index_path, epoch=int(epoch_id))
 
-    writer = (
-        emb_stream.writeStream.foreachBatch(_sync)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("ivf_index_sync")
+    return _start_foreach_batch(
+        emb_stream, _sync, checkpoint_dir,
+        "ivf_index_sync", available_now, trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()

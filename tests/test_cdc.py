@@ -20,7 +20,7 @@ from kafkatosparktokudu_spark.cdc import apply_changes, read_fixture, sync_batch
 from kafkatosparktokudu_spark.catalog import default_catalog
 from kafkatosparktokudu_spark.operators.merge import StateStore, merge_upserts
 
-FIXTURE = Path("/root/repo/fixtures/ogg_changes.jsonl")
+FIXTURE = Path(__file__).resolve().parent.parent / "fixtures" / "ogg_changes.jsonl"
 NOW = "2024-06-01 00:00:00"
 
 
@@ -675,10 +675,11 @@ def test_incremental_rollup_null_sum_does_not_clobber(spark, tmp_path):
     assert got == {30: (2, 500.0)}
 
 
-def test_upsert_many_unsafe_table_name_falls_back(spark, tmp_path):
+def test_upsert_many_unsafe_table_name(spark, tmp_path):
     """A table name Spark would percent-escape in a partition path must
-    route through per-table upserts (the combined staged write's literal
-    directory lookup would silently drop the batch)."""
+    still merge: the combined staged write tags rows by their position in
+    the call, never by the name, so the staged directory lookup cannot
+    miss (and silently drop) the batch."""
     from pyspark.sql import types as T
 
     from kafkatosparktokudu_spark.operators.merge import upsert_many
@@ -699,8 +700,8 @@ def test_upsert_many_unsafe_table_name_falls_back(spark, tmp_path):
 def test_upsert_many_same_basename_distinct_dirs(spark, tmp_path):
     """Two stores from DIFFERENT parent dirs with the SAME basename must
     keep distinct state (VERDICT r4 #5): the combined staged write tags
-    rows by basename only, so such a pair falls back to per-table upserts
-    instead of cross-merging on the shared ``_table=`` tag."""
+    rows by position in the call, so a shared basename cannot cross-merge
+    them."""
     from pyspark.sql import types as T
 
     from kafkatosparktokudu_spark.operators.merge import upsert_many
@@ -731,6 +732,86 @@ def test_upsert_many_same_basename_distinct_dirs(spark, tmp_path):
     got2 = {r["id"]: r["v"] for r in s2.read().collect()}
     assert got1 == {"1": "a1", "2": "a2x"}
     assert got2 == {"1": "b1", "3": "b3"}
+
+
+def test_upsert_many_refuses_missed_bucket(spark, tmp_path):
+    """An ``affected`` set that omits a bucket the batch touches must raise
+    before any swap and leave the store unchanged: that bucket's state was
+    never read, so swapping in its staged copy would replace the bucket's
+    history with batch-only rows."""
+    import os
+
+    import pytest
+    from pyspark.sql import types as T
+
+    from kafkatosparktokudu_spark.operators.merge import upsert_many
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.StringType(), False),
+            T.StructField("v", T.StringType(), True),
+        ]
+    )
+    store = StateStore(spark, str(tmp_path / "emp"), ["id"], schema, 8)
+    store.upsert_batch(
+        spark.createDataFrame([(str(i), f"a{i}") for i in range(40)], schema)
+    )
+    before = sorted(tuple(r) for r in store.read().collect())
+    batch = spark.createDataFrame(
+        [(str(i), f"b{i}") for i in range(0, 40, 3)], schema
+    )
+    touched = sorted(
+        {r["b"] for r in batch.select(store._bucket_col().alias("b")).collect()}
+    )
+    assert len(touched) > 1
+    with pytest.raises(ValueError, match="refusing to drop"):
+        upsert_many(spark, [(store, batch)], affected={"emp": touched[1:]})
+    assert sorted(tuple(r) for r in store.read().collect()) == before
+    assert sorted(os.listdir(tmp_path)) == ["emp"]
+
+
+def test_store_writes_leave_no_staging_dir(spark, tmp_path):
+    """Every write path stages beside the store and removes the staging
+    dir after the swap: creating upsert, an ``affected`` superset (whose
+    untouched buckets keep their rows), rewrite_buckets and purge."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from kafkatosparktokudu_spark.operators.merge import upsert_many
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.StringType(), False),
+            T.StructField("v", T.StringType(), True),
+            T.StructField("delete_state", T.StringType(), True),
+            T.StructField("time_stamp", T.StringType(), True),
+        ]
+    )
+    store = StateStore(spark, str(tmp_path / "emp"), ["id"], schema, 4)
+    old = "2023-01-01 00:00:00"
+    store.upsert_batch(
+        spark.createDataFrame(
+            [(str(i), "a", "1" if i % 2 else "0", old) for i in range(20)], schema
+        )
+    )
+    assert sorted(os.listdir(tmp_path)) == ["emp"]
+    upsert_many(
+        spark,
+        [(store, spark.createDataFrame([("1", "b", "0", old)], schema))],
+        affected={"emp": list(range(4))},
+    )
+    assert sorted(os.listdir(tmp_path)) == ["emp"]
+    assert store.read().count() == 20
+    store.rewrite_buckets(list(range(4)), store.read())
+    assert sorted(os.listdir(tmp_path)) == ["emp"]
+    assert store.read().count() == 20
+    # odd ids are soft-deleted, except id 1, resurrected above
+    assert store.purge_soft_deleted("2024-01-01 00:00:00") == 9
+    assert sorted(os.listdir(tmp_path)) == ["emp"]
+    assert sorted(r["id"] for r in store.read().collect()) == sorted(
+        str(i) for i in range(20) if i % 2 == 0 or i == 1
+    )
 
 
 def test_minmax_rollup_moves_deletes_partials(spark, tmp_path):

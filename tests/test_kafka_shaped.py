@@ -18,7 +18,7 @@ from kafkatosparktokudu_spark.sources.kafka_shaped import (
 )
 from kafkatosparktokudu_spark.streaming.pipeline import start_cdc_sync
 
-FIXTURE = Path("/root/repo/fixtures/ogg_changes.jsonl")
+FIXTURE = Path(__file__).resolve().parent.parent / "fixtures" / "ogg_changes.jsonl"
 
 
 def _cfg(tmp_path: Path) -> PipelineConfig:

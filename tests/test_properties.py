@@ -178,10 +178,11 @@ def test_zorder_key_matches_python_interleave(spark, pairs):
 
 
 # -- combined multi-table upsert --------------------------------------------
-# upsert_many (one staged write for all tables) must be indistinguishable
-# from sequential per-table upsert_batch across any batch sequence —
-# including empty per-table batches, partial updates (null columns keep
-# prior values) and keys colliding into the same bucket.
+# upsert_many with every table in one call and upsert_batch with one table
+# per call must both equal a pure-Python model of the merge (per key and
+# column, a non-null new value replaces the old one) across any batch
+# sequence — including empty per-table batches, partial updates (null
+# columns keep prior values) and keys colliding into the same bucket.
 _urow = st.fixed_dictionaries(
     {
         "tab": st.sampled_from(["ta", "tb"]),
@@ -218,6 +219,9 @@ def test_upsert_many_equals_sequential(spark, batches):
             T.StructField("v", T.StringType(), True),
         ]
     )
+    cols = {"ta": ("v", "w"), "tb": ("v",)}
+    # the model: table -> id -> column -> value
+    model: dict[str, dict[str, dict[str, str | None]]] = {"ta": {}, "tb": {}}
     wh_many = tempfile.mkdtemp(prefix="prop_many_")
     wh_seq = tempfile.mkdtemp(prefix="prop_seq_")
     try:
@@ -227,8 +231,12 @@ def test_upsert_many_equals_sequential(spark, batches):
             for r in batch:
                 folded[(r["tab"], r["id"])] = r
             per_tab: dict[str, list] = {"ta": [], "tb": []}
-            for (tab, _id), r in sorted(folded.items()):
+            for (tab, rid), r in sorted(folded.items()):
                 per_tab[tab].append(r)
+                old = model[tab].setdefault(str(rid), dict.fromkeys(cols[tab]))
+                for c in cols[tab]:
+                    if r[c] is not None:
+                        old[c] = r[c]
             for wh, combined in ((wh_many, True), (wh_seq, False)):
                 merges = []
                 for tab, schema in (("ta", schema_a), ("tb", schema_b)):
@@ -256,6 +264,10 @@ def test_upsert_many_equals_sequential(spark, batches):
             rows_a = sorted(tuple(r) for r in a.collect())
             rows_b = sorted(tuple(r) for r in b.collect())
             assert rows_a == rows_b, (tab, rows_a, rows_b)
+            want = sorted(
+                (k, *(row[c] for c in cols[tab])) for k, row in model[tab].items()
+            )
+            assert rows_a == want, (tab, rows_a, want)
     finally:
         shutil.rmtree(wh_many, ignore_errors=True)
         shutil.rmtree(wh_seq, ignore_errors=True)

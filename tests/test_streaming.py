@@ -26,7 +26,7 @@ from kafkatosparktokudu_spark.streaming.replay import (
     read_checkpoint_offsets,
 )
 
-FIXTURE = Path("/root/repo/fixtures/ogg_changes.jsonl")
+FIXTURE = Path(__file__).resolve().parent.parent / "fixtures" / "ogg_changes.jsonl"
 
 
 def _cfg(tmp_path: Path) -> PipelineConfig:
