@@ -39,8 +39,10 @@ from .operators.ogg import (
     normalize,
     parse_ogg,
     split_valid,
+    typed_key,
     with_time_stamp,
 )
+from .operators.rollup import post_merge_apply, pre_merge_delta, rollup_schema
 
 # the repository's sample OGG change log, next to the package
 DEFAULT_FIXTURE = os.path.join(
@@ -71,12 +73,24 @@ def apply_changes(
     seq = F.col("seq") if "seq" in raw.columns else None
     parsed = parse_ogg(raw, seq_col=seq)
     valid, _dead = split_valid(parsed)
-    norm = normalize(valid)
-    out: dict[str, DataFrame] = {}
-    for name, target in catalog.items():
-        changes = norm.filter(F.col("tab_name") == name)
-        folded = fold_table_changes(changes, target)
-        out[name] = with_time_stamp(cast_payload(folded, target), now_str)
+    return _table_batches(normalize(valid), catalog, now_str)
+
+
+def _table_batches(
+    norm: DataFrame, catalog: dict[str, TargetTable], now_str: str | None
+) -> dict[str, DataFrame]:
+    """The normalized envelope fanned out to one folded, typed, stamped
+    batch per catalog table, plus the ``pub_event`` batch."""
+    out = {
+        name: with_time_stamp(
+            cast_payload(
+                fold_table_changes(norm.filter(F.col("tab_name") == name), target),
+                target,
+            ),
+            now_str,
+        )
+        for name, target in catalog.items()
+    }
     out[PUB_EVENT] = derive_pub_event(norm, now_str)
     return out
 
@@ -84,35 +98,27 @@ def apply_changes(
 def affected_buckets(
     norm: DataFrame,
     catalog: dict[str, TargetTable],
-    n_buckets: int,
+    stores: dict[str, StateStore],
 ) -> dict[str, list[int]]:
-    """Affected (table → bucket) sets from the PRE-fold keys: the fold
-    groups by the key, so the folded batch's bucket set equals the bucket
-    set of the distinct raw keys — one cheap distinct over the cached
-    envelope instead of materializing every fold twice. The bucket
-    expression must mirror StateStore._bucket_col exactly (cast to the
-    catalog key type first, so e.g. an int key '007' and '7' land in the
-    same bucket the typed batch hashes to) — pinned by
-    test_affected_buckets_match_store; an under-approximation here would
-    make upsert_many replace an unread state bucket and lose history.
-    """
-    parts = []
-    for name, target in catalog.items():
-        ktype = next(
-            f.dataType for f in target.payload.fields if f.name == target.key
-        )
-        key = F.concat_ws("\x1f", F.col("id").cast(ktype))
-        parts.append(
-            norm.filter(F.col("tab_name") == name).select(
-                F.lit(name).alias("t"),
-                F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int").alias("b"),
-            )
-        )
-    ev_key = F.concat_ws("\x1f", F.col("id"), F.col("tab_name"))
+    """Affected (table → bucket) sets from the PRE-fold keys, hashed by
+    each table's own store: its rows are projected to the store's key
+    columns and bucketed with ``StateStore._bucket_col`` at the geometry
+    the store adopted. A target table's key is ``typed_key``, the very
+    expression the fold groups on, so the distinct raw keys bucket exactly
+    like the folded batch — one cheap distinct over the cached envelope
+    instead of materializing every fold twice (pinned by
+    test_affected_buckets_match_store). ``stores`` holds every catalog
+    table plus ``pub_event``."""
+    parts = [
+        norm.filter(F.col("tab_name") == name)
+        .select(typed_key(target).alias(target.key))
+        .select(F.lit(name).alias("t"), stores[name]._bucket_col().alias("b"))
+        for name, target in catalog.items()
+    ]
     parts.append(
-        norm.select(
+        norm.select(F.col("id"), F.col("tab_name").alias("name")).select(
             F.lit(PUB_EVENT).alias("t"),
-            F.pmod(F.xxhash64(ev_key), F.lit(n_buckets)).cast("int").alias("b"),
+            stores[PUB_EVENT]._bucket_col().alias("b"),
         )
     )
     df = parts[0]
@@ -141,8 +147,6 @@ class RollupSpec:
             self.group_type = T.IntegerType()
 
     def store(self, spark: SparkSession, warehouse_dir: str, n_buckets: int):
-        from .operators.rollup import rollup_schema
-
         return StateStore(
             spark,
             f"{warehouse_dir}/{self.table}__rollup_{self.group_col}",
@@ -188,16 +192,11 @@ def sync_batch(
     dual write (KuduManager.scala:68 before :114) — documented, no
     cross-table transaction.
 
-    ``rollups``: aggregate views maintained in the same epoch by deltas
-    (operators/rollup.py). The pre/post snapshots read only the batch's
-    AFFECTED BUCKETS — a superset of the touched keys, which is exact
-    because untouched rows appear identically on both sides of the delta
-    and cancel (DECIMAL arithmetic, so the cancellation is bit-exact).
-    With ``epoch_id`` (the foreachBatch batch id, wired by the streaming
-    wrapper) the views are exactly-once under checkpoint replay: each
-    delta is computed pre-merge and staged durably (write-ahead pending,
-    operators/rollup.py module docstring), then applied with a per-group
-    epoch guard.
+    ``rollups``: aggregate views maintained in the same epoch by deltas,
+    through operators/rollup.py's one protocol (``pre_merge_delta`` over
+    the batch's affected buckets, the merge, ``post_merge_apply``). With
+    ``epoch_id`` (the foreachBatch batch id, wired by the streaming
+    wrapper) the views are exactly-once under checkpoint replay.
     """
     catalog = catalog or default_catalog()
     for spec in rollups or []:
@@ -254,127 +253,60 @@ def sync_batch(
                 ).write.mode("append").parquet(dead_letter_dir)
             return rows
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            stats_fut = pool.submit(_stats)
-            affected_fut = pool.submit(
-                affected_buckets, norm, catalog, n_buckets
-            )
-            merges: list[tuple[StateStore, DataFrame]] = []
-            for name, target in catalog.items():
-                changes = norm.filter(F.col("tab_name") == name)
-                folded = fold_table_changes(changes, target)
-                typed = with_time_stamp(cast_payload(folded, target), now_str)
-                store = StateStore(
-                    spark,
-                    f"{warehouse_dir}/{name}",
-                    [target.key],
-                    target.full_schema,
-                    n_buckets,
-                )
-                merges.append((store, typed))
-            ev_store = StateStore(
+        stores = {
+            name: StateStore(
                 spark,
-                f"{warehouse_dir}/{PUB_EVENT}",
-                ["id", "name"],
-                PUB_EVENT_SCHEMA,
+                f"{warehouse_dir}/{name}",
+                [target.key],
+                target.full_schema,
                 n_buckets,
             )
-            merges.append((ev_store, derive_pub_event(norm, now_str)))
-            # All tables' MERGEs land in ONE combined staged write: with
-            # the affected sets precomputed above, upsert_many fuses every
-            # fold, merge join and the partitioned write into a single
-            # Spark job (vs two jobs PER table) — micro-batch latency is
-            # job-count-bound at a rate-capped batch size. The reference
-            # interleaves tables per record; Kudu gives no cross-table
-            # transaction either, so per-table swap atomicity is unchanged.
-            # upsert_many falls back to per-table writes if the catalog has
-            # conflicting column types across tables.
+            for name, target in catalog.items()
+        }
+        stores[PUB_EVENT] = StateStore(
+            spark,
+            f"{warehouse_dir}/{PUB_EVENT}",
+            ["id", "name"],
+            PUB_EVENT_SCHEMA,
+            n_buckets,
+        )
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            stats_fut = pool.submit(_stats)
+            affected_fut = pool.submit(affected_buckets, norm, catalog, stores)
+            batches = _table_batches(norm, catalog, now_str)
             affected = affected_fut.result()
-            # (spec, base store, view store, pre-merge snapshot | None when
-            # the epoch's write-ahead delta is already on disk)
-            pre_snaps: list[
-                tuple[RollupSpec, StateStore, StateStore, DataFrame | None]
-            ] = []
-            if rollups:
-                from .operators.rollup import (
-                    read_pending,
-                    rollup_delta,
-                    write_pending,
+            views = [
+                (spec, spec.store(spark, warehouse_dir, n_buckets))
+                for spec in rollups or []
+            ]
+            deltas = [
+                pre_merge_delta(
+                    spark,
+                    stores[spec.table],
+                    batches[spec.table],
+                    affected.get(spec.table, []),
+                    view,
+                    spec.group_col,
+                    spec.sum_col,
+                    epoch_id,
                 )
-
-                by_table = {
-                    s.path.rsplit("/", 1)[-1]: (s, b) for s, b in merges
-                }
-                for spec in rollups:
-                    tstore, typed = by_table[spec.table]
-                    vstore = spec.store(spark, warehouse_dir, n_buckets)
-                    gf = next(
-                        f for f in vstore.schema.fields
-                        if f.name == spec.group_col
-                    )
-                    if epoch_id is not None and read_pending(
-                        spark, vstore, epoch_id, gf
-                    ) is not None:
-                        # replayed epoch: the durable pre-merge delta
-                        # stands in (recomputing now would see pre == post)
-                        pre_snaps.append((spec, tstore, vstore, None))
-                        continue
-                    if not affected.get(spec.table):
-                        continue  # no rows for this table this batch (S5)
-                    pre = tstore.read_buckets(
-                        affected.get(spec.table, [])
-                    ).localCheckpoint()  # pin BEFORE the in-place rewrite
-                    if epoch_id is not None:
-                        # write-ahead: post rows are derivable without the
-                        # base write, so the delta survives a crash between
-                        # base merge and rollup apply
-                        from .operators.merge import merge_upserts
-
-                        post_est = merge_upserts(pre, typed, tstore.key_cols)
-                        write_pending(
-                            rollup_delta(
-                                pre, post_est, spec.group_col, spec.sum_col
-                            ),
-                            vstore,
-                            epoch_id,
-                        )
-                    pre_snaps.append((spec, tstore, vstore, pre))
-            # a table without rows this batch has no affected entry; left
-            # in, upsert_many would run its (empty) fold to prove it
+                for spec, view in views
+            ]
+            # All tables' MERGEs land in ONE combined staged write: with
+            # the affected sets precomputed, upsert_many fuses every fold,
+            # merge join and the partitioned write into a single Spark job.
+            # The reference interleaves tables per record; Kudu gives no
+            # cross-table transaction either, so per-table swap atomicity
+            # is unchanged. A table without rows this batch has no affected
+            # entry; left in, upsert_many would run its (empty) fold to
+            # prove it.
             upsert_many(
                 spark,
-                [(s, b) for s, b in merges if affected.get(s.path.rsplit("/", 1)[-1])],
+                [(stores[n], b) for n, b in batches.items() if affected.get(n)],
                 affected=affected,
             )
-            if rollups:
-                from .operators.rollup import (
-                    clear_pending,
-                    maintain_rollup,
-                    read_pending,
-                    rollup_delta,
-                )
-
-                for spec, tstore, vstore, pre in pre_snaps:
-                    gf = next(
-                        f for f in vstore.schema.fields
-                        if f.name == spec.group_col
-                    )
-                    if epoch_id is not None:
-                        delta = read_pending(spark, vstore, epoch_id, gf)
-                        if delta is None:
-                            continue  # no rows for this table this batch
-                        maintain_rollup(
-                            spark, vstore, delta, spec.group_col,
-                            epoch=epoch_id,
-                        )
-                        clear_pending(vstore, epoch_id)
-                        continue
-                    buckets = affected.get(spec.table, [])
-                    if not buckets:
-                        continue  # no rows for this table this batch
-                    post = tstore.read_buckets(buckets)
-                    delta = rollup_delta(pre, post, spec.group_col, spec.sum_col)
-                    maintain_rollup(spark, vstore, delta, spec.group_col)
+            for (spec, view), delta in zip(views, deltas):
+                post_merge_apply(spark, view, delta, spec.group_col, epoch_id)
             stats = stats_fut.result()
         total = sum(r["count"] for r in stats)
         dead_n = sum(r["count"] for r in stats if not r["ok"])

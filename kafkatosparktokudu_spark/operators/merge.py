@@ -172,6 +172,14 @@ class StateStore:
         n = self.n_buckets if n_buckets is None else n_buckets
         return F.pmod(F.xxhash64(key), F.lit(n)).cast("int")
 
+    def buckets_of(self, df: DataFrame) -> list[int]:
+        """The buckets ``df``'s rows hash into at this store's geometry —
+        one distinct-collect job. ``df`` carries the bucket columns, typed
+        as the store declares them."""
+        return [
+            r[0] for r in df.select(self._bucket_col()).distinct().collect()
+        ]
+
     def _read_meta(self) -> dict | None:
         import json
 
@@ -277,8 +285,6 @@ class StateStore:
 
         ``keys``: list of key tuples (or scalars for single-column keys),
         in the key columns' declared types."""
-        import pyspark.sql.functions as _F
-
         if not self.exists():
             return self.spark.createDataFrame([], self.schema)
         norm_keys = [
@@ -295,12 +301,8 @@ class StateStore:
         from ..functions.localframe import local_frame
 
         kdf = local_frame(self.spark, norm_keys, key_schema)
-        buckets = [
-            r["b"]
-            for r in kdf.select(self._bucket_col().alias("b")).distinct().collect()
-        ]
-        return self.read_buckets(buckets).join(
-            _F.broadcast(kdf), self.key_cols, "left_semi"
+        return self.read_buckets(self.buckets_of(kdf)).join(
+            F.broadcast(kdf), self.key_cols, "left_semi"
         )
 
     # -- the merge ----------------------------------------------------------
@@ -577,8 +579,9 @@ def upsert_many(
     only merge path (``StateStore.upsert_batch`` is a one-store call).
 
     1. Buckets to rewrite, per store: supplied by the caller
-       (``affected``, keyed by store basename — cdc.sync_batch derives it
-       from the pre-fold keys, overlapped with its stats job), or computed
+       (``affected``, keyed by store basename — cdc.sync_batch hashes
+       the pre-fold keys with each store's ``_bucket_col``, overlapped
+       with its stats job), or computed
        by tagging each batch with its position in ``merges``, unioning,
        persisting and collecting the distinct (position, bucket) pairs —
        one job.

@@ -116,6 +116,15 @@ def _last_nonnull(value: Column, order: Column) -> Column:
     return F.max_by(value, F.when(value.isNotNull(), order))
 
 
+def typed_key(target: TargetTable) -> Column:
+    """The normalized record's raw string ``id`` cast to the catalog's key
+    type — the key the fold groups on, so an int-keyed table folds '007'
+    and '7' into ONE row for key 7, and the key cdc.affected_buckets
+    hashes, so its bucket set is the folded batch's."""
+    ktype = next(f.dataType for f in target.payload.fields if f.name == target.key)
+    return F.col("id").cast(ktype)
+
+
 def fold_table_changes(df: DataFrame, target: TargetTable) -> DataFrame:
     """Fold one table's change records to one row per key — the set-oriented
     equivalent of replaying the reference's per-record upserts in order:
@@ -128,7 +137,8 @@ def fold_table_changes(df: DataFrame, target: TargetTable) -> DataFrame:
     - current_ts := max (used for pub_event)
 
     Input: normalized changes already filtered to ``target.name``.
-    Output: one row per id with STRING payload columns (cast separately).
+    Output: one row per catalog-typed ``id`` (``typed_key``) with STRING
+    payload columns (cast separately).
     """
     order = _sort_key()
     aggs: list[Column] = []
@@ -141,7 +151,7 @@ def fold_table_changes(df: DataFrame, target: TargetTable) -> DataFrame:
     aggs.append(F.when(last_op == "D", F.lit("1")).otherwise(F.lit("0")).alias(DELETE_STATE))
     aggs.append(F.max("current_ts").alias("current_ts"))
     aggs.append(F.max("current_ts_norm").alias("current_ts_norm"))
-    return df.groupBy(F.col("id")).agg(*aggs)
+    return df.groupBy(typed_key(target).alias("id")).agg(*aggs)
 
 
 def cast_payload(df: DataFrame, target: TargetTable) -> DataFrame:
@@ -152,8 +162,8 @@ def cast_payload(df: DataFrame, target: TargetTable) -> DataFrame:
     behavior and fixes the documented lossy-cast bug for INT64/timestamps."""
     cols: list[Column] = []
     for f in target.payload.fields:
-        if f.name == target.key:
-            cols.append(F.col("id").cast(f.dataType).alias(f.name))
+        if f.name == target.key:  # typed by the fold already
+            cols.append(F.col("id").alias(f.name))
         else:
             cols.append(F.col(f.name).try_cast(f.dataType).alias(f.name))
     cols.append(F.col(DELETE_STATE))

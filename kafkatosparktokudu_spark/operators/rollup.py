@@ -25,31 +25,40 @@ aggregation agree bit-for-bit (float addition is not associative; decimal
 addition is) — the ``cdc_dept_rollup`` query hash-checks exactly that
 equivalence against a from-scratch DuckDB fold.
 
-CRASH SAFETY / EXACTLY-ONCE (round 5; closes VERDICT r4 #2): when the
-caller supplies an ``epoch`` id (Structured Streaming's ``foreachBatch``
-batch id), maintenance is replay-idempotent end-to-end via two mechanisms:
+ONE PROTOCOL, two steps around the base merge, shared by
+``cdc.sync_batch`` and ``sync_with_rollup``:
 
-1. **Write-ahead pending delta.** The delta is computed BEFORE the base
-   merge (post rows are derivable as ``merge_upserts(pre, batch)`` without
-   touching disk) and persisted durably under
-   ``{view}__pending/epoch={N}`` with an atomic directory rename. A crash
-   after the base merge no longer loses the contribution: the replayed
-   epoch finds the stored delta (recomputing would yield zero, since the
-   base rows were already merged) and applies it.
-2. **Per-group epoch stamp.** Each view row carries ``last_epoch``; an
-   apply skips any group whose stored epoch is already >= the incoming
-   one. Because the StateStore swap is atomic per BUCKET and the epoch
-   check is per GROUP (a group lives in exactly one bucket), a crash
-   mid-apply replays cleanly: already-swapped buckets are skipped, the
-   rest get the delta — no double counting, no loss.
+1. ``pre_merge_delta`` — before the merge, pin ``pre`` (the state rows of
+   the batch's buckets) and derive the delta with the one formula
+   ``rollup_delta(pre, merge_upserts(pre, batch))``: the post-merge rows
+   are computable without touching disk. Whole buckets are exact, because
+   a row the batch does not touch appears identically in ``pre`` and
+   ``post`` and cancels (DECIMAL, so bit-exact).
+2. ``post_merge_apply`` — after the merge, ``maintain_rollup`` the delta,
+   then ``clear_pending``.
 
-With both, the view is exactly-once under checkpoint replay on plain
-parquet — no transactional sink needed. Callers that pass ``epoch=None``
-(ad-hoc batch backfills) get the cheaper at-most-once legacy path and own
-re-derivation on failure (one groupBy over the base table).
+With an ``epoch`` (Structured Streaming's ``foreachBatch`` batch id) the
+view is exactly-once under checkpoint replay:
 
-Scale shape: contributions are two hash aggs over the batch's keyed rows
-(already in memory from the merge's own read), the delta is group-keyed
+- **Write-ahead pending delta.** Step 1 persists the delta under
+  ``{view}__pending/epoch={N}`` with an atomic directory rename, and a
+  replayed epoch reuses the stored delta instead of recomputing it (after
+  a crash past the base merge, ``pre`` would already hold the merged rows
+  and the recomputed delta would be zero).
+- **Per-group epoch stamp.** Each view row carries ``last_epoch``; an
+  apply skips any group whose stored epoch is already >= the incoming
+  one. Because the StateStore swap is atomic per BUCKET and the epoch
+  check is per GROUP (a group lives in exactly one bucket), a crash
+  mid-apply replays cleanly: already-swapped buckets are skipped, the
+  rest get the delta — no double counting, no loss.
+
+``epoch=None`` (ad-hoc batch backfills) runs the same order and formula
+without the pending write and without the guard: at-most-once on a crash
+between the two writes, and the caller owns re-derivation (one groupBy
+over the base table).
+
+Scale shape: contributions are two hash aggs over the batch's buckets
+(pinned once, before the merge), the delta is group-keyed
 (tiny — its durable write is one small parquet file), and the rollup
 update reads/rewrites only the delta's groups' buckets (partition-pruned).
 """
@@ -64,7 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import DELETE_STATE
-from .merge import StateStore, merge_upserts
+from .merge import StateStore, merge_upserts, upsert_many
 
 # Exact accumulation type for the maintained sum (DECIMAL addition is
 # associative, so incremental == from-scratch regardless of batch split).
@@ -114,9 +123,9 @@ def _contrib(rows: DataFrame, group_col: str, sum_col: str, sign: int) -> DataFr
 def rollup_delta(
     pre: DataFrame, post: DataFrame, group_col: str, sum_col: str
 ) -> DataFrame:
-    """Per-group (d_n, d_sum) between the batch keys' pre- and post-merge
-    state rows. ``pre``/``post`` must contain exactly the rows of the
-    batch's keys (the merge path already materializes both)."""
+    """Per-group (d_n, d_sum) between the pre- and post-merge state rows
+    of the batch's keys. Extra rows are harmless when they appear
+    identically on both sides (they cancel), so whole buckets will do."""
     d = _contrib(post, group_col, sum_col, +1).unionByName(
         _contrib(pre, group_col, sum_col, -1)
     )
@@ -194,8 +203,8 @@ def maintain_rollup(
     """Apply a delta to the maintained view: rollup[group] += delta.
 
     Only the delta's groups' BUCKETS are read and rewritten (the delta is
-    group-keyed and tiny, so collecting its bucket set is one small job;
-    untouched groups never move). With ``epoch`` set, groups already
+    group-keyed and tiny, so ``buckets_of`` is one small job; untouched
+    groups never move). With ``epoch`` set, groups already
     stamped at >= epoch keep their stored values — the per-group half of
     the exactly-once protocol described in the module docstring. Zero-alive
     groups keep their row (n_alive=0) as an audit trail — readers filter
@@ -203,13 +212,7 @@ def maintain_rollup(
     """
     delta = delta.persist()
     try:
-        buckets = [
-            r["b"]
-            for r in delta.select(rollup._bucket_col().alias("b"))
-            .distinct()
-            .collect()
-        ]
-        cur = rollup.read_buckets(buckets).select(
+        cur = rollup.read_buckets(rollup.buckets_of(delta)).select(
             F.col(group_col),
             F.col("n_alive").alias("_cur_n"),
             F.col("sum_dec").alias("_cur_sum"),
@@ -248,6 +251,58 @@ def maintain_rollup(
         delta.unpersist()
 
 
+def pre_merge_delta(
+    spark: SparkSession,
+    state: StateStore,
+    batch: DataFrame,
+    buckets: list[int],
+    rollup: StateStore,
+    group_col: str,
+    sum_col: str,
+    epoch: int | None = None,
+) -> DataFrame | None:
+    """Step 1 of the protocol (module docstring), run BEFORE ``batch`` is
+    merged into ``state``: the view's delta for the batch, or None when
+    the batch has no rows (``buckets``, its buckets of ``state``, is
+    empty) and no pending delta is stored. With ``epoch`` a stored
+    pending delta is reused, and a new one is written ahead and returned
+    as read back from disk."""
+    group_field = next(f for f in rollup.schema.fields if f.name == group_col)
+    if epoch is not None:
+        stored = read_pending(spark, rollup, epoch, group_field)
+        if stored is not None:
+            return stored
+    if not buckets:
+        return None
+    # localCheckpoint PINS the pre-merge rows: the merge rewrites the
+    # buckets in place, so a lazy `pre` would re-read the post-merge data
+    # when the delta finally evaluates.
+    pre = state.read_buckets(buckets).localCheckpoint()
+    delta = rollup_delta(
+        pre, merge_upserts(pre, batch, state.key_cols), group_col, sum_col
+    )
+    if epoch is None:
+        return delta
+    write_pending(delta, rollup, epoch)
+    return read_pending(spark, rollup, epoch, group_field)
+
+
+def post_merge_apply(
+    spark: SparkSession,
+    rollup: StateStore,
+    delta: DataFrame | None,
+    group_col: str,
+    epoch: int | None = None,
+) -> None:
+    """Step 2 of the protocol, run AFTER the base merge: apply
+    ``pre_merge_delta``'s result, then drop the epoch's pending delta."""
+    if delta is None:
+        return
+    maintain_rollup(spark, rollup, delta, group_col, epoch=epoch)
+    if epoch is not None:
+        clear_pending(rollup, epoch)
+
+
 def sync_with_rollup(
     spark: SparkSession,
     state: StateStore,
@@ -258,46 +313,19 @@ def sync_with_rollup(
     epoch: int | None = None,
 ) -> None:
     """One micro-batch: MERGE the (folded, typed) batch into ``state`` and
-    maintain the rollup view in the same pass.
-
-    With ``epoch`` (the foreachBatch batch id) the view is exactly-once
-    under checkpoint replay: the delta is computed from the PRE-merge rows
-    plus the batch (``merge_upserts`` gives the post rows without writing)
-    and staged durably before the base merge, then applied with the
-    per-group epoch guard. Without it, the cheaper legacy order (merge,
-    re-read, apply) is used — at-most-once on a crash between the two
-    writes."""
-    group_field = next(f for f in rollup.schema.fields if f.name == group_col)
-    if epoch is not None:
-        stored = read_pending(spark, rollup, epoch, group_field)
-        if stored is not None:
-            # Replay after a crash that postdates the pending write: the
-            # base merge below is an idempotent re-merge, and the STORED
-            # delta (computed against the true pre-merge state on the
-            # first attempt) replaces the now-zero recomputation.
-            state.upsert_batch(typed_batch)
-            maintain_rollup(spark, rollup, stored, group_col, epoch=epoch)
-            clear_pending(rollup, epoch)
-            return
-
-    keys = typed_batch.select(state.key_cols).distinct()
-    # localCheckpoint PINS the pre-merge rows: the merge below rewrites the
-    # state files in place, so a lazy `pre` would silently re-read the
-    # post-merge data when the delta finally evaluates.
-    pre = state.read().join(keys, state.key_cols).localCheckpoint()
-    if epoch is not None:
-        post_est = merge_upserts(pre, typed_batch, state.key_cols)
-        delta = rollup_delta(pre, post_est, group_col, sum_col)
-        write_pending(delta, rollup, epoch)
-        state.upsert_batch(typed_batch)
-        stored = read_pending(spark, rollup, epoch, group_field)
-        maintain_rollup(spark, rollup, stored, group_col, epoch=epoch)
-        clear_pending(rollup, epoch)
-        return
-    state.upsert_batch(typed_batch)
-    post = state.read().join(keys, state.key_cols)
-    delta = rollup_delta(pre, post, group_col, sum_col)
-    maintain_rollup(spark, rollup, delta, group_col)
+    maintain the rollup view around it with the module's one protocol —
+    exactly-once under checkpoint replay with ``epoch`` (the foreachBatch
+    batch id), at-most-once without."""
+    buckets = state.buckets_of(typed_batch)
+    delta = pre_merge_delta(
+        spark, state, typed_batch, buckets, rollup, group_col, sum_col, epoch
+    )
+    upsert_many(
+        spark,
+        [(state, typed_batch)],
+        affected={os.path.basename(state.path.rstrip("/")): buckets},
+    )
+    post_merge_apply(spark, rollup, delta, group_col, epoch)
 
 
 # -- non-invertible aggregates (min/max): re-aggregate touched groups -------

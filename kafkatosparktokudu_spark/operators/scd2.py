@@ -58,7 +58,7 @@ from pyspark.sql import types as T
 
 from ..catalog import DELETE_STATE, TargetTable
 from .merge import StateStore
-from .ogg import history_table_changes
+from .ogg import history_table_changes, typed_key
 
 _RAW_SCHEMA = T.StructType(
     [
@@ -127,12 +127,7 @@ class Scd2Store:
         ).persist()
         try:
             keys = raw_rows.select("id").distinct()
-            buckets = [
-                r["b"]
-                for r in keys.select(self.raw._bucket_col().alias("b"))
-                .distinct()
-                .collect()
-            ]
+            buckets = self.raw.buckets_of(keys)
             if not buckets:
                 return
             self.raw.upsert_batch(raw_rows)
@@ -294,22 +289,10 @@ class Scd2Store:
             touched_keys = (
                 compacted.filter("__touched").select("id").distinct()
             )
-            key_type = next(
-                f.dataType
-                for f in self.target.payload.fields
-                if f.name == self.target.key
-            )
             hist_keys = touched_keys.select(
-                F.col("id").cast(key_type).alias(self.target.key)
+                typed_key(self.target).alias(self.target.key)
             )
-            hist_buckets = [
-                r["b"]
-                for r in hist_keys.select(
-                    self.hist._bucket_col().alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
+            hist_buckets = self.hist.buckets_of(hist_keys)
             new_hist = history_table_changes(
                 compacted.filter("__touched").drop("__touched"), self.target
             )

@@ -877,13 +877,7 @@ def enrich_epoch(
     itself."""
     dim = None
     if how in ("left", "inner") and store.bucket_cols == [join_key]:
-        buckets = [
-            r["b"]
-            for r in batch_df.select(store._bucket_col().alias("b"))
-            .distinct()
-            .collect()
-        ]
-        dim = store.read_buckets(buckets)
+        dim = store.read_buckets(store.buckets_of(batch_df))
     if dim is None:
         dim = store.read()
     enriched = batch_df.join(dim, join_key, how)

@@ -208,6 +208,83 @@ def test_replay_idempotence(spark, fixture_lines, tmp_path):
     assert before == after
 
 
+def _acct_catalog():
+    """The default catalog plus an int-keyed table ``acct``."""
+    from pyspark.sql import types as T
+
+    from kafkatosparktokudu_spark.catalog import TargetTable
+
+    acct = TargetTable(
+        "acct",
+        "id",
+        T.StructType(
+            [
+                T.StructField("id", T.IntegerType(), False),
+                T.StructField("bal", T.DoubleType(), True),
+            ]
+        ),
+    )
+    return dict(default_catalog(), acct=acct)
+
+
+def test_sync_batch_folds_on_typed_key(spark, tmp_path):
+    """An int-keyed table receiving '007' and then '7' holds ONE row for
+    key 7: the fold groups on the catalog-typed key, not the raw string
+    (grouping on the string stored two rows for PK 7, kept across
+    batches)."""
+    cat = _acct_catalog()
+    wh = str(tmp_path / "wh")
+    lines = [
+        '{"table": "S.ACCT", "op_type": "I", "current_ts": '
+        '"2024-01-01T10:00:00.000000", "pos": 1, "after": {"ID": "007", "BAL": "1"}}',
+        '{"table": "S.ACCT", "op_type": "U", "current_ts": '
+        '"2024-01-01T11:00:00.000000", "pos": 2, "after": {"ID": "7", "BAL": "2"}}',
+    ]
+    store = StateStore(spark, f"{wh}/acct", ["id"], cat["acct"].full_schema, 8)
+    for batch in (lines, lines[1:]):
+        df = spark.createDataFrame([(line,) for line in batch], "value string")
+        sync_batch(spark, df, wh, catalog=cat, now_str=NOW, n_buckets=8)
+        rows = [(r["id"], r["bal"]) for r in store.lookup([7]).collect()]
+        assert rows == [(7, 2.0)]
+    assert store.read().count() == 1
+
+
+def test_sync_batch_after_rebucket(spark, fixture_lines, tmp_path):
+    """A store rebucketed between batches keeps syncing: affected_buckets
+    hashes with the store's adopted geometry, so the stale n_buckets=8
+    argument is harmless (before, the batch's rows were hashed mod 8 and
+    the staged-bucket guard refused the write)."""
+    def ts(line: str) -> str:
+        try:
+            return json.loads(line).get("current_ts") or ""
+        except (ValueError, AttributeError):
+            return ""
+
+    # split by event time, so two sequential merges equal one fold of the
+    # whole fixture (a positional split lets the fixture's stale
+    # out-of-order records win in the later batch)
+    stamps = sorted({ts(l) for l in fixture_lines if ts(l)})
+    cut = stamps[len(stamps) // 2]
+    halves = (
+        [l for l in fixture_lines if ts(l) < cut],
+        [l for l in fixture_lines if ts(l) >= cut],
+    )
+    wh = str(tmp_path / "wh")
+    cat = default_catalog()
+    df = spark.createDataFrame([(l,) for l in halves[0]], "value string")
+    sync_batch(spark, df, wh, now_str=NOW, n_buckets=8)
+    StateStore(spark, f"{wh}/emp", ["id"], cat["emp"].full_schema, 8).rebucket(16)
+    df = spark.createDataFrame([(l,) for l in halves[1]], "value string")
+    sync_batch(spark, df, wh, now_str=NOW, n_buckets=8)
+
+    store = StateStore(spark, f"{wh}/emp", ["id"], cat["emp"].full_schema, 8)
+    assert store.n_buckets == 16
+    whole = apply_changes(spark, read_fixture(spark), now_str=NOW)["emp"]
+    got = sorted((tuple(r) for r in store.read().collect()), key=repr)
+    want = sorted((tuple(r) for r in whole.collect()), key=repr)
+    assert got == want
+
+
 def test_dead_letters_counted(spark, fixture_lines, tmp_path):
     """Bad input dropped, not fatal (S10): null-table, missing ID, bad JSON."""
     df = spark.createDataFrame([(line,) for line in fixture_lines], "value string")
@@ -267,10 +344,10 @@ def test_dead_letter_capture(spark, tmp_path):
 
 
 def test_affected_buckets_match_store(spark, fixture_lines):
-    """affected_buckets (computed from PRE-fold keys, no fold job) must
-    equal the bucket set StateStore._bucket_col assigns to the TYPED folded
-    batch — an under-approximation would make upsert_many swap in a bucket
-    whose prior state was never read (silent history loss)."""
+    """affected_buckets hashes the PRE-fold keys (no fold job) with each
+    store's own StateStore._bucket_col, so its sets must equal the buckets
+    that same hash assigns to the TYPED folded batch — an
+    under-approximation would make upsert_many refuse the batch."""
     from pyspark.sql import types as T
 
     from kafkatosparktokudu_spark.catalog import PUB_EVENT_SCHEMA, TargetTable
@@ -286,10 +363,10 @@ def test_affected_buckets_match_store(spark, fixture_lines):
     )
 
     # int-typed key with leading zeros: '007' and '7' must hash to ONE
-    # bucket (the typed batch casts before hashing; affected_buckets must
-    # do the same cast or it would predict two buckets for one key — an
-    # over-approximation is safe, but the key-set equality below is strict
-    # so the test pins exact agreement)
+    # bucket (the fold groups on the typed key; affected_buckets must
+    # project the same typed key or it would predict two buckets for one
+    # key — an over-approximation is safe, but the key-set equality below
+    # is strict so the test pins exact agreement)
     acct_lines = [
         '{"table": "S.ACCT", "op_type": "I", "current_ts": '
         '"2024-01-01T10:00:00.000000", "pos": 900, "after": {"ID": "007", "BAL": "1"}}',
@@ -313,7 +390,16 @@ def test_affected_buckets_match_store(spark, fixture_lines):
     valid, _ = split_valid(parse_ogg(raw))
     norm = normalize(valid)
     n_buckets = 7
-    aff = affected_buckets(norm, catalog, n_buckets)
+    stores = {
+        name: StateStore(
+            spark, f"/tmp/unused/{name}", [target.key], target.full_schema, n_buckets
+        )
+        for name, target in catalog.items()
+    }
+    stores["pub_event"] = StateStore(
+        spark, "/tmp/unused/pub_event", ["id", "name"], PUB_EVENT_SCHEMA, n_buckets
+    )
+    aff = affected_buckets(norm, catalog, stores)
 
     for name, target in catalog.items():
         typed = with_time_stamp(
@@ -323,17 +409,13 @@ def test_affected_buckets_match_store(spark, fixture_lines):
             ),
             NOW,
         )
-        store = StateStore(
-            spark, f"/tmp/unused/{name}", [target.key], target.full_schema, n_buckets
-        )
+        store = stores[name]
         actual = {
             r[0]
             for r in typed.select(store._bucket_col().alias("b")).distinct().collect()
         }
         assert actual == set(aff.get(name, [])), name
-    ev_store = StateStore(
-        spark, "/tmp/unused/pub_event", ["id", "name"], PUB_EVENT_SCHEMA, n_buckets
-    )
+    ev_store = stores["pub_event"]
     ev = derive_pub_event(norm, NOW)
     actual = {
         r[0] for r in ev.select(ev_store._bucket_col().alias("b")).distinct().collect()
@@ -613,6 +695,50 @@ def test_sync_batch_epoch_replay_converges(spark, fixture_lines, tmp_path):
     state = StateStore(spark, f"{wh}/emp", ["id"], cat["emp"].full_schema, 8)
     view, direct = _view_vs_direct(state, spec.store(spark, wh, 8))
     assert view == direct and view
+
+
+def test_sync_batch_crash_between_merge_and_rollup_apply(
+    spark, fixture_lines, tmp_path, monkeypatch
+):
+    """sync_batch dies AFTER the base merge, BEFORE the rollup apply
+    (maintain_rollup raises once on epoch 1). Replaying epoch 1 must apply
+    the write-ahead delta — recomputed, it would be zero — and leave no
+    pending delta behind."""
+    import os
+
+    from kafkatosparktokudu_spark.cdc import RollupSpec
+    from kafkatosparktokudu_spark.operators import rollup as rollup_mod
+
+    wh = str(tmp_path / "wh")
+    spec = RollupSpec(table="emp", group_col="dept_id", sum_col="salary")
+    mid = len(fixture_lines) // 2
+    b1, b2 = (
+        spark.createDataFrame([(l,) for l in part], "value string")
+        for part in (fixture_lines[:mid], fixture_lines[mid:])
+    )
+    sync_batch(spark, b1, wh, now_str=NOW, n_buckets=8, rollups=[spec], epoch_id=0)
+
+    real = rollup_mod.maintain_rollup
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(rollup_mod, "maintain_rollup", real)
+        raise RuntimeError("crash before the rollup apply")
+
+    monkeypatch.setattr(rollup_mod, "maintain_rollup", crash_once)
+    with pytest.raises(RuntimeError, match="crash before"):
+        sync_batch(
+            spark, b2, wh, now_str=NOW, n_buckets=8, rollups=[spec], epoch_id=1
+        )
+    view = spec.store(spark, wh, 8)
+    assert os.path.isdir(rollup_mod.pending_path(view, 1))
+
+    sync_batch(spark, b2, wh, now_str=NOW, n_buckets=8, rollups=[spec], epoch_id=1)
+    state = StateStore(
+        spark, f"{wh}/emp", ["id"], default_catalog()["emp"].full_schema, 8
+    )
+    got, direct = _view_vs_direct(state, view)
+    assert got == direct and got
+    assert not os.path.exists(rollup_mod.pending_path(view, 1))
 
 
 def test_sync_batch_rejects_unknown_rollup_table(spark, fixture_lines, tmp_path):
