@@ -23,8 +23,10 @@ batch instead of once per record.
 from __future__ import annotations
 
 import os
+import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -156,21 +158,57 @@ class RollupSpec:
         )
 
 
+# sync_batch's phases, in order; BatchMetrics.phases reports each one's
+# wall seconds and its Spark jobs carry the description "cdc.<phase> epoch=<id>"
+PHASES = ("fill", "buckets", "merge", "rollups")
+
+
 @dataclass
 class BatchMetrics:
     """Per-batch report (S7/S20/S21 parity: total count, distinct tables,
     dead letters — ConsumerMain.scala:113-116). ``total`` counts every
     consumed record (valid + dead), matching the reference's per-record
     accumulator which increments before validity checks; ``valid`` is the
-    subset that reached a table merge."""
+    subset that reached a table merge.
+
+    ``phases``: wall seconds per ``sync_batch`` phase (``PHASES``) —
+    ``fill`` (the job that reads the source into the cached envelope and
+    counts it), ``buckets`` (the affected-bucket job), ``merge`` (the
+    staged write and swap), ``rollups`` (rollup-view deltas and applies).
+    Not part of the tbLog block."""
 
     total: int
     dead: int
     tables: list[str]
+    phases: dict[str, float] = field(default_factory=lambda: dict.fromkeys(PHASES, 0.0))
 
     @property
     def valid(self) -> int:
         return self.total - self.dead
+
+
+@contextmanager
+def _phase(
+    spark: SparkSession,
+    name: str,
+    epoch_id: int | None,
+    phases: dict[str, float] | None,
+):
+    """Describe the Spark jobs the block starts as ``cdc.<name>
+    epoch=<id>`` and, given ``phases``, add its wall time to
+    ``phases[name]``. Job descriptions are thread-local, so each thread
+    that runs a phase enters its own block; the caller's description (a
+    streaming batch's) comes back after."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"cdc.{name} epoch={epoch_id}")
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        if phases is not None:
+            phases[name] += time.perf_counter() - t0
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def sync_batch(
@@ -192,6 +230,12 @@ def sync_batch(
     dual write (KuduManager.scala:68 before :114) — documented, no
     cross-table transaction.
 
+    The first job reads ``raw`` once into the cached envelope and counts
+    it. A batch of 0 records returns there (``total == 0``), before any
+    store is opened: that count is the empty-batch check, the reference's
+    ``rdd.isEmpty`` (S5, ConsumerMain.scala:94), without a second read of
+    the source.
+
     ``rollups``: aggregate views maintained in the same epoch by deltas,
     through operators/rollup.py's one protocol (``pre_merge_delta`` over
     the batch's affected buckets, the merge, ``post_merge_apply``). With
@@ -210,88 +254,100 @@ def sync_batch(
     # fixture's 'pos' field, so without this the last-write-wins tie-break
     # on equal current_ts would be nondeterministic on the production path.
     seq = F.col("seq") if "seq" in raw.columns else None
-    # Cache the parsed envelope once: every downstream job (stats, dead
-    # letters, per-table folds, pub_event) is a cheap projection over it.
-    # The batch is rate-capped (maxOffsetsPerTrigger), so it fits in memory.
+    # Cache the parsed envelope once: every downstream job (dead letters,
+    # affected buckets, per-table folds, pub_event) is a cheap projection
+    # over it. The batch is rate-capped (maxOffsetsPerTrigger), so it fits
+    # in memory.
     parsed = parse_ogg(raw, seq_col=seq).cache()
     valid, dead = split_valid(parsed)
     norm = normalize(valid)
+    metrics = BatchMetrics(total=0, dead=0, tables=[])
+
+    def phase(name: str):
+        return _phase(spark, name, epoch_id, metrics.phases)
+
     try:
-        # ONE job yields the total, the table list AND the dead count
-        # (S7 + S20 + S10): group the cached envelope by (validity,
-        # table-name). The reference needed a per-record accumulator plus a
-        # driver-side distinct for the same report
-        # (ConsumerMain.scala:101,113-116). The stats job is independent of
-        # the merge pipeline (folds are built for every catalog table;
-        # upsert_many skips tables with no rows), so it runs on a thread
-        # CONCURRENTLY with the fold+merge jobs — micro-batch wall time is
-        # max(stats, merge), not the sum.
         from .operators.ogg import is_valid
 
         tab_expr = F.lower(F.element_at(F.split("table", "\\."), 2))
 
-        def _stats():
-            rows = parsed.groupBy(
-                is_valid().alias("ok"), F.when(is_valid(), tab_expr).alias("t")
-            ).count().collect()
-            if dead_letter_dir is not None:
-                # capture, don't just count: raw line + reason, appended as
-                # parquet so bad input is replayable after a catalog/parser
-                # fix (the reference only logs and drops,
-                # KuduManager.scala:117-122)
-                reason = (
-                    F.when(F.col("table").isNull(), "null_table_or_unparseable")
-                    .when(
-                        F.size(F.split("table", "\\.")) < 2,
-                        "malformed_table_name",
-                    )
-                    .when(F.col("after").isNull(), "missing_after")
-                    .otherwise("missing_pk")
-                )
+        def _fill():
+            # ONE job fills the cache and yields the total, the table list
+            # AND the dead count (S7 + S20 + S10): group the envelope by
+            # (validity, table-name). The reference needed a per-record
+            # accumulator plus a driver-side distinct for the same report
+            # (ConsumerMain.scala:101,113-116).
+            with phase("fill"):
+                return parsed.groupBy(
+                    is_valid().alias("ok"), F.when(is_valid(), tab_expr).alias("t")
+                ).count().collect()
+
+        def _dead_letters():
+            # capture, don't just count: raw line + reason, appended as
+            # parquet so bad input is replayable after a catalog/parser fix
+            # (the reference only logs and drops, KuduManager.scala:117-122)
+            reason = (
+                F.when(F.col("table").isNull(), "null_table_or_unparseable")
+                .when(F.size(F.split("table", "\\.")) < 2, "malformed_table_name")
+                .when(F.col("after").isNull(), "missing_after")
+                .otherwise("missing_pk")
+            )
+            with _phase(spark, "dead_letters", epoch_id, None):
                 dead.select(
                     F.col("_raw").alias("raw"), reason.alias("reason")
                 ).write.mode("append").parquet(dead_letter_dir)
-            return rows
 
-        stores = {
-            name: StateStore(
-                spark,
-                f"{warehouse_dir}/{name}",
-                [target.key],
-                target.full_schema,
-                n_buckets,
-            )
-            for name, target in catalog.items()
-        }
-        stores[PUB_EVENT] = StateStore(
-            spark,
-            f"{warehouse_dir}/{PUB_EVENT}",
-            ["id", "name"],
-            PUB_EVENT_SCHEMA,
-            n_buckets,
-        )
+        def _buckets():
+            with phase("buckets"):
+                return affected_buckets(norm, catalog, stores)
+
         with ThreadPoolExecutor(max_workers=2) as pool:
-            stats_fut = pool.submit(_stats)
-            affected_fut = pool.submit(affected_buckets, norm, catalog, stores)
+            # Every later job reads the cache, so none starts before the
+            # fill job returns; the driver builds the fold plans meanwhile.
+            stats_fut = pool.submit(_fill)
             batches = _table_batches(norm, catalog, now_str)
-            affected = affected_fut.result()
+            stats = stats_fut.result()
+            metrics.total = sum(r["count"] for r in stats)
+            if metrics.total == 0:
+                return metrics
+            metrics.dead = sum(r["count"] for r in stats if not r["ok"])
+            metrics.tables = sorted(
+                r["t"] for r in stats if r["ok"] and r["t"] is not None
+            )
+            stores = {
+                name: StateStore(
+                    spark, f"{warehouse_dir}/{name}", [target.key],
+                    target.full_schema, n_buckets,
+                )
+                for name, target in catalog.items()
+            }
+            stores[PUB_EVENT] = StateStore(
+                spark, f"{warehouse_dir}/{PUB_EVENT}", ["id", "name"],
+                PUB_EVENT_SCHEMA, n_buckets,
+            )
+            # the bucket-set job is submitted first: the dead-letter append
+            # runs beside it and is awaited only after the merge
+            affected_fut = pool.submit(_buckets)
+            dead_fut = pool.submit(_dead_letters) if dead_letter_dir else None
             views = [
                 (spec, spec.store(spark, warehouse_dir, n_buckets))
                 for spec in rollups or []
             ]
-            deltas = [
-                pre_merge_delta(
-                    spark,
-                    stores[spec.table],
-                    batches[spec.table],
-                    affected.get(spec.table, []),
-                    view,
-                    spec.group_col,
-                    spec.sum_col,
-                    epoch_id,
-                )
-                for spec, view in views
-            ]
+            affected = affected_fut.result()
+            with phase("rollups"):
+                deltas = [
+                    pre_merge_delta(
+                        spark,
+                        stores[spec.table],
+                        batches[spec.table],
+                        affected.get(spec.table, []),
+                        view,
+                        spec.group_col,
+                        spec.sum_col,
+                        epoch_id,
+                    )
+                    for spec, view in views
+                ]
             # All tables' MERGEs land in ONE combined staged write: with
             # the affected sets precomputed, upsert_many fuses every fold,
             # merge join and the partitioned write into a single Spark job.
@@ -300,18 +356,18 @@ def sync_batch(
             # is unchanged. A table without rows this batch has no affected
             # entry; left in, upsert_many would run its (empty) fold to
             # prove it.
-            upsert_many(
-                spark,
-                [(stores[n], b) for n, b in batches.items() if affected.get(n)],
-                affected=affected,
-            )
-            for (spec, view), delta in zip(views, deltas):
-                post_merge_apply(spark, view, delta, spec.group_col, epoch_id)
-            stats = stats_fut.result()
-        total = sum(r["count"] for r in stats)
-        dead_n = sum(r["count"] for r in stats if not r["ok"])
-        tables = [r["t"] for r in stats if r["ok"] and r["t"] is not None]
-        return BatchMetrics(total=total, dead=dead_n, tables=sorted(tables))
+            with phase("merge"):
+                upsert_many(
+                    spark,
+                    [(stores[n], b) for n, b in batches.items() if affected.get(n)],
+                    affected=affected,
+                )
+            with phase("rollups"):
+                for (spec, view), delta in zip(views, deltas):
+                    post_merge_apply(spark, view, delta, spec.group_col, epoch_id)
+            if dead_fut is not None:
+                dead_fut.result()
+        return metrics
     finally:
         # blocking: at a sustained batch rate the default async unpersist
         # lets several batches' cached envelopes coexist — measured 2-4×

@@ -21,7 +21,13 @@ One write protocol (``_stage_and_swap``) serves every mutation except
 
 1. stage: ONE Spark job writes the new contents of those buckets to
    ``{path}.__staging__`` beside the first store, partitioned by
-   (position in the call, bucket);
+   (position in the call, bucket). The rows are hash-repartitioned on
+   that pair into a FIXED number of tasks, the smaller of the session's
+   default parallelism and the number of listed buckets, so each bucket
+   is still written by one task as one file. A column-only repartition
+   would let AQE coalesce a small batch's shuffle to one partition, and
+   one task would then write every bucket directory in turn (measured: a
+   37k-row batch into 48 buckets as 1 task, 0.92 s);
 2. guard: every staged bucket must be in its store's list. A staged
    bucket outside the list means the caller under-declared it — its
    state was never read, so swapping it in would replace that bucket's
@@ -511,8 +517,14 @@ def _stage_and_swap(
     Staged under the first store's sibling ``{path}.__staging__``, so the
     renames stay on that store's filesystem."""
     staging = targets[0][0].path.rstrip("/") + ".__staging__"
+    # A fixed partition count: AQE would coalesce a column-only
+    # repartition of a small batch into ONE write task (module docstring)
+    n_parts = min(
+        staged.sparkSession.sparkContext.defaultParallelism,
+        sum(len(buckets) for _, buckets in targets),
+    )
     (
-        staged.repartition(_TABLE, _BUCKET)
+        staged.repartition(max(n_parts, 1), _TABLE, _BUCKET)
         .write.mode("overwrite")
         .partitionBy(_TABLE, _BUCKET)
         .parquet(staging)
@@ -580,8 +592,8 @@ def upsert_many(
 
     1. Buckets to rewrite, per store: supplied by the caller
        (``affected``, keyed by store basename — cdc.sync_batch hashes
-       the pre-fold keys with each store's ``_bucket_col``, overlapped
-       with its stats job), or computed
+       the pre-fold keys with each store's ``_bucket_col`` once its
+       fill job has cached the batch), or computed
        by tagging each batch with its position in ``merges``, unioning,
        persisting and collecting the distinct (position, bucket) pairs —
        one job.

@@ -120,7 +120,8 @@ def typed_key(target: TargetTable) -> Column:
     """The normalized record's raw string ``id`` cast to the catalog's key
     type — the key the fold groups on, so an int-keyed table folds '007'
     and '7' into ONE row for key 7, and the key cdc.affected_buckets
-    hashes, so its bucket set is the folded batch's."""
+    hashes, so its bucket set is the folded batch's. SCD2 history chains
+    its versions on it too."""
     ktype = next(f.dataType for f in target.payload.fields if f.name == target.key)
     return F.col("id").cast(ktype)
 
@@ -208,7 +209,8 @@ def history_table_changes(df: DataFrame, target: TargetTable) -> DataFrame:
     Output per version: payload columns (catalog-cast via try_cast, the
     S16 rule), ``delete_state``, ``valid_from``/``valid_to`` (normalized
     change ts; NULL valid_to = current), ``version`` (1-based), and
-    ``is_current``.
+    ``is_current``. Versions chain per catalog-typed key (``typed_key``,
+    like the fold): an int-keyed table's '007' and '7' are one entity.
 
     Scale shape: ONE shuffle keyed on the PK + a per-key sort of that
     key's versions (bounded by the key's change count, not table size) —
@@ -217,12 +219,13 @@ def history_table_changes(df: DataFrame, target: TargetTable) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy("id").orderBy(F.col("current_ts"), F.col("seq"))
+    key = typed_key(target)
+    w = Window.partitionBy(key).orderBy(F.col("current_ts"), F.col("seq"))
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cols: list[Column] = []
     for f in target.payload.fields:
         if f.name == target.key:
-            cols.append(F.col("id").cast(f.dataType).alias(f.name))
+            cols.append(key.alias(f.name))
             continue
         val = F.when(
             F.col("op_type") != "D", F.col("after").getItem(f.name.upper())

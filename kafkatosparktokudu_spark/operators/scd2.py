@@ -122,8 +122,11 @@ class Scd2Store:
         # affected-key semi-join must all see the same rows — a
         # non-deterministic input recomputed between those three uses
         # could leave hist stale for keys the collect never saw.
+        # The raw log keys on the catalog-typed id, in its string form, so
+        # an int-keyed table's '007' and '7' share one entity's log.
         raw_rows = changes.select(
-            "id", "seq", "op_type", "current_ts", "current_ts_norm", "after"
+            typed_key(self.target).cast("string").alias("id"),
+            "seq", "op_type", "current_ts", "current_ts_norm", "after",
         ).persist()
         try:
             keys = raw_rows.select("id").distinct()

@@ -75,15 +75,22 @@ def _start_foreach_batch(
     query_name: str,
     available_now: bool,
     trigger_interval: str,
+    skip_empty: bool = True,
 ) -> StreamingQuery:
-    """The wiring every ``start_*`` shares: run ``body`` on each non-empty
-    micro-batch (empty-batch guard, S5, ConsumerMain.scala:94) under a
-    named query with its checkpoint. ``available_now=True`` drains
-    everything currently in the source and stops; otherwise the trigger
-    fires every ``trigger_interval`` of processing time."""
+    """The wiring every ``start_*`` shares: run ``body`` on each
+    micro-batch under a named query with its checkpoint.
+    ``available_now=True`` drains everything currently in the source and
+    stops; otherwise the trigger fires every ``trigger_interval`` of
+    processing time.
+
+    Spark may hand foreachBatch a batch of 0 rows (a new, empty source
+    file). With ``skip_empty`` such a batch is dropped by an
+    ``isEmpty()`` job before ``body`` runs (S5, ConsumerMain.scala:94) —
+    a second read of the source. ``start_cdc_sync`` passes False: its
+    body learns emptiness from the count its first job takes anyway."""
 
     def _run(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.isEmpty():
+        if not skip_empty or not batch_df.isEmpty():
             body(batch_df, epoch_id)
 
     writer = (
@@ -117,6 +124,11 @@ def start_cdc_sync(
     updated by deltas inside the same foreachBatch epoch — exactly-once
     under checkpoint replay (write-ahead pending delta + per-group epoch
     stamp, operators/rollup.py).
+
+    The source is read once per batch: there is no ``isEmpty()`` pre-read.
+    ``sync_batch``'s first job counts the batch; a batch of 0 records
+    writes no tbLog block and calls no ``on_batch`` (S5 parity,
+    ConsumerMain.scala:94).
     """
 
     def _sync(batch_df: DataFrame, epoch_id: int) -> None:
@@ -135,13 +147,15 @@ def start_cdc_sync(
             # under checkpoint replay (operators/rollup.py docstring)
             epoch_id=epoch_id,
         )
+        if m.total == 0:
+            return
         write_batch_log(cfg.metrics_dir, epoch_id, start, time.time(), m)
         if on_batch:
             on_batch(epoch_id, m)
 
     return _start_foreach_batch(
         source, _sync, cfg.checkpoint_dir,
-        "cdc_sync", available_now, cfg.trigger_interval,
+        "cdc_sync", available_now, cfg.trigger_interval, skip_empty=False,
     )
 
 

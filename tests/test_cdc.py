@@ -1457,3 +1457,152 @@ def test_scd2_rebucket_mid_stream_equivalence(spark, tmp_path):
     got = sorted(map(tuple, stale.history().collect()), key=repr)
     want = sorted(map(tuple, history_table_changes(emp, target).collect()), key=repr)
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize("split", [False, True], ids=["one_batch", "two_batches"])
+def test_scd2_chains_versions_on_typed_key(spark, tmp_path, split):
+    """An int-keyed table receiving '007' (bal 1.0) and then '7' (bal 2.0)
+    holds ONE version chain for key 7 — two versions — whether the two
+    records arrive in one batch or two. Keyed on the raw string, one batch
+    gave two current version-1 rows, and two batches overwrote version 1
+    with bal 2.0."""
+    from kafkatosparktokudu_spark.operators.ogg import (
+        history_table_changes,
+        normalize,
+        parse_ogg,
+        split_valid,
+    )
+    from kafkatosparktokudu_spark.operators.scd2 import Scd2Store
+
+    target = _acct_catalog()["acct"]
+    lines = [
+        '{"table": "S.ACCT", "op_type": "I", "current_ts": '
+        '"2024-01-01T10:00:00.000000", "pos": 1, "after": {"ID": "007", "BAL": "1"}}',
+        '{"table": "S.ACCT", "op_type": "U", "current_ts": '
+        '"2024-01-01T11:00:00.000000", "pos": 2, "after": {"ID": "7", "BAL": "2"}}',
+    ]
+    valid, _ = split_valid(
+        parse_ogg(spark.createDataFrame([(line,) for line in lines], "value string"))
+    )
+    norm = normalize(valid)
+    want = [(7, 1, 1.0, False), (7, 2, 2.0, True)]
+
+    def chain(df):
+        return sorted(
+            (r["id"], r["version"], r["bal"], r["is_current"]) for r in df.collect()
+        )
+
+    assert chain(history_table_changes(norm, target)) == want
+    store = Scd2Store(spark, str(tmp_path / "acct"), target, n_buckets=8)
+    batches = [norm.filter(F.col("seq") == s) for s in (1, 2)] if split else [norm]
+    for batch in batches:
+        store.apply_batch(batch)
+    assert chain(store.history()) == want
+
+
+def test_upsert_many_staged_write_runs_on_every_core(spark, tmp_path):
+    """A batch touching all 16 buckets of a store is staged by
+    min(16, defaultParallelism) write tasks, each bucket still one file.
+    A column-only repartition let AQE coalesce the small shuffle to one
+    task that wrote every bucket directory in turn."""
+    import os
+    import uuid
+
+    from pyspark.sql import types as T
+
+    from kafkatosparktokudu_spark.operators.merge import upsert_many
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.StringType(), False),
+            T.StructField("v", T.StringType(), True),
+        ]
+    )
+    store = StateStore(spark, str(tmp_path / "emp"), ["id"], schema, 16)
+    store.upsert_batch(
+        spark.createDataFrame([(str(i), "a") for i in range(200)], schema)
+    )
+    batch = spark.createDataFrame([(str(i), "b") for i in range(0, 400, 2)], schema)
+    assert sorted(store.buckets_of(batch)) == list(range(16))
+    sc = spark.sparkContext
+    group = f"staged-write-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "staged write parallelism")
+    try:
+        upsert_many(spark, [(store, batch)], affected={"emp": list(range(16))})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    write_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks == min(16, sc.defaultParallelism)
+    for b in range(16):
+        d = os.path.join(store.path, f"_bucket={b}")
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1
+    got = {r["id"]: r["v"] for r in store.read().collect()}
+    assert got == {
+        **{str(i): "a" for i in range(200)},
+        **{str(i): "b" for i in range(0, 400, 2)},
+    }
+
+
+def _job_description(spark, job_id: int, timeout_s: float = 10.0):
+    """A finished job's description from the status store (the listener
+    bus delivers job events asynchronously, so wait for it)."""
+    import time
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    deadline = time.time() + timeout_s
+    while True:
+        try:
+            d = store.job(job_id).description()
+            return d.get() if d.isDefined() else None
+        except Exception:
+            if time.time() > deadline:
+                raise
+            time.sleep(0.05)
+
+
+def test_sync_batch_reports_phases_and_names_its_jobs(spark, tmp_path):
+    """sync_batch reports wall seconds per phase and describes every Spark
+    job it starts as ``cdc.<phase> epoch=<id>`` (the dead-letter append as
+    ``cdc.dead_letters``). A batch of 0 records runs only its fill job and
+    opens no store."""
+    import os
+
+    from kafkatosparktokudu_spark.cdc import PHASES
+
+    def next_job_id():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    wh = str(tmp_path / "wh")
+    j0 = next_job_id()
+    m = sync_batch(
+        spark, read_fixture(spark), wh, now_str=NOW, n_buckets=8,
+        dead_letter_dir=str(tmp_path / "dead"), epoch_id=41,
+    )
+    j1 = next_job_id()
+    assert m.total > 0 and m.dead > 0
+    assert set(m.phases) == set(PHASES)
+    assert all(m.phases[p] > 0 for p in ("fill", "buckets", "merge"))
+    assert m.phases["rollups"] < 0.05  # no rollup views: nothing runs
+    descs = [_job_description(spark, j) for j in range(j0, j1)]
+    assert all(
+        d is not None and d.startswith("cdc.") and d.endswith(" epoch=41")
+        for d in descs
+    ), descs
+    named = {d.split()[0] for d in descs}
+    assert named == {"cdc.fill", "cdc.buckets", "cdc.merge", "cdc.dead_letters"}
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+    empty_wh = str(tmp_path / "empty_wh")
+    j0 = next_job_id()
+    m = sync_batch(
+        spark, spark.createDataFrame([], "value string"), empty_wh,
+        dead_letter_dir=str(tmp_path / "dead_empty"), epoch_id=42,
+    )
+    j1 = next_job_id()
+    assert (m.total, m.dead, m.tables) == (0, 0, [])
+    assert {_job_description(spark, j) for j in range(j0, j1)} == {"cdc.fill epoch=42"}
+    assert not os.path.exists(empty_wh)
+    assert not os.path.exists(str(tmp_path / "dead_empty"))

@@ -79,3 +79,28 @@ def test_upsert_many_affected_is_third_parameter():
 
     params = list(inspect.signature(cdc.upsert_many).parameters)
     assert params[1:3] == ["merges", "affected"], params
+
+
+def test_sync_batch_calls_the_traced_functions():
+    """The traced run's ``cdc.affected_buckets_ms_p50``,
+    ``cdc.buckets_touched_per_batch`` and ``merge.write_amp_bytes`` come
+    from wrapping ``cdc.affected_buckets`` and ``cdc.upsert_many`` and
+    reading ``upsert_many``'s ``affected`` argument. If ``sync_batch``
+    stopped reaching them through those module names, the figures would
+    read 0 without any error."""
+    from kafkatosparktokudu_spark import cdc
+
+    tree = ast.parse(Path(inspect.getsourcefile(cdc)).read_text(encoding="utf-8"))
+    (fn,) = [
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "sync_batch"
+    ]
+    calls = [
+        c for c in ast.walk(fn)
+        if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
+    ]
+    assert any(c.func.id == "affected_buckets" for c in calls)
+    assert any(
+        c.func.id == "upsert_many" and any(k.arg == "affected" for k in c.keywords)
+        for c in calls
+    )

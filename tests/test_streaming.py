@@ -2573,3 +2573,70 @@ def test_ivf_build_folded_epoch_binding(spark, tmp_path):
     m2 = _read_ivf_meta(spark, idx)
     assert m2["committed_epochs"] == [0]  # no new epoch committed
     assert spark.read.parquet(idx).count() == n_before
+
+
+def test_stream_cdc_empty_batch_writes_nothing(spark, tmp_path):
+    """A micro-batch of 0 rows (an empty source file) reaches foreachBatch
+    but leaves no trace: no tbLog block, no on_batch call and no store
+    directory (S5 parity, ConsumerMain.scala:94) — with emptiness taken
+    from sync_batch's own count, not a pre-read."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "part-000.jsonl").write_text("")
+    cfg = _cfg(tmp_path)
+    calls = []
+    q = start_cdc_sync(
+        spark, file_source(spark, str(src)), cfg, available_now=True,
+        on_batch=lambda epoch, m: calls.append(epoch),
+    )
+    q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress if p["batchId"] == 0] == [0]
+    assert (Path(cfg.checkpoint_dir) / "commits" / "0").exists()
+    assert calls == []
+    assert not list(Path(tmp_path).glob("metrics/tbLog*.log"))
+    assert not Path(cfg.warehouse_dir).exists()
+
+
+def test_stream_bm25_index_sync_skips_empty_batch(spark, tmp_path):
+    """The other start_* bodies still skip a micro-batch of 0 rows: the
+    BM25 sync over an empty file followed by a docs file builds its index
+    from the docs batch (epoch 1), not from the empty one."""
+    import json
+    import os
+
+    from kafkatosparktokudu_spark.operators.text import (
+        _read_bm25_meta,
+        bm25_index_topk,
+        build_bm25_index,
+    )
+    from kafkatosparktokudu_spark.streaming.pipeline import start_bm25_index_sync
+
+    docs = [
+        (1, "stream merge of change records"),
+        (2, "vector search over a merge index"),
+        (3, "stream processing with micro batches"),
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.json").write_text("")
+    (src / "b.json").write_text(
+        "\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in docs) + "\n"
+    )
+    os.utime(src / "a.json", (1_000_000_000, 1_000_000_000))  # listed first
+    stream = (
+        spark.readStream.schema("doc_id BIGINT, text STRING")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    idx, ckpt = str(tmp_path / "idx"), str(tmp_path / "ckpt")
+    q = start_bm25_index_sync(spark, stream, idx, ckpt, available_now=True)
+    assert q.awaitTermination(300)
+    assert (tmp_path / "ckpt" / "commits" / "1").exists()  # two batches ran
+    meta = _read_bm25_meta(spark, idx)
+    assert meta["folded_epochs"] == [1] and meta["n_docs"] == len(docs)
+    oneshot = str(tmp_path / "oneshot")
+    build_bm25_index(spark.createDataFrame(docs, "doc_id BIGINT, text STRING"), oneshot)
+    terms = ["merge", "stream"]
+    got = [tuple(r) for r in bm25_index_topk(spark, idx, terms, 3).collect()]
+    want = [tuple(r) for r in bm25_index_topk(spark, oneshot, terms, 3).collect()]
+    assert got == want and len(got) == 3
