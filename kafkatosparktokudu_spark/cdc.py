@@ -174,7 +174,7 @@ class BatchMetrics:
     ``phases``: wall seconds per ``sync_batch`` phase (``PHASES``) —
     ``fill`` (the job that reads the source into the cached envelope and
     counts it), ``buckets`` (the affected-bucket job), ``merge`` (the
-    staged write and swap), ``rollups`` (rollup-view deltas and applies).
+    staged write and commit), ``rollups`` (rollup-view deltas and applies).
     Not part of the tbLog block."""
 
     total: int
@@ -326,9 +326,12 @@ def sync_batch(
                 PUB_EVENT_SCHEMA, n_buckets,
             )
             # the bucket-set job is submitted first: the dead-letter append
-            # runs beside it and is awaited only after the merge
+            # runs beside it and is awaited only after the merge; a batch
+            # without dead letters appends nothing
             affected_fut = pool.submit(_buckets)
-            dead_fut = pool.submit(_dead_letters) if dead_letter_dir else None
+            dead_fut = (
+                pool.submit(_dead_letters) if dead_letter_dir and metrics.dead else None
+            )
             views = [
                 (spec, spec.store(spark, warehouse_dir, n_buckets))
                 for spec in rollups or []
@@ -352,10 +355,10 @@ def sync_batch(
             # the affected sets precomputed, upsert_many fuses every fold,
             # merge join and the partitioned write into a single Spark job.
             # The reference interleaves tables per record; Kudu gives no
-            # cross-table transaction either, so per-table swap atomicity
-            # is unchanged. A table without rows this batch has no affected
-            # entry; left in, upsert_many would run its (empty) fold to
-            # prove it.
+            # cross-table transaction either: each store commits its own
+            # version, one after another. A table without rows this batch
+            # has no affected entry; left in, upsert_many would run its
+            # (empty) fold to prove it.
             with phase("merge"):
                 upsert_many(
                     spark,

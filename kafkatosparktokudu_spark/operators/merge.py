@@ -16,8 +16,18 @@ A batch reads and rewrites only the buckets its keys hash into, so both
 sides of the merge join are bounded by maxOffsetsPerTrigger and the cost
 tracks the batch, not the table.
 
-One write protocol (``_stage_and_swap``) serves every mutation except
-``rebucket``. The caller names, per store, the buckets it replaces:
+Versions: a store is its manifest log, ``{path}/_manifest/<version>.json``.
+A manifest holds the version, ``n_buckets`` and the live files of each
+bucket; the newest one is the store. No data file is replaced in place: a
+write adds files under version-unique names
+(``_bucket=<b>/v<version>-part-*.parquet``) and publishes the next
+manifest. Every read (``exists``, ``read``, ``read_buckets``, ``lookup``)
+reads the newest manifest once and plans against its file list, so a
+frame keeps reading the version it was planned on while later writes land
+— the consistent scan the reference's Kudu reads get.
+
+One write protocol (``_stage_and_commit``) serves every mutation. The
+caller names, per store, the buckets it replaces:
 
 1. stage: ONE Spark job writes the new contents of those buckets to
    ``{path}.__staging__`` beside the first store, partitioned by
@@ -30,30 +40,45 @@ One write protocol (``_stage_and_swap``) serves every mutation except
    37k-row batch into 48 buckets as 1 task, 0.92 s);
 2. guard: every staged bucket must be in its store's list. A staged
    bucket outside the list means the caller under-declared it — its
-   state was never read, so swapping it in would replace that bucket's
-   history with batch-only rows. The swap raises ``ValueError`` before
-   any directory moves, leaving every store unchanged;
-3. swap: for each listed bucket, remove the live directory and rename
-   the staged one in when it exists (a listed bucket with no staged rows
-   is left empty), then delete the staging dir.
+   state was never read, so committing it would replace that bucket's
+   history with batch-only rows. The commit raises ``ValueError`` before
+   any file moves, leaving every store unchanged;
+3. commit, store by store: move the staged files into their bucket
+   directories under version-unique names, then publish the next
+   manifest (temp file + ``os.replace``) — the commit point. A listed
+   bucket with no staged rows drops out of the new version; an unlisted
+   bucket keeps its files;
+4. retire: delete every data file that none of the last
+   ``_KEEP_VERSIONS + 1`` manifests names, and the older manifests.
 
 ``upsert_many`` is the only merge path (``upsert_batch`` is a one-store
-call of it); ``rewrite_buckets`` stages caller-supplied contents and
-``purge_soft_deleted`` is a probe job plus ``rewrite_buckets``.
+call of it); ``rewrite_buckets`` stages caller-supplied contents,
+``purge_soft_deleted`` is a probe job plus ``rewrite_buckets``, and
+``rebucket`` is one write of every row at a new geometry.
 
-Crash safety: the swap is atomic per bucket directory, not across buckets
-or stores; recovery relies on checkpoint replay + upsert idempotence
-(the reference's model: offsets persisted after writes,
-ConsumerMain.scala:128-151, duplicates absorbed by upsert). A leftover
-staging dir is overwritten by the next write. ``rebucket`` alone swaps the
-whole directory behind a commit marker (``_recover_rebucket`` heals it).
+Crash safety: a store reads as its newest manifest, so a crash at any
+step leaves it at exactly the old version (before the publish) or the new
+one (after it). Files moved in by a crashed write are named by no
+manifest, and the next write's retire step deletes them; a leftover
+staging dir is overwritten by the next write. A write to several stores
+publishes them one after another, so a crash between publishes leaves
+some stores at the new version; recovery relies on checkpoint replay +
+upsert idempotence (the reference's model: offsets persisted after
+writes, ConsumerMain.scala:128-151, duplicates absorbed by upsert).
+
+Retention: a frame stays readable for ``_KEEP_VERSIONS`` later commits of
+its store. A file's age counts from the version that superseded it, not
+the one that wrote it: a file this commit replaced is still what readers
+of the previous version open.
 
 On a lakehouse table format (Delta/Iceberg) this whole class collapses
-into ``MERGE INTO``; the public API is shaped so that swap is a drop-in.
+into ``MERGE INTO``, and the manifest log is the local-FS form of their
+transaction log; the public API is shaped so that swap is a drop-in.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -63,15 +88,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _BUCKET = "_bucket"
-# geometry metadata, persisted IN the store dir: underscore-prefixed files
-# are invisible to Spark's file index (like _SUCCESS), so the parquet
-# reads never see it. Without this a store rebucketed to N'=128 reopened
-# by code still passing n_buckets=64 would prune point lookups with the
-# WRONG hash modulus and silently miss rows.
-_META = "_STORE_META.json"
-# commit marker for the rebucket swap: written LAST into a fully-staged
-# copy; its presence means "the staged geometry is the committed truth".
-_REBUCKET_COMMIT = "_REBUCKET_COMMIT"
+_TABLE = "_table"
+_MANIFESTS = "_manifest"
+# Superseded versions a store keeps readable. A frame is planned against
+# one version but opens its files only when it runs. The longest such gap
+# here is one later commit: a rollup's ``pre`` frame is evaluated after
+# its base store's merge, and a read beside the stream queues behind at
+# most one merge (up to 3.5 s against a 5 s trigger). Three versions give
+# that a threefold margin, for at most three superseded copies of each
+# rewritten bucket on disk.
+_KEEP_VERSIONS = 3
 
 
 def merge_upserts(
@@ -140,13 +166,13 @@ class StateStore:
         exactly one bucket) — lets a composite-keyed store, e.g. a
         per-entity change log keyed (id, seq), prune reads by the leading
         column alone ("all of this id's rows")."""
-        # LOCAL-FILESYSTEM-ONLY, enforced: the bucket swap / snapshot /
-        # purge protocols use os.rename + hardlinks, so a remote URI
-        # (hdfs://, s3a://, even file://) would make exists() always-False
-        # — st06's enrich_epoch would silently join an EMPTY dimension side
-        # while writes kept landing (ADVICE r10). Fail fast instead; the
-        # lakehouse swap-in for remote stores is MERGE INTO (module
-        # docstring / DEPLOY.md).
+        # LOCAL-FILESYSTEM-ONLY, enforced: the commit protocol moves files
+        # with os.rename and publishes manifests with os.replace, so a
+        # remote URI (hdfs://, s3a://, even file://) would make exists()
+        # always-False — st06's enrich_epoch would silently join an EMPTY
+        # dimension side while writes kept landing (ADVICE r10). Fail fast
+        # instead; the lakehouse swap-in for remote stores is MERGE INTO
+        # (module docstring / DEPLOY.md).
         if re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*:", path):
             raise ValueError(
                 f"StateStore is local-filesystem-only (got URI {path!r}); "
@@ -163,14 +189,11 @@ class StateStore:
                 f"bucket_cols {bucket_cols} must be a prefix of key_cols {key_cols}"
             )
         self.bucket_cols = bucket_cols or key_cols
-        # heal a crashed rebucket swap BEFORE anything reads or writes,
-        # then adopt the persisted geometry: the on-disk _STORE_META wins
-        # over the constructor argument so call sites need no change when
-        # an operator rebuckets a live store (VERDICT r10 #2).
-        self._recover_rebucket()
-        meta = self._read_meta()
-        if meta is not None and "n_buckets" in meta:
-            self.n_buckets = int(meta["n_buckets"])
+        # The manifest's geometry wins over the argument: call sites need
+        # no change when a live store is rebucketed, and a stale n_buckets
+        # would prune point lookups with the wrong hash modulus and miss
+        # rows (VERDICT r10 #2).
+        self.n_buckets = self._manifest()["n_buckets"]
 
     # -- helpers ------------------------------------------------------------
     def _bucket_col(self, n_buckets: int | None = None) -> F.Column:
@@ -186,117 +209,80 @@ class StateStore:
             r[0] for r in df.select(self._bucket_col()).distinct().collect()
         ]
 
-    def _read_meta(self) -> dict | None:
-        import json
-
-        try:
-            with open(os.path.join(self.path, _META), encoding="utf-8") as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
-
-    def _write_meta(self, dir_path: str | None = None, n_buckets: int | None = None) -> None:
-        import json
-
-        target = dir_path or self.path
-        if not os.path.isdir(target):
-            return
-        tmp = os.path.join(target, _META + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(
-                {"n_buckets": n_buckets if n_buckets is not None else self.n_buckets},
-                fh,
+    def _manifest(self) -> dict:
+        """The newest published manifest: ``{"version", "n_buckets",
+        "buckets": {"<b>": [file path relative to the store, ...]}}``;
+        version 0 with no buckets for a store never written."""
+        log = os.path.join(self.path, _MANIFESTS)
+        versions = _versions(log)
+        if versions:
+            return _load_manifest(log, versions[-1])
+        if (
+            os.path.isdir(self.path)
+            and not os.path.isdir(log)
+            and any(e.startswith(f"{_BUCKET}=") for e in os.listdir(self.path))
+        ):
+            raise ValueError(
+                f"{self.path}: bucket directories without a {_MANIFESTS}/ "
+                "log — a store in the layout from before manifests, which "
+                "this module does not read; rebuild it from its source"
             )
-        os.replace(tmp, os.path.join(target, _META))
+        return {"version": 0, "n_buckets": self.n_buckets, "buckets": {}}
 
-    def _recover_rebucket(self) -> None:
-        """Finish or roll back a rebucket swap interrupted by a crash.
-
-        The swap protocol (``rebucket``) has exactly four crash windows;
-        each leaves an unambiguous layout, so recovery is decision-free:
-
-        - staging WITHOUT the commit marker → the staged write never
-          finished: delete staging, the live store is untouched;
-        - staging WITH the marker (live dir present or already renamed
-          away) → the new geometry is committed: complete the swap;
-        - leftover ``.__rebucket_old__`` next to a live store → the swap
-          finished but cleanup didn't: delete it;
-        - a stray commit marker inside the live store → final tidy-up.
-        """
-        old = self.path + ".__rebucket_old__"
-        import glob
-
-        for stg in glob.glob(glob.escape(self.path) + ".__rebucket_*__"):
-            if stg == old:
-                continue
-            if os.path.isfile(os.path.join(stg, _REBUCKET_COMMIT)):
-                # committed: the staged copy IS the store now
-                if os.path.isdir(self.path):
-                    shutil.rmtree(self.path)
-                os.rename(stg, self.path)
-            else:
-                shutil.rmtree(stg, ignore_errors=True)
-        if os.path.isdir(old):
-            if os.path.isdir(self.path):
-                shutil.rmtree(old, ignore_errors=True)
-            else:  # unreachable under the protocol order, but heal anyway
-                os.rename(old, self.path)
-        marker = os.path.join(self.path, _REBUCKET_COMMIT)
-        if os.path.isfile(marker):
-            os.remove(marker)
+    def _scan(self, manifest: dict, buckets: list[int] | None = None) -> DataFrame:
+        """The rows of ``manifest``'s version (of ``buckets`` only, when
+        given), with the bucket column. The file list is fixed here, at
+        plan time, so the frame reads this version whatever commits
+        later."""
+        schema = T.StructType(
+            list(self.schema.fields) + [T.StructField(_BUCKET, T.IntegerType(), True)]
+        )
+        wanted = None if buckets is None else set(buckets)
+        files = [
+            os.path.join(self.path, f)
+            for b, fs in manifest["buckets"].items()
+            if wanted is None or int(b) in wanted
+            for f in fs
+        ]
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self.path)
+            .parquet(*files)
+        )
 
     def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            e.startswith(f"{_BUCKET}=") for e in os.listdir(self.path)
-        )
+        return bool(self._manifest()["buckets"])
 
     def read(self) -> DataFrame:
         """Current state (without the bucket column)."""
-        if not self.exists():
-            return self.spark.createDataFrame([], self.schema)
-        return self._read_with_bucket().drop(_BUCKET)
+        return self._scan(self._manifest()).drop(_BUCKET)
 
     def _read_with_bucket(self) -> DataFrame:
-        return (
-            self.spark.read.schema(
-                T.StructType(
-                    list(self.schema.fields)
-                    + [T.StructField(_BUCKET, T.IntegerType(), True)]
-                )
-            )
-            .option("basePath", self.path)
-            .parquet(self.path)
-        )
+        return self._scan(self._manifest())
 
     def read_buckets(self, buckets: list[int]) -> DataFrame:
-        """State rows of the given buckets only (partition-pruned scan,
-        bucket column dropped) — the shared read recipe of the merge path
-        and the rollup pre/post snapshots."""
-        if not buckets or not self.exists():
-            return self.spark.createDataFrame([], self.schema)
-        return (
-            self._read_with_bucket()
-            .filter(F.col(_BUCKET).isin(buckets))
-            .drop(_BUCKET)
-        )
+        """State rows of the given buckets only (only their files are
+        scanned, bucket column dropped) — the shared read recipe of the
+        merge path and the rollup pre/post reads."""
+        return self._scan(self._manifest(), buckets).drop(_BUCKET)
 
     def lookup(self, keys: list[tuple] | list) -> DataFrame:
         """Point lookup by primary key — the Kudu read pattern the
         reference's consumers use downstream (openTable + key scan).
         Computes the keys' buckets driver-side with the same hash the
-        writer used, scans ONLY those bucket directories (partition
-        pruning at file-listing time), then filters to the exact keys.
-        Cost is O(|keys| buckets) regardless of table size — the
-        point-read property a keyed store owes its users.
+        writer used, scans ONLY those buckets' files, then filters to the
+        exact keys. Cost is O(|keys| buckets) regardless of table size —
+        the point-read property a keyed store owes its users.
 
         ``keys``: list of key tuples (or scalars for single-column keys),
         in the key columns' declared types."""
-        if not self.exists():
-            return self.spark.createDataFrame([], self.schema)
+        manifest = self._manifest()
         norm_keys = [
             k if isinstance(k, tuple) else (k,) for k in keys
         ]
-        if not norm_keys:
+        if not manifest["buckets"] or not norm_keys:
             return self.spark.createDataFrame([], self.schema)
         key_schema = T.StructType(
             [
@@ -307,8 +293,10 @@ class StateStore:
         from ..functions.localframe import local_frame
 
         kdf = local_frame(self.spark, norm_keys, key_schema)
-        return self.read_buckets(self.buckets_of(kdf)).join(
-            F.broadcast(kdf), self.key_cols, "left_semi"
+        return (
+            self._scan(manifest, self.buckets_of(kdf))
+            .drop(_BUCKET)
+            .join(F.broadcast(kdf), self.key_cols, "left_semi")
         )
 
     # -- the merge ----------------------------------------------------------
@@ -316,89 +304,22 @@ class StateStore:
         """MERGE the (already folded, typed) batch into the store — a
         one-store ``upsert_many``: one job collects the touched buckets,
         one job merges them against their state and stages the result,
-        then the staged buckets swap in (module docstring)."""
+        then the next version is committed (module docstring)."""
         upsert_many(self.spark, [(self, batch)], replace_rows=replace_rows)
-
-    def snapshot(self):
-        """Context manager yielding a snapshot-isolated view of the store.
-
-        ``read()`` lists bucket directories lazily at job time, so a
-        concurrent ``upsert_batch`` swapping buckets mid-query can serve
-        some buckets pre-merge and others post-merge — or fail outright
-        on a vanished file (the swap deletes replaced files by path). A
-        reporting query running WHILE the stream merges wants one
-        consistent version.
-
-        Implementation: hardlink the current file set into a temp sibling
-        directory (no data copy; the links keep the bytes alive after the
-        swap unlinks the originals) and read from there; the links are
-        dropped on exit. On object stores with native versioning
-        (S3/GCS), pin object versions instead — this is the plain-FS
-        equivalent.
-
-            with store.snapshot() as df:
-                df.groupBy(...).agg(...)
-        """
-        import contextlib
-        import uuid
-
-        @contextlib.contextmanager
-        def _snap():
-            if not self.exists():
-                yield self.spark.createDataFrame([], self.schema)
-                return
-            snap_dir = f"{self.path}.__snap_{uuid.uuid4().hex[:8]}__"
-            os.makedirs(snap_dir)
-            try:
-                n = 0
-                for entry in sorted(os.listdir(self.path)):
-                    if not entry.startswith(f"{_BUCKET}="):
-                        continue
-                    d = os.path.join(self.path, entry)
-                    for f in os.listdir(d):
-                        if not f.endswith(".parquet"):
-                            continue
-                        src = os.path.join(d, f)
-                        dst = os.path.join(snap_dir, f"{n:06d}.parquet")
-                        try:
-                            os.link(src, dst)
-                        except OSError:  # cross-device / FS without links
-                            shutil.copy2(src, dst)
-                        n += 1
-                if n == 0:
-                    yield self.spark.createDataFrame([], self.schema)
-                else:
-                    yield self.spark.read.schema(self.schema).parquet(snap_dir)
-            finally:
-                shutil.rmtree(snap_dir, ignore_errors=True)
-
-        return _snap()
 
     def rewrite_buckets(self, buckets: list[int], content: DataFrame) -> None:
         """Replace the given buckets' contents WHOLESALE with ``content``
         (the caller supplies exactly those buckets' intended rows — this
         is the delete-capable primitive upsert can't be: rows absent from
-        ``content`` are gone after the swap). Same stage-and-swap protocol
-        as the merge path, including its guard: a content row hashing
-        outside ``buckets`` raises instead of vanishing with the staging
-        dir. A bucket with no surviving rows is removed outright. Cost
-        tracks the rewritten buckets, never the table.
-
-        Crash contract — atomic PER BUCKET, not across buckets: the final
-        swap is a loop of rmtree+rename, so a crash mid-loop leaves some
-        buckets rewritten and the rest at their prior contents, with no
-        marker distinguishing the two. Callers must therefore be
-        idempotent-by-re-run — ``content`` must be recomputable from the
-        (possibly half-swapped) store such that re-running the whole
-        operation converges (``purge_closed_before`` documents exactly
-        this property: a close-date predicate is true of both old and new
-        bucket states). Do NOT build on this primitive if a half-applied
-        rewrite would be unrecoverable; that caller needs a commit-marker
-        protocol (write all staged buckets, fsync a manifest, then swap)
-        this local-FS store deliberately keeps out of scope."""
+        ``content`` are gone in the new version). Same stage-and-commit
+        protocol as the merge path, including its guard: a content row
+        hashing outside ``buckets`` raises instead of vanishing with the
+        staging dir. A bucket with no surviving rows drops out of the new
+        version. Cost tracks the rewritten buckets, never the table; the
+        commit is atomic across them (module docstring)."""
         if not buckets:
             return
-        _stage_and_swap(
+        _stage_and_commit(
             content.select([F.col(f.name) for f in self.schema.fields])
             .withColumn(_BUCKET, self._bucket_col())
             .withColumn(_TABLE, F.lit(0)),
@@ -407,30 +328,18 @@ class StateStore:
 
     def rebucket(self, n_new: int) -> None:
         """Online bucket-count migration (VERDICT r10 #2 — the last 100 TB
-        maintenance op): rewrite the WHOLE table once at the new hash
-        geometry, then swap it in atomically. DEPLOY.md tells operators to
-        scale n_buckets with table size (the ×91 stress measured why:
-        probe cost tracks touched buckets, so a store that outgrew its
-        bucket count serves every batch from a few giant files); before
-        this, changing n_buckets meant an undocumented by-hand rewrite.
+        maintenance op): ONE write of every row at the new hash geometry,
+        committed as the next version by the module's write protocol.
+        DEPLOY.md tells operators to scale n_buckets with table size (the
+        ×91 stress measured why: probe cost tracks touched buckets, so a
+        store that outgrew its bucket count serves every batch from a few
+        giant files).
 
-        Protocol (single-writer, like every other mutation here):
-
-        1. stage the full table re-hashed to ``n_new`` buckets at
-           ``{path}.__rebucket_{n_new}__`` — ONE distributed job, the only
-           full-table pass; readers keep using the live store throughout;
-        2. write the staged ``_STORE_META`` (n_new), then the
-           ``_REBUCKET_COMMIT`` marker LAST — the commit point;
-        3. swap: rename live → ``.__rebucket_old__``, staging → live,
-           drop the marker, delete old.
-
-        A crash anywhere replays through ``_recover_rebucket`` (runs at
-        every handle construction): before the marker the operation
-        vanishes, after it the swap completes — never a half-geometry
-        store. Point lookups from a handle opened mid-recovery see either
-        the old or the new geometry, both correct, because the hash
-        modulus always travels WITH the directory via ``_STORE_META``
-        (the constructor's n_buckets is just the initial default).
+        The new manifest carries ``n_new``, so readers planned on the old
+        version keep reading it, and a handle opened afterwards adopts the
+        new geometry whatever ``n_buckets`` its call site passes. A crash
+        leaves the store at the old geometry or the new one, never a mix,
+        and re-running the call converges.
 
         Cost: one full-table read+write — O(table), unavoidable for a
         modulus change, but bounded, restartable, and done ONCE per
@@ -438,34 +347,15 @@ class StateStore:
         """
         if n_new < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_new}")
-        self._recover_rebucket()
         if n_new == self.n_buckets:
             return
-        if not self.exists():
-            self.n_buckets = n_new
-            self._write_meta()  # no-op if the dir doesn't exist yet
-            return
-        staging = f"{self.path}.__rebucket_{n_new}__"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
+        _stage_and_commit(
             self.read()
             .withColumn(_BUCKET, self._bucket_col(n_buckets=n_new))
-            .repartition(_BUCKET)
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(staging)
+            .withColumn(_TABLE, F.lit(0)),
+            [(self, list(range(n_new)))],
+            n_buckets=n_new,
         )
-        self._write_meta(dir_path=staging, n_buckets=n_new)
-        # commit point: marker lands only after the staged copy + meta are
-        # fully on disk (os-level create after the write job returned)
-        with open(os.path.join(staging, _REBUCKET_COMMIT), "w", encoding="utf-8") as fh:
-            fh.write(f"{self.n_buckets}->{n_new}\n")
-        old = self.path + ".__rebucket_old__"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        os.remove(os.path.join(self.path, _REBUCKET_COMMIT))
-        shutil.rmtree(old, ignore_errors=True)
         self.n_buckets = n_new
 
     # -- housekeeping -------------------------------------------------------
@@ -480,18 +370,17 @@ class StateStore:
         operators schedule; logical deletes stay queryable until then —
         reference semantics keep D rows with delete_state='1' forever).
 
-        Only buckets CONTAINING purgeable rows are rewritten (one pruned
-        probe for the bucket set, then ``rewrite_buckets``); a bucket left
-        empty is removed outright. Returns the number of rows purged.
-        At 100 TB the cost tracks the purgeable
+        Only buckets CONTAINING purgeable rows are rewritten (one probe
+        for the bucket set, then ``rewrite_buckets``), both planned on one
+        version; a bucket left empty drops out. Returns the number of rows
+        purged. At 100 TB the cost tracks the purgeable
         buckets, not the table — and because every bucket is one file,
         the rewrite is a bounded, restartable job (idempotent: re-running
         purges nothing the second time)."""
-        if not self.exists():
-            return 0
+        manifest = self._manifest()
         purgeable = (F.col(delete_col) == "1") & (F.col(ts_col) < older_than)
         probe = (
-            self._read_with_bucket()
+            self._scan(manifest)
             .filter(purgeable)
             .groupBy(_BUCKET)
             .count()
@@ -500,22 +389,40 @@ class StateStore:
         if not probe:
             return 0
         affected = [r[_BUCKET] for r in probe]
-        self.rewrite_buckets(affected, self.read_buckets(affected).filter(~purgeable))
+        self.rewrite_buckets(
+            affected, self._scan(manifest, affected).drop(_BUCKET).filter(~purgeable)
+        )
         return int(sum(r["count"] for r in probe))
 
 
-_TABLE = "_table"
+def _versions(log: str) -> list[int]:
+    """The published manifest versions in ``log``, oldest first."""
+    try:
+        names = os.listdir(log)
+    except FileNotFoundError:
+        return []
+    stems = (n.removesuffix(".json") for n in names if n.endswith(".json"))
+    return sorted(int(s) for s in stems if s.isdigit())
 
 
-def _stage_and_swap(
-    staged: DataFrame, targets: list[tuple[StateStore, list[int]]]
+def _load_manifest(log: str, version: int) -> dict:
+    with open(os.path.join(log, f"{version}.json"), encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def _stage_and_commit(
+    staged: DataFrame,
+    targets: list[tuple[StateStore, list[int]]],
+    n_buckets: int | None = None,
 ) -> None:
     """The one write protocol (module docstring). ``staged`` carries
     ``_table`` (an index into ``targets``) and ``_bucket``; each target
     store's listed buckets are replaced wholesale by its staged rows.
+    ``n_buckets`` (``rebucket``'s one target): the rows are staged at this
+    geometry, and the new version holds them alone.
 
     Staged under the first store's sibling ``{path}.__staging__``, so the
-    renames stay on that store's filesystem."""
+    moves stay on that store's filesystem."""
     staging = targets[0][0].path.rstrip("/") + ".__staging__"
     # A fixed partition count: AQE would coalesce a column-only
     # repartition of a small batch into ONE write task (module docstring)
@@ -532,8 +439,11 @@ def _stage_and_swap(
     srcs = [os.path.join(staging, f"{_TABLE}={i}") for i in range(len(targets))]
     # Guard against silent loss, checked for every store before anything
     # moves: a staged bucket outside its list was never read as state, so
-    # swapping it in would drop that bucket's history. The staged
-    # directory listing is the cheap, job-free place to catch it.
+    # committing it would drop that bucket's history. The staged
+    # directory listing is the cheap, job-free place to catch it. So is a
+    # handle whose geometry is not the store's: its rows were staged with
+    # the wrong hash modulus.
+    olds = []
     for src, (store, buckets) in zip(srcs, targets):
         staged_buckets = {
             int(e.split("=", 1)[1])
@@ -541,24 +451,87 @@ def _stage_and_swap(
             if e.startswith(f"{_BUCKET}=")
         }
         extra = staged_buckets - set(buckets)
+        old = store._manifest()
         if extra:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise ValueError(
-                f"{store.path}: staged rows for buckets {sorted(extra)} not "
-                f"in the bucket list {sorted(buckets)} — refusing to drop them"
+            problem = (
+                f"staged rows for buckets {sorted(extra)} not in the bucket "
+                f"list {sorted(buckets)} — refusing to drop them"
             )
-    for src, (store, buckets) in zip(srcs, targets):
-        if os.path.isdir(src):
-            os.makedirs(store.path, exist_ok=True)
-        for b in buckets:
-            src_b = os.path.join(src, f"{_BUCKET}={b}")
-            dst = os.path.join(store.path, f"{_BUCKET}={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src_b):
-                os.rename(src_b, dst)
-        if store._read_meta() is None:
-            store._write_meta()  # first write of this store: pin its geometry
+        elif old["n_buckets"] != store.n_buckets:
+            problem = (
+                f"rows staged at {store.n_buckets} buckets, but the store "
+                f"has {old['n_buckets']}"
+            )
+        else:
+            olds.append(old)
+            continue
+        shutil.rmtree(staging, ignore_errors=True)
+        raise ValueError(f"{store.path}: {problem}")
+    for src, (store, buckets), old in zip(srcs, targets, olds):
+        _publish(store, src, buckets, old, n_buckets)
+    for store, _ in targets:
+        _retire(store)
     shutil.rmtree(staging, ignore_errors=True)
+
+
+def _publish(
+    store: StateStore, src: str, buckets: list[int], old: dict, n_buckets: int | None
+) -> None:
+    """Move ``src``'s staged bucket files into ``store`` under the next
+    version's names, then publish that version's manifest."""
+    log = os.path.join(store.path, _MANIFESTS)
+    # the log exists before any file moves in, so a crash in between
+    # leaves an empty store, not bucket dirs that look like the old layout
+    os.makedirs(log, exist_ok=True)
+    version = old["version"] + 1
+    listed = {str(b) for b in buckets}
+    live = {} if n_buckets is not None else {
+        b: fs for b, fs in old["buckets"].items() if b not in listed
+    }
+    for entry in sorted(os.listdir(src)) if os.path.isdir(src) else []:
+        dst = os.path.join(store.path, entry)
+        os.makedirs(dst, exist_ok=True)
+        names = [
+            f for f in sorted(os.listdir(os.path.join(src, entry)))
+            if f.endswith(".parquet")
+        ]
+        for f in names:
+            os.rename(os.path.join(src, entry, f), os.path.join(dst, f"v{version}-{f}"))
+        live[entry.split("=", 1)[1]] = [f"{entry}/v{version}-{f}" for f in names]
+    tmp = os.path.join(log, f".{version}.json.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        json.dump(
+            {
+                "version": version,
+                "n_buckets": n_buckets or store.n_buckets,
+                "buckets": live,
+            },
+            fh,
+        )
+    os.replace(tmp, os.path.join(log, f"{version}.json"))
+
+
+def _retire(store: StateStore) -> None:
+    """Delete every data file that none of the last ``_KEEP_VERSIONS + 1``
+    manifests names — files superseded longer ago, and the orphans of a
+    crashed write — and the manifests older than those."""
+    log = os.path.join(store.path, _MANIFESTS)
+    versions = _versions(log)
+    keep = versions[-(_KEEP_VERSIONS + 1):]
+    named = {
+        f for v in keep for fs in _load_manifest(log, v)["buckets"].values() for f in fs
+    }
+    for v in versions[: len(versions) - len(keep)]:
+        os.remove(os.path.join(log, f"{v}.json"))
+    for entry in os.listdir(store.path):
+        if not entry.startswith(f"{_BUCKET}="):
+            continue
+        d = os.path.join(store.path, entry)
+        for f in os.listdir(d):
+            if f"{entry}/{f}" not in named:
+                os.remove(os.path.join(d, f))
+        if not os.listdir(d):
+            os.rmdir(d)
 
 
 def _union_by_name(frames: list[DataFrame]) -> DataFrame:
@@ -599,14 +572,14 @@ def upsert_many(
        one job.
     2. Each batch full-outer-merges (``merge_upserts``) against only those
        buckets of its store; the merged outputs, tagged by position, are
-       unioned by name and handed to ``_stage_and_swap``. With
+       unioned by name and handed to ``_stage_and_commit``. With
        ``affected`` supplied the folds, merges and staged write fuse into
        a single Spark job.
 
     Guard: ``affected`` must cover every bucket each batch touches; a
     store with no entry is declared to have no rows. A missed bucket's
     state was never read, so its staged copy would hold batch-only rows:
-    the swap sees the staged bucket outside the list and raises
+    the commit sees the staged bucket outside the list and raises
     ``ValueError`` before any store changes (pinned by
     test_upsert_many_refuses_missed_bucket).
 
@@ -660,7 +633,7 @@ def upsert_many(
                 batch.withColumn(_BUCKET, store._bucket_col())
                 .withColumn(_TABLE, F.lit(i))
             )
-        _stage_and_swap(_union_by_name(merged), list(zip(stores, buckets)))
+        _stage_and_commit(_union_by_name(merged), list(zip(stores, buckets)))
     finally:
         if tagged is not None:
             tagged.unpersist()

@@ -47,10 +47,10 @@ view is exactly-once under checkpoint replay:
   and the recomputed delta would be zero).
 - **Per-group epoch stamp.** Each view row carries ``last_epoch``; an
   apply skips any group whose stored epoch is already >= the incoming
-  one. Because the StateStore swap is atomic per BUCKET and the epoch
-  check is per GROUP (a group lives in exactly one bucket), a crash
-  mid-apply replays cleanly: already-swapped buckets are skipped, the
-  rest get the delta — no double counting, no loss.
+  one. Because a StateStore write commits the whole view at once and the
+  epoch check is per GROUP, a crash mid-apply replays cleanly: a view
+  that committed skips every group, one that did not gets the delta —
+  no double counting, no loss.
 
 ``epoch=None`` (ad-hoc batch backfills) runs the same order and formula
 without the pending write and without the guard: at-most-once on a crash

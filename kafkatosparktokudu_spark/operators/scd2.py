@@ -149,13 +149,13 @@ class Scd2Store:
 
     def rebucket(self, n_new: int) -> None:
         """Online geometry migration for BOTH underlying stores (the r11
-        StateStore.rebucket protocol — staged rewrite + commit-marker
-        swap, crash windows healed at next construction). The two
-        migrations are not atomic with each other, and don't need to be:
-        each store's modulus travels with its own directory
-        (_STORE_META.json), so raw and hist geometries are independent —
-        a crash between them just leaves one store migrated, correct at
-        either geometry, and a re-run converges."""
+        StateStore.rebucket: one full rewrite committed as the store's
+        next version, so a crash leaves each store at its old geometry or
+        its new one). The two migrations are not atomic with each other,
+        and don't need to be: each store's modulus lives in its own
+        manifest, so raw and hist geometries are independent — a crash
+        between them just leaves one store migrated, correct at either
+        geometry, and a re-run converges."""
         self.raw.rebucket(n_new)
         self.hist.rebucket(n_new)
 

@@ -866,11 +866,11 @@ def enrich_epoch(
 
     Why foreachBatch and not a plain stream-static `join()`: Spark pins a
     parquet static side's FILE INDEX when the streaming query is planned,
-    so dimension updates after start are invisible (and the StateStore's
-    bucket-swap rewrite would leave the cached index pointing at deleted
-    files). Re-building ``store.read()`` INSIDE the epoch lists the
-    bucket directories fresh, so every micro-batch joins the dimensions
-    as-of its own trigger — the Kafka-consumer-side enrichment every CDC
+    so dimension updates after start are invisible (and the StateStore
+    deletes superseded files a few commits later, so the cached index
+    would point at deleted files). Re-building ``store.read()`` INSIDE the
+    epoch reads the store's newest manifest, so every micro-batch joins
+    the dimensions as-of its own trigger — the Kafka-consumer-side enrichment every CDC
     deployment runs downstream (the reference's consumers read the Kudu
     table per query for the same reason, KuduManager.scala:70-73).
 

@@ -343,6 +343,34 @@ def test_dead_letter_capture(spark, tmp_path):
     assert reasons['{"table": "S.T", "op_type": "I", "after": {}}'] == "missing_pk"
 
 
+def test_dead_letters_appended_only_for_batches_that_have_them(spark, tmp_path):
+    """With ``dead_letter_dir`` set, a batch without dead letters appends
+    nothing (it used to write an empty parquet file, in one extra job);
+    a later batch with dead letters still appends its rows and reasons."""
+    from pathlib import Path
+
+    def rec(pk, ts):
+        return (
+            '{"table": "SCOTT.EMP", "op_type": "I", "current_ts": '
+            f'"2024-01-01T{ts}:00:00.000000", "after": {{"ID": "{pk}", "NAME": "a"}}}}'
+        )
+
+    dl = str(tmp_path / "dead")
+    wh = str(tmp_path / "wh")
+    for pk, ts in (("1", "10"), ("2", "11")):
+        raw = spark.createDataFrame([(rec(pk, ts),)], "value string")
+        assert sync_batch(spark, raw, wh, dead_letter_dir=dl).dead == 0
+    assert not list(Path(tmp_path).glob("dead/**/*.parquet"))
+    bad = ["not json at all", '{"table": "S.T", "op_type": "I"}']
+    raw = spark.createDataFrame([(line,) for line in [rec("3", "12"), *bad]], "value string")
+    assert sync_batch(spark, raw, wh, dead_letter_dir=dl).dead == 2
+    reasons = {r["raw"]: r["reason"] for r in spark.read.parquet(dl).collect()}
+    assert reasons == {
+        "not json at all": "null_table_or_unparseable",
+        '{"table": "S.T", "op_type": "I"}': "missing_after",
+    }
+
+
 def test_affected_buckets_match_store(spark, fixture_lines):
     """affected_buckets hashes the PRE-fold keys (no fold job) with each
     store's own StateStore._bucket_col, so its sets must equal the buckets
@@ -1034,56 +1062,9 @@ def test_statestore_lookup_point_reads(spark, tmp_path):
     assert store.lookup([]).count() == 0
 
 
-def test_upsert_mid_swap_crash_replay_converges(spark, tmp_path):
-    """S18 recovery claim: the staged bucket swap is atomic per BUCKET,
-    not per batch — a crash mid-swap leaves some buckets new and some
-    old. Checkpoint replay re-merges the same batch; upsert idempotence
-    must converge every bucket to the post-batch state."""
-    import shutil as sh
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.StringType(), False),
-            T.StructField("v", T.StringType(), True),
-        ]
-    )
-    path = str(tmp_path / "st")
-    store = StateStore(spark, path, ["id"], schema, 8)
-    b1 = spark.createDataFrame([(str(i), f"a{i}") for i in range(40)], schema)
-    store.upsert_batch(b1)
-    snapshot = str(tmp_path / "snap")
-    sh.copytree(path, snapshot)
-
-    b2 = spark.createDataFrame(
-        [(str(i), f"b{i}") for i in range(0, 40, 2)] + [("100", "new")], schema
-    )
-    store.upsert_batch(b2)
-    # "crash mid-swap": revert half of the touched buckets to pre-batch2
-    import os
-
-    buckets = sorted(
-        e for e in os.listdir(path) if e.startswith("_bucket=")
-    )
-    for e in buckets[: len(buckets) // 2]:
-        pre = os.path.join(snapshot, e)
-        if os.path.isdir(pre):
-            sh.rmtree(os.path.join(path, e))
-            sh.copytree(pre, os.path.join(path, e))
-
-    # replay the epoch (checkpoint re-delivers the identical batch)
-    store.upsert_batch(b2)
-    got = {r["id"]: r["v"] for r in store.read().collect()}
-    want = {str(i): (f"b{i}" if i % 2 == 0 else f"a{i}") for i in range(40)}
-    want["100"] = "new"
-    assert got == want
-
-
 def test_statestore_rejects_remote_uri(spark, tmp_path):
-    """ADVICE r10: the store's swap/snapshot/purge protocols are
-    os.rename + hardlink based, so a remote URI would make exists()
-    always-False — enrichment joins would silently see an EMPTY dimension
+    """ADVICE r10: the store's commit protocol is os.rename + os.replace
+    based, so a remote URI would make exists() always-False — enrichment joins would silently see an EMPTY dimension
     side while writes kept landing. Fail fast at construction instead."""
     import pytest
     from pyspark.sql import types as T
@@ -1110,9 +1091,10 @@ def _mk_kv_store(spark, path, n_buckets=8):
 
 def test_statestore_rebucket_equivalence(spark, tmp_path):
     """VERDICT r10 #2: rebucket migrates the store to a new hash geometry
-    with identical contents, point lookups keep working, the persisted
-    meta makes STALE call-site n_buckets arguments harmless, and upserts
-    continue at the new geometry."""
+    with identical contents, point lookups keep working, the geometry in
+    the manifest makes STALE call-site n_buckets arguments harmless, a
+    handle opened before the rebucket cannot write at the old geometry,
+    and upserts continue at the new geometry."""
     import os
 
     path = str(tmp_path / "st")
@@ -1121,24 +1103,26 @@ def test_statestore_rebucket_equivalence(spark, tmp_path):
         spark.createDataFrame([(str(i), f"v{i}") for i in range(300)], schema)
     )
     before = sorted(tuple(r) for r in store.read().collect())
+    opened_before, _ = _mk_kv_store(spark, path, n_buckets=8)
 
     store.rebucket(32)
     assert store.n_buckets == 32
-    buckets = {
-        int(e.split("=")[1])
-        for e in os.listdir(path)
-        if e.startswith("_bucket=")
-    }
+    # a handle opened before the rebucket would stage rows hashed modulo 8
+    # into the 32-bucket store, where lookups miss them: it is refused
+    with pytest.raises(ValueError, match="staged at 8 buckets"):
+        opened_before.upsert_batch(spark.createDataFrame([("7", "LOST")], schema))
+    manifest = store._manifest()
+    assert manifest["n_buckets"] == 32
+    buckets = {int(b) for b in manifest["buckets"]}
     assert buckets <= set(range(32)) and len(buckets) > 8
     assert sorted(tuple(r) for r in store.read().collect()) == before
     got = {r["id"]: r["v"] for r in store.lookup(["7", "299", "nope"]).collect()}
     assert got == {"7": "v7", "299": "v299"}
-    assert not os.path.exists(path + ".__rebucket_old__")
-    assert not os.path.exists(os.path.join(path, "_REBUCKET_COMMIT"))
+    assert sorted(os.listdir(tmp_path)) == ["st"]
 
     # a handle opened with the PRE-migration constructor default must
-    # adopt the stored geometry (meta wins) — else its lookups would
-    # prune with the wrong modulus and miss rows
+    # adopt the stored geometry (the manifest wins) — else its lookups
+    # would prune with the wrong modulus and miss rows
     stale, _ = _mk_kv_store(spark, path, n_buckets=8)
     assert stale.n_buckets == 32
     got = {r["id"]: r["v"] for r in stale.lookup(["123"]).collect()}
@@ -1152,60 +1136,6 @@ def test_statestore_rebucket_equivalence(spark, tmp_path):
     want = {str(i): f"v{i}" for i in range(300)} | {"7": "NEW", "1000": "x"}
     assert {r["id"]: r["v"] for r in stale.read().collect()} == want
     assert stale.rebucket(4) is None  # no-op at current geometry
-
-
-def test_statestore_rebucket_crash_replay(spark, tmp_path, monkeypatch):
-    """Every crash window of the rebucket swap heals at the next handle
-    construction: before the commit marker the migration vanishes; after
-    it the swap completes — contents and point lookups intact either way."""
-    import os
-
-    from kafkatosparktokudu_spark.operators import merge as merge_mod
-
-    path = str(tmp_path / "st")
-    store, schema = _mk_kv_store(spark, path, n_buckets=8)
-    store.upsert_batch(
-        spark.createDataFrame([(str(i), f"v{i}") for i in range(120)], schema)
-    )
-    before = sorted(tuple(r) for r in store.read().collect())
-
-    # window A: staged write never finished (no marker) -> rolled back
-    os.makedirs(path + ".__rebucket_16__/_bucket=0", exist_ok=True)
-    healed, _ = _mk_kv_store(spark, path, n_buckets=8)
-    assert not os.path.exists(path + ".__rebucket_16__")
-    assert healed.n_buckets == 8
-    assert sorted(tuple(r) for r in healed.read().collect()) == before
-
-    # windows B and C: crash at the 1st / 2nd os.rename of the swap
-    for fail_at in (0, 1):
-        st, _ = _mk_kv_store(spark, path)
-        n_before = st.n_buckets
-        real_rename, calls = os.rename, []
-
-        def boom(src, dst, _real=real_rename, _calls=calls, _k=fail_at):
-            if len(_calls) == _k:
-                raise OSError("simulated crash mid-swap")
-            _calls.append((src, dst))
-            return _real(src, dst)
-
-        monkeypatch.setattr(merge_mod.os, "rename", boom)
-        try:
-            st.rebucket(n_before * 2)
-            raise AssertionError("expected simulated crash")
-        except OSError:
-            pass
-        finally:
-            monkeypatch.setattr(merge_mod.os, "rename", real_rename)
-
-        recovered, _ = _mk_kv_store(spark, path, n_buckets=8)
-        # the marker was already committed in both windows -> swap completes
-        assert recovered.n_buckets == n_before * 2
-        assert sorted(tuple(r) for r in recovered.read().collect()) == before
-        got = {r["id"]: r["v"] for r in recovered.lookup(["42"]).collect()}
-        assert got == {"42": "v42"}
-        assert not os.path.exists(path + ".__rebucket_old__")
-        for e in os.listdir(os.path.dirname(path)):
-            assert "__rebucket_" not in e, e
 
 
 def test_purge_soft_deleted_retention(spark, tmp_path):
@@ -1239,10 +1169,12 @@ def test_purge_soft_deleted_retention(spark, tmp_path):
     assert {r["id"] for r in store.lookup(["1", "2", "3"]).collect()} == {"1", "3"}
 
 
-def test_snapshot_isolated_from_concurrent_merge(spark, tmp_path):
-    """A snapshot pinned BEFORE an upsert keeps serving the pre-merge
-    version even though the swap deleted the original files (hardlinks
-    keep the bytes alive); live read() sees the post-merge state."""
+def test_read_planned_before_a_write_returns_the_old_version(spark, tmp_path):
+    """A frame reads the store version it was planned on: ``read()`` and
+    ``lookup()`` built BEFORE an upsert that rewrites every bucket and a
+    rebucket return the pre-write rows when collected after both, while a
+    fresh ``read()`` returns the post-write rows. With buckets replaced in
+    place, both early frames failed on a deleted file."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1251,18 +1183,190 @@ def test_snapshot_isolated_from_concurrent_merge(spark, tmp_path):
             T.StructField("v", T.StringType(), True),
         ]
     )
+    filler = [str(i) for i in range(10, 40)]
     store = StateStore(spark, str(tmp_path / "snap"), ["id"], schema, 4)
-    store.upsert_batch(spark.createDataFrame([("1", "old"), ("2", "x")], schema))
-    with store.snapshot() as snap:
-        store.upsert_batch(
-            spark.createDataFrame([("1", "new"), ("3", "y")], schema)
-        )
-        got_snap = {r["id"]: r["v"] for r in snap.collect()}
-        got_live = {r["id"]: r["v"] for r in store.read().collect()}
-        assert got_snap == {"1": "old", "2": "x"}
-        assert got_live == {"1": "new", "2": "x", "3": "y"}
-    with store.snapshot() as fresh:
-        assert {r["id"]: r["v"] for r in fresh.collect()} == got_live
+    store.upsert_batch(
+        spark.createDataFrame([("1", "old"), ("2", "x")] + [(k, "a") for k in filler], schema)
+    )
+    df = store.read()
+    lk = store.lookup(["1", "2"])
+    batch = spark.createDataFrame(
+        [("1", "new"), ("3", "y")] + [(k, "b") for k in filler], schema
+    )
+    assert sorted(store.buckets_of(batch)) == [0, 1, 2, 3]
+    store.upsert_batch(batch)
+    store.rebucket(8)
+    got_old = {r["id"]: r["v"] for r in df.collect()}
+    assert got_old == {"1": "old", "2": "x"} | {k: "a" for k in filler}
+    assert {r["id"]: r["v"] for r in lk.collect()} == {"1": "old", "2": "x"}
+    got_live = {r["id"]: r["v"] for r in store.read().collect()}
+    assert got_live == {"1": "new", "2": "x", "3": "y"} | {k: "b" for k in filler}
+    fresh, _ = _mk_kv_store(spark, store.path, n_buckets=4)
+    assert fresh.n_buckets == 8
+    assert {r["id"]: r["v"] for r in fresh.read().collect()} == got_live
+
+
+class _Crash(Exception):
+    """The injected crash of a store write."""
+
+
+def _write_steps() -> dict:
+    """One store write, step by step: the staging job, each file move into
+    a bucket directory, the manifest publish, each removal of the retire
+    step — as (owner, function, index of the argument holding the path it
+    acts on)."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    return {
+        "stage": (DataFrameWriter, "parquet", 1),
+        "move": (os, "rename", 1),
+        "publish": (os, "replace", 1),
+        "retire": (os, "remove", 0),
+    }
+
+
+def _inject(monkeypatch, path: str, crash_at: tuple[str, int] | None = None):
+    """Count every write step acting on the store at ``path`` (or its
+    staging sibling); with ``crash_at=(step, k)`` the k-th call of that
+    step raises ``_Crash`` (the staging job first writes its files).
+    Returns the per-step call counts, filled in as the write runs."""
+    steps = _write_steps()
+    counts = dict.fromkeys(steps, 0)
+    for step, (owner, fn, arg) in steps.items():
+        real = getattr(owner, fn)
+
+        def wrapped(*args, _real=real, _step=step, _arg=arg, **kw):
+            if not str(args[_arg]).startswith(path):
+                return _real(*args, **kw)
+            k = counts[_step]
+            counts[_step] += 1
+            if crash_at == (_step, k):
+                if _step == "stage":
+                    _real(*args, **kw)
+                raise _Crash(f"{_step} #{k}")
+            return _real(*args, **kw)
+
+        monkeypatch.setattr(owner, fn, wrapped)
+    return counts
+
+
+def _files_unnamed_or_missing(path: str) -> set[str]:
+    """Data files on disk that no kept manifest names, and named files
+    that are not on disk."""
+    import os
+
+    log = os.path.join(path, "_manifest")
+    named = set()
+    for m in os.listdir(log):
+        if m.endswith(".json"):
+            with open(os.path.join(log, m), encoding="utf-8") as fh:
+                named |= {f for fs in json.load(fh)["buckets"].values() for f in fs}
+    on_disk = {
+        f"{d}/{f}"
+        for d in os.listdir(path) if d.startswith("_bucket=")
+        for f in os.listdir(os.path.join(path, d))
+    }
+    return on_disk ^ named
+
+
+@pytest.fixture(scope="module")
+def crash_template(spark, tmp_path_factory):
+    """A 2-bucket key-value store holding ids 0..39 ('a<i>'), written in
+    as many versions as the store retains, so the next write's retire step
+    deletes files."""
+    from kafkatosparktokudu_spark.operators import merge as merge_mod
+
+    path = str(tmp_path_factory.mktemp("crash") / "st")
+    store, schema = _mk_kv_store(spark, path, n_buckets=2)
+    n = merge_mod._KEEP_VERSIONS + 1
+    for c in range(n):
+        store.upsert_batch(spark.createDataFrame(
+            [(str(i), f"a{i}") for i in range(40) if i % n == c], schema
+        ))
+    return path
+
+
+@pytest.mark.parametrize("op", ["upsert_batch", "rebucket"])
+def test_store_write_crash_at_every_step_converges(
+    spark, tmp_path, monkeypatch, crash_template, op
+):
+    """A crash at every step of a store write — the staging job, each file
+    move, the manifest publish, each retire removal — leaves the store
+    reading as exactly the old version (before the publish) or the new one
+    (after it), never a mix; replaying the write on a new handle converges
+    to a plain-dict model of the rows, lookups included, and the next
+    write deletes every file the crashed one left behind. ``upsert_batch``
+    rewrites half the keys and adds one; ``rebucket`` moves the store from
+    2 to 4 buckets with its contents unchanged."""
+    import shutil
+
+    old = {str(i): f"a{i}" for i in range(40)}
+    if op == "upsert_batch":
+        b2 = [(str(i), f"b{i}") for i in range(0, 40, 2)] + [("100", "new")]
+        new = old | dict(b2)
+        geometry = (2, 2)
+    else:
+        new = old
+        geometry = (2, 4)
+
+    def write(store):
+        if op == "upsert_batch":
+            store.upsert_batch(spark.createDataFrame(b2, store.schema))
+        else:
+            store.rebucket(4)
+
+    def rows(store):
+        return {r["id"]: r["v"] for r in store.read().collect()}
+
+    path = str(tmp_path / "clean")
+    shutil.copytree(crash_template, path)
+    store, _ = _mk_kv_store(spark, path, n_buckets=2)
+    counts = _inject(monkeypatch, path)
+    write(store)
+    monkeypatch.undo()
+    assert all(counts.values()), counts  # every step ran in a clean write
+    assert rows(store) == new
+
+    for step, n in counts.items():
+        for k in range(n):
+            path = str(tmp_path / f"{step}{k}")
+            shutil.copytree(crash_template, path)
+            store, _ = _mk_kv_store(spark, path, n_buckets=2)
+            _inject(monkeypatch, path, crash_at=(step, k))
+            with pytest.raises(_Crash):
+                write(store)
+            monkeypatch.undo()
+
+            published = step == "retire"
+            restarted, schema = _mk_kv_store(spark, path, n_buckets=2)
+            assert restarted.n_buckets == geometry[published], (step, k)
+            assert rows(restarted) == (new if published else old), (step, k)
+
+            write(restarted)  # the replayed epoch
+            assert restarted.n_buckets == geometry[1]
+            assert rows(restarted) == new, (step, k)
+            got = {r["id"]: r["v"] for r in restarted.lookup(["42", "2", "100", "nope"]).collect()}
+            assert got == {i: new[i] for i in ("42", "2", "100") if i in new}, (step, k)
+
+            restarted.upsert_batch(spark.createDataFrame([("7", "c7"), ("200", "z")], schema))
+            assert rows(restarted) == new | {"7": "c7", "200": "z"}, (step, k)
+            assert not _files_unnamed_or_missing(path), (step, k)
+
+
+def test_statestore_refuses_bucket_dirs_without_manifest(spark, tmp_path):
+    """A directory holding bucket directories but no manifest log (the
+    layout from before manifests) must raise a ValueError naming it, not
+    read as an empty store."""
+    import os
+    import re
+
+    path = tmp_path / "legacy"
+    os.makedirs(path / "_bucket=0")
+    (path / "_bucket=0" / "part-00000.parquet").write_bytes(b"")
+    with pytest.raises(ValueError, match=re.escape(str(path))):
+        _mk_kv_store(spark, str(path))
 
 
 def test_statestore_schema_evolution_across_restart(spark, tmp_path):
@@ -1505,7 +1609,6 @@ def test_upsert_many_staged_write_runs_on_every_core(spark, tmp_path):
     min(16, defaultParallelism) write tasks, each bucket still one file.
     A column-only repartition let AQE coalesce the small shuffle to one
     task that wrote every bucket directory in turn."""
-    import os
     import uuid
 
     from pyspark.sql import types as T
@@ -1536,9 +1639,9 @@ def test_upsert_many_staged_write_runs_on_every_core(spark, tmp_path):
     write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
     write_stage = tracker.getStageInfo(max(write_job.stageIds))
     assert write_stage.numTasks == min(16, sc.defaultParallelism)
-    for b in range(16):
-        d = os.path.join(store.path, f"_bucket={b}")
-        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1
+    manifest = store._manifest()
+    assert sorted(int(b) for b in manifest["buckets"]) == list(range(16))
+    assert all(len(files) == 1 for files in manifest["buckets"].values())
     got = {r["id"]: r["v"] for r in store.read().collect()}
     assert got == {
         **{str(i): "a" for i in range(200)},
