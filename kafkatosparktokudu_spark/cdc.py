@@ -44,7 +44,7 @@ from .operators.ogg import (
     typed_key,
     with_time_stamp,
 )
-from .operators.rollup import post_merge_apply, pre_merge_delta, rollup_schema
+from .operators.rollup import refresh_rollup, rollup_schema
 
 # the repository's sample OGG change log, next to the package
 DEFAULT_FIXTURE = os.path.join(
@@ -174,7 +174,8 @@ class BatchMetrics:
     ``phases``: wall seconds per ``sync_batch`` phase (``PHASES``) —
     ``fill`` (the job that reads the source into the cached envelope and
     counts it), ``buckets`` (the affected-bucket job), ``merge`` (the
-    staged write and commit), ``rollups`` (rollup-view deltas and applies).
+    staged write and commit), ``rollups`` (each rollup view's version diff
+    and commit, after the merge).
     Not part of the tbLog block."""
 
     total: int
@@ -236,11 +237,15 @@ def sync_batch(
     ``rdd.isEmpty`` (S5, ConsumerMain.scala:94), without a second read of
     the source.
 
-    ``rollups``: aggregate views maintained in the same epoch by deltas,
-    through operators/rollup.py's one protocol (``pre_merge_delta`` over
-    the batch's affected buckets, the merge, ``post_merge_apply``). With
-    ``epoch_id`` (the foreachBatch batch id, wired by the streaming
-    wrapper) the views are exactly-once under checkpoint replay.
+    ``rollups``: aggregate views maintained in the same batch by deltas:
+    after the merge, operators/rollup.py's ``refresh_rollup`` diffs each
+    view's base between the version the view reflects and the newest one.
+    The views are exactly-once under replay and after a crash between the
+    merge and a view commit; the base tables are simply re-merged on
+    replay (idempotent upserts).
+
+    ``epoch_id`` (the foreachBatch batch id) only names the batch's Spark
+    jobs (``cdc.<phase> epoch=<id>``).
     """
     catalog = catalog or default_catalog()
     for spec in rollups or []:
@@ -332,25 +337,7 @@ def sync_batch(
             dead_fut = (
                 pool.submit(_dead_letters) if dead_letter_dir and metrics.dead else None
             )
-            views = [
-                (spec, spec.store(spark, warehouse_dir, n_buckets))
-                for spec in rollups or []
-            ]
             affected = affected_fut.result()
-            with phase("rollups"):
-                deltas = [
-                    pre_merge_delta(
-                        spark,
-                        stores[spec.table],
-                        batches[spec.table],
-                        affected.get(spec.table, []),
-                        view,
-                        spec.group_col,
-                        spec.sum_col,
-                        epoch_id,
-                    )
-                    for spec, view in views
-                ]
             # All tables' MERGEs land in ONE combined staged write: with
             # the affected sets precomputed, upsert_many fuses every fold,
             # merge join and the partitioned write into a single Spark job.
@@ -366,8 +353,14 @@ def sync_batch(
                     affected=affected,
                 )
             with phase("rollups"):
-                for (spec, view), delta in zip(views, deltas):
-                    post_merge_apply(spark, view, delta, spec.group_col, epoch_id)
+                for spec in rollups or []:
+                    refresh_rollup(
+                        spark,
+                        stores[spec.table],
+                        spec.store(spark, warehouse_dir, n_buckets),
+                        spec.group_col,
+                        spec.sum_col,
+                    )
             if dead_fut is not None:
                 dead_fut.result()
         return metrics

@@ -66,6 +66,11 @@ some stores at the new version; recovery relies on checkpoint replay +
 upsert idempotence (the reference's model: offsets persisted after
 writes, ConsumerMain.scala:128-151, duplicates absorbed by upsert).
 
+A manifest may carry one more key, ``source_version``: a rollup view
+(operators/rollup.py) records there the version of its base store it
+reflects, in the same publish as its rows. Base-store manifests carry no
+such key.
+
 Retention: a frame stays readable for ``_KEEP_VERSIONS`` later commits of
 its store. A file's age counts from the version that superseded it, not
 the one that wrote it: a file this commit replaced is still what readers
@@ -91,12 +96,12 @@ _BUCKET = "_bucket"
 _TABLE = "_table"
 _MANIFESTS = "_manifest"
 # Superseded versions a store keeps readable. A frame is planned against
-# one version but opens its files only when it runs. The longest such gap
-# here is one later commit: a rollup's ``pre`` frame is evaluated after
-# its base store's merge, and a read beside the stream queues behind at
-# most one merge (up to 3.5 s against a 5 s trigger). Three versions give
-# that a threefold margin, for at most three superseded copies of each
-# rewritten bucket on disk.
+# one version but opens its files only when it runs. A rollup view reads
+# the base version it reflects after the merge that superseded it (two
+# merges, when a crash between the merge and the view commit is
+# replayed), and a read beside the stream queues behind at most one merge
+# (up to 3.5 s against a 5 s trigger). Three versions cover both, for at
+# most three superseded copies of each rewritten bucket on disk.
 _KEEP_VERSIONS = 3
 
 
@@ -209,13 +214,23 @@ class StateStore:
             r[0] for r in df.select(self._bucket_col()).distinct().collect()
         ]
 
-    def _manifest(self) -> dict:
-        """The newest published manifest: ``{"version", "n_buckets",
-        "buckets": {"<b>": [file path relative to the store, ...]}}``;
-        version 0 with no buckets for a store never written."""
+    def _manifest(self, version: int | None = None) -> dict:
+        """The newest published manifest, or the one of ``version``:
+        ``{"version", "n_buckets", "buckets": {"<b>": [file path relative
+        to the store, ...]}}``; version 0 with no buckets for a store never
+        written and for ``version`` 0, the empty version every store starts
+        at. A ``version`` whose manifest was retired raises ``ValueError``:
+        its files may be gone."""
         log = os.path.join(self.path, _MANIFESTS)
         versions = _versions(log)
-        if versions:
+        if version:
+            if version not in versions:
+                raise ValueError(
+                    f"{self.path}: version {version} is no longer kept "
+                    f"(kept: {versions})"
+                )
+            return _load_manifest(log, version)
+        if versions and version is None:
             return _load_manifest(log, versions[-1])
         if (
             os.path.isdir(self.path)
@@ -265,15 +280,16 @@ class StateStore:
     def read_buckets(self, buckets: list[int]) -> DataFrame:
         """State rows of the given buckets only (only their files are
         scanned, bucket column dropped) — the shared read recipe of the
-        merge path and the rollup pre/post reads."""
+        merge path, the rollup view update and the SCD2 operator."""
         return self._scan(self._manifest(), buckets).drop(_BUCKET)
 
     def lookup(self, keys: list[tuple] | list) -> DataFrame:
         """Point lookup by primary key — the Kudu read pattern the
         reference's consumers use downstream (openTable + key scan).
-        Computes the keys' buckets driver-side with the same hash the
-        writer used, scans ONLY those buckets' files, then filters to the
-        exact keys. Cost is O(|keys| buckets) regardless of table size —
+        Hashes the keys at the geometry of the manifest it reads (a handle
+        opened before another handle's ``rebucket`` still finds every
+        key), scans ONLY those buckets' files, then filters to the exact
+        keys. Cost is O(|keys| buckets) regardless of table size —
         the point-read property a keyed store owes its users.
 
         ``keys``: list of key tuples (or scalars for single-column keys),
@@ -293,8 +309,9 @@ class StateStore:
         from ..functions.localframe import local_frame
 
         kdf = local_frame(self.spark, norm_keys, key_schema)
+        hit = kdf.select(self._bucket_col(manifest["n_buckets"])).distinct()
         return (
-            self._scan(manifest, self.buckets_of(kdf))
+            self._scan(manifest, [r[0] for r in hit.collect()])
             .drop(_BUCKET)
             .join(F.broadcast(kdf), self.key_cols, "left_semi")
         )
@@ -414,12 +431,14 @@ def _stage_and_commit(
     staged: DataFrame,
     targets: list[tuple[StateStore, list[int]]],
     n_buckets: int | None = None,
+    source_version: int | None = None,
 ) -> None:
     """The one write protocol (module docstring). ``staged`` carries
     ``_table`` (an index into ``targets``) and ``_bucket``; each target
     store's listed buckets are replaced wholesale by its staged rows.
     ``n_buckets`` (``rebucket``'s one target): the rows are staged at this
-    geometry, and the new version holds them alone.
+    geometry, and the new version holds them alone. ``source_version``
+    goes into every new manifest (``upsert_many``).
 
     Staged under the first store's sibling ``{path}.__staging__``, so the
     moves stay on that store's filesystem."""
@@ -468,14 +487,15 @@ def _stage_and_commit(
         shutil.rmtree(staging, ignore_errors=True)
         raise ValueError(f"{store.path}: {problem}")
     for src, (store, buckets), old in zip(srcs, targets, olds):
-        _publish(store, src, buckets, old, n_buckets)
+        _publish(store, src, buckets, old, n_buckets, source_version)
     for store, _ in targets:
         _retire(store)
     shutil.rmtree(staging, ignore_errors=True)
 
 
 def _publish(
-    store: StateStore, src: str, buckets: list[int], old: dict, n_buckets: int | None
+    store: StateStore, src: str, buckets: list[int], old: dict,
+    n_buckets: int | None, source_version: int | None,
 ) -> None:
     """Move ``src``'s staged bucket files into ``store`` under the next
     version's names, then publish that version's manifest."""
@@ -498,16 +518,16 @@ def _publish(
         for f in names:
             os.rename(os.path.join(src, entry, f), os.path.join(dst, f"v{version}-{f}"))
         live[entry.split("=", 1)[1]] = [f"{entry}/v{version}-{f}" for f in names]
+    manifest = {
+        "version": version,
+        "n_buckets": n_buckets or store.n_buckets,
+        "buckets": live,
+    }
+    if source_version is not None:
+        manifest["source_version"] = source_version
     tmp = os.path.join(log, f".{version}.json.tmp")
     with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "version": version,
-                "n_buckets": n_buckets or store.n_buckets,
-                "buckets": live,
-            },
-            fh,
-        )
+        json.dump(manifest, fh)
     os.replace(tmp, os.path.join(log, f"{version}.json"))
 
 
@@ -559,6 +579,7 @@ def upsert_many(
     merges: list[tuple[StateStore, DataFrame]],
     affected: dict[str, list[int]] | None = None,
     replace_rows: bool = False,
+    source_version: int | None = None,
 ) -> None:
     """MERGE several stores' folded batches with ONE staged write — the
     only merge path (``StateStore.upsert_batch`` is a one-store call).
@@ -588,6 +609,11 @@ def upsert_many(
     null-RLE, ~free in parquet); reads prune to each store's declared
     schema. Stores declaring one column name with different types cannot
     share a union, so they take one call each (same semantics, more jobs).
+
+    ``source_version``, when given, goes into each store's new manifest (a
+    rollup view's record of the base version it reflects). With
+    ``affected`` listing no bucket the call still commits: the new version
+    has the old rows and the new ``source_version``.
     """
     merges = [(s, b) for s, b in merges if b is not None]
     if not merges:
@@ -595,7 +621,7 @@ def upsert_many(
     stores = [s for s, _ in merges]
     if not _schemas_compatible(stores):
         for m in merges:
-            upsert_many(spark, [m], affected, replace_rows)
+            upsert_many(spark, [m], affected, replace_rows, source_version)
         return
     batches = [b.select([F.col(f.name) for f in s.schema.fields]) for s, b in merges]
     tagged = None
@@ -633,7 +659,10 @@ def upsert_many(
                 batch.withColumn(_BUCKET, store._bucket_col())
                 .withColumn(_TABLE, F.lit(i))
             )
-        _stage_and_commit(_union_by_name(merged), list(zip(stores, buckets)))
+        _stage_and_commit(
+            _union_by_name(merged), list(zip(stores, buckets)),
+            source_version=source_version,
+        )
     finally:
         if tagged is not None:
             tagged.unpersist()

@@ -2,18 +2,17 @@
 dashboard" layer the reference's users build by hand downstream of Kudu
 (full re-aggregation per refresh). Here the rollup is maintained by DELTAS:
 
-    delta(group) = contrib(post-merge rows of the batch's keys)
-                 − contrib(pre-merge rows of the batch's keys)
+    delta(group) = contrib(base rows now) − contrib(base rows the view reflects)
     rollup(group) += delta(group)
 
-so refresh cost tracks the micro-batch, never the table. Handles the three
-classic subtleties of incremental view maintenance:
+so refresh cost tracks the buckets the base rewrote, never the table.
+Handles the three classic subtleties of incremental view maintenance:
 
 - a key MOVING groups (dept change) — its old group gets a negative
-  contribution from the pre-merge row, the new group a positive one;
+  contribution from the old row, the new group a positive one;
 - soft deletes — ``delete_state='1'`` rows contribute nothing, so a delete
   subtracts the row's prior contribution and adds nothing back;
-- resurrection / partial updates — the post-merge row carries the full
+- resurrection / partial updates — the merged row carries the full
   coalesced current values, so contributions are always whole-row.
 
 Only invertible aggregates (count, sum — and anything derived from them:
@@ -25,55 +24,49 @@ aggregation agree bit-for-bit (float addition is not associative; decimal
 addition is) — the ``cdc_dept_rollup`` query hash-checks exactly that
 equivalence against a from-scratch DuckDB fold.
 
-ONE PROTOCOL, two steps around the base merge, shared by
-``cdc.sync_batch`` and ``sync_with_rollup``:
+ONE PROTOCOL, the version diff, run AFTER the base merge by both
+``cdc.sync_batch`` and ``sync_with_rollup`` (``refresh_rollup``). Every
+StateStore write publishes a numbered manifest (operators/merge.py), and
+the view's own manifest records ``source_version``, the base version it
+reflects:
 
-1. ``pre_merge_delta`` — before the merge, pin ``pre`` (the state rows of
-   the batch's buckets) and derive the delta with the one formula
-   ``rollup_delta(pre, merge_upserts(pre, batch))``: the post-merge rows
-   are computable without touching disk. Whole buckets are exact, because
-   a row the batch does not touch appears identically in ``pre`` and
-   ``post`` and cancels (DECIMAL, so bit-exact).
-2. ``post_merge_apply`` — after the merge, ``maintain_rollup`` the delta,
-   then ``clear_pending``.
+1. ``new`` is the base's newest manifest, ``old`` the one at the view's
+   source version (the empty version 0 for a view never written, so a view
+   created over a non-empty base starts from all of it);
+2. if ``new`` is the source version, the view is current: stop;
+3. the buckets whose file lists differ between ``old`` and ``new`` hold
+   every changed row (file names are version-unique, so after a rebucket
+   every bucket differs). The delta is ``rollup_delta`` of those buckets
+   at ``old`` and at ``new``; an unchanged row in them appears on both
+   sides and cancels (DECIMAL, so bit-exact);
+4. ``maintain_rollup`` commits the view's rows and ``source_version =
+   new`` in one manifest publish.
 
-With an ``epoch`` (Structured Streaming's ``foreachBatch`` batch id) the
-view is exactly-once under checkpoint replay:
+The view is exactly-once whatever happened to the base in between, with
+or without a streaming batch id: a crash between the base merge and the
+view commit leaves the source version behind, so the next refresh counts
+that merge; a replayed batch re-merges the base (idempotent upserts, the
+reference's model), and the diff of identical rows is zero; a base write
+made without the view is counted by the next refresh; a checkpoint reset
+changes nothing, as store versions never restart. The source version
+must still be kept by the base (``_KEEP_VERSIONS`` later commits), or
+the refresh raises ``ValueError`` rather than guess.
 
-- **Write-ahead pending delta.** Step 1 persists the delta under
-  ``{view}__pending/epoch={N}`` with an atomic directory rename, and a
-  replayed epoch reuses the stored delta instead of recomputing it (after
-  a crash past the base merge, ``pre`` would already hold the merged rows
-  and the recomputed delta would be zero).
-- **Per-group epoch stamp.** Each view row carries ``last_epoch``; an
-  apply skips any group whose stored epoch is already >= the incoming
-  one. Because a StateStore write commits the whole view at once and the
-  epoch check is per GROUP, a crash mid-apply replays cleanly: a view
-  that committed skips every group, one that did not gets the delta —
-  no double counting, no loss.
-
-``epoch=None`` (ad-hoc batch backfills) runs the same order and formula
-without the pending write and without the guard: at-most-once on a crash
-between the two writes, and the caller owns re-derivation (one groupBy
-over the base table).
-
-Scale shape: contributions are two hash aggs over the batch's buckets
-(pinned once, before the merge), the delta is group-keyed
-(tiny — its durable write is one small parquet file), and the rollup
-update reads/rewrites only the delta's groups' buckets (partition-pruned).
+Scale shape: contributions are two hash aggs over the changed buckets,
+the delta is group-keyed (tiny), and the rollup update reads/rewrites
+only the delta's groups' buckets (partition-pruned).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import DELETE_STATE
-from .merge import StateStore, merge_upserts, upsert_many
+from .merge import StateStore, upsert_many
 
 # Exact accumulation type for the maintained sum (DECIMAL addition is
 # associative, so incremental == from-scratch regardless of batch split).
@@ -81,17 +74,12 @@ _SUM_DEC = "decimal(22,2)"
 
 
 def rollup_schema(group_field: T.StructField) -> T.StructType:
-    """Schema of the maintained view: (group, n_alive, sum_dec, last_epoch).
-
-    ``last_epoch`` is the replay-idempotency stamp (highest epoch applied
-    to the group; null when maintained without epochs) — readers project
-    it away."""
+    """Schema of the maintained view: (group, n_alive, sum_dec)."""
     return T.StructType(
         [
             group_field,
             T.StructField("n_alive", T.LongType(), True),
             T.StructField("sum_dec", T.DecimalType(22, 2), True),
-            T.StructField("last_epoch", T.LongType(), True),
         ]
     )
 
@@ -123,9 +111,9 @@ def _contrib(rows: DataFrame, group_col: str, sum_col: str, sign: int) -> DataFr
 def rollup_delta(
     pre: DataFrame, post: DataFrame, group_col: str, sum_col: str
 ) -> DataFrame:
-    """Per-group (d_n, d_sum) between the pre- and post-merge state rows
-    of the batch's keys. Extra rows are harmless when they appear
-    identically on both sides (they cancel), so whole buckets will do."""
+    """Per-group (d_n, d_sum) between two versions of the base rows that
+    changed. Extra rows are harmless when they appear identically on both
+    sides (they cancel), so whole buckets will do."""
     d = _contrib(post, group_col, sum_col, +1).unionByName(
         _contrib(pre, group_col, sum_col, -1)
     )
@@ -135,172 +123,80 @@ def rollup_delta(
     )
 
 
-# -- write-ahead pending delta (durable across a crash between the base
-#    merge and the rollup apply) --------------------------------------------
-
-
-def _pending_dir(rollup: StateStore) -> str:
-    return rollup.path.rstrip("/") + "__pending"
-
-
-def pending_path(rollup: StateStore, epoch: int) -> str:
-    return os.path.join(_pending_dir(rollup), f"epoch={epoch}")
-
-
-def write_pending(delta: DataFrame, rollup: StateStore, epoch: int) -> None:
-    """Durably stage the epoch's delta BEFORE the base merge. The write
-    lands in a temp dir and is published with one atomic directory rename
-    (on HDFS/object stores this becomes FileSystem.rename / a commit
-    marker)."""
-    tmp = pending_path(rollup, epoch) + ".__tmp__"
-    shutil.rmtree(tmp, ignore_errors=True)
-    delta.write.mode("overwrite").parquet(tmp)
-    final = pending_path(rollup, epoch)
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(tmp, final)
-
-
-def read_pending(
-    spark: SparkSession, rollup: StateStore, epoch: int, group_field: T.StructField
-) -> DataFrame | None:
-    """The stored delta for ``epoch``, or None if absent/incomplete."""
-    p = pending_path(rollup, epoch)
-    if not os.path.isdir(p) or not os.path.isfile(os.path.join(p, "_SUCCESS")):
-        return None
-    schema = T.StructType(
-        [
-            group_field,
-            T.StructField("d_n", T.LongType(), True),
-            T.StructField("d_sum", T.DecimalType(22, 2), True),
-        ]
-    )
-    return spark.read.schema(schema).parquet(p)
-
-
-def clear_pending(rollup: StateStore, epoch: int) -> None:
-    """Drop the applied epoch's delta plus any OLDER leftovers (an epoch
-    below the current one has been fully committed — otherwise the
-    checkpoint would replay it, not its successor)."""
-    root = _pending_dir(rollup)
-    if not os.path.isdir(root):
-        return
-    for entry in os.listdir(root):
-        try:
-            e = int(entry.split("=", 1)[1].removesuffix(".__tmp__"))
-        except (IndexError, ValueError):
-            continue
-        if e <= epoch:
-            shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-
-
 def maintain_rollup(
     spark: SparkSession,
     rollup: StateStore,
     delta: DataFrame,
     group_col: str,
-    epoch: int | None = None,
+    source_version: int,
 ) -> None:
-    """Apply a delta to the maintained view: rollup[group] += delta.
+    """Apply a delta to the maintained view, rollup[group] += delta, and
+    record ``source_version`` (the base version the result reflects) in
+    the same commit.
 
     Only the delta's groups' BUCKETS are read and rewritten (the delta is
     group-keyed and tiny, so ``buckets_of`` is one small job; untouched
-    groups never move). With ``epoch`` set, groups already
-    stamped at >= epoch keep their stored values — the per-group half of
-    the exactly-once protocol described in the module docstring. Zero-alive
-    groups keep their row (n_alive=0) as an audit trail — readers filter
-    ``n_alive > 0`` for the live view.
+    groups never move). An empty delta still commits, so the source
+    version advances. Zero-alive groups keep their row (n_alive=0) as an
+    audit trail — readers filter ``n_alive > 0`` for the live view.
     """
     delta = delta.persist()
     try:
-        cur = rollup.read_buckets(rollup.buckets_of(delta)).select(
+        buckets = rollup.buckets_of(delta)
+        cur = rollup.read_buckets(buckets).select(
             F.col(group_col),
             F.col("n_alive").alias("_cur_n"),
             F.col("sum_dec").alias("_cur_sum"),
-            F.col("last_epoch").alias("_cur_epoch"),
-        )
-        applied = (
-            F.lit(True)
-            if epoch is None
-            else F.col("_cur_epoch").isNull() | (F.col("_cur_epoch") < F.lit(epoch))
         )
         updated = delta.join(cur, group_col, "left").select(
             F.col(group_col),
-            F.when(
-                applied, F.coalesce(F.col("_cur_n"), F.lit(0)) + F.col("d_n")
-            )
-            .otherwise(F.col("_cur_n"))
-            .alias("n_alive"),
-            F.when(
-                applied,
-                (
-                    F.coalesce(F.col("_cur_sum"), F.lit(0).cast(_SUM_DEC))
-                    + F.col("d_sum")
-                ).cast(_SUM_DEC),
-            )
-            .otherwise(F.col("_cur_sum"))
+            (F.coalesce(F.col("_cur_n"), F.lit(0)) + F.col("d_n")).alias("n_alive"),
+            (F.coalesce(F.col("_cur_sum"), F.lit(0).cast(_SUM_DEC)) + F.col("d_sum"))
             .cast(_SUM_DEC)
             .alias("sum_dec"),
-            (
-                F.lit(None).cast("long")
-                if epoch is None
-                else F.when(applied, F.lit(epoch)).otherwise(F.col("_cur_epoch"))
-            ).alias("last_epoch"),
         )
-        rollup.upsert_batch(updated)
+        upsert_many(
+            spark,
+            [(rollup, updated)],
+            affected={os.path.basename(rollup.path.rstrip("/")): buckets},
+            source_version=source_version,
+        )
     finally:
         delta.unpersist()
 
 
-def pre_merge_delta(
+def refresh_rollup(
     spark: SparkSession,
     state: StateStore,
-    batch: DataFrame,
-    buckets: list[int],
     rollup: StateStore,
     group_col: str,
     sum_col: str,
-    epoch: int | None = None,
-) -> DataFrame | None:
-    """Step 1 of the protocol (module docstring), run BEFORE ``batch`` is
-    merged into ``state``: the view's delta for the batch, or None when
-    the batch has no rows (``buckets``, its buckets of ``state``, is
-    empty) and no pending delta is stored. With ``epoch`` a stored
-    pending delta is reused, and a new one is written ahead and returned
-    as read back from disk."""
-    group_field = next(f for f in rollup.schema.fields if f.name == group_col)
-    if epoch is not None:
-        stored = read_pending(spark, rollup, epoch, group_field)
-        if stored is not None:
-            return stored
-    if not buckets:
-        return None
-    # localCheckpoint PINS the pre-merge rows: the merge rewrites the
-    # buckets in place, so a lazy `pre` would re-read the post-merge data
-    # when the delta finally evaluates.
-    pre = state.read_buckets(buckets).localCheckpoint()
-    delta = rollup_delta(
-        pre, merge_upserts(pre, batch, state.key_cols), group_col, sum_col
-    )
-    if epoch is None:
-        return delta
-    write_pending(delta, rollup, epoch)
-    return read_pending(spark, rollup, epoch, group_field)
-
-
-def post_merge_apply(
-    spark: SparkSession,
-    rollup: StateStore,
-    delta: DataFrame | None,
-    group_col: str,
-    epoch: int | None = None,
 ) -> None:
-    """Step 2 of the protocol, run AFTER the base merge: apply
-    ``pre_merge_delta``'s result, then drop the epoch's pending delta."""
-    if delta is None:
+    """Bring the view up to ``state``'s newest version — the module's one
+    protocol, run after the base merge. A view written before views
+    recorded their source version raises ``ValueError``: delete it, and the
+    next refresh rebuilds it from the whole base."""
+    view = rollup._manifest()
+    source = view.get("source_version", 0)
+    if view["version"] and "source_version" not in view:
+        raise ValueError(
+            f"{rollup.path}: a rollup view without a source_version, written "
+            "before views recorded the base version they reflect; delete it "
+            "and the next refresh rebuilds it from the whole base"
+        )
+    new = state._manifest()
+    if source == new["version"]:
         return
-    maintain_rollup(spark, rollup, delta, group_col, epoch=epoch)
-    if epoch is not None:
-        clear_pending(rollup, epoch)
+    old = state._manifest(source)
+    changed = [
+        int(b)
+        for b in old["buckets"].keys() | new["buckets"].keys()
+        if old["buckets"].get(b) != new["buckets"].get(b)
+    ]
+    delta = rollup_delta(
+        state._scan(old, changed), state._scan(new, changed), group_col, sum_col
+    )
+    maintain_rollup(spark, rollup, delta, group_col, new["version"])
 
 
 def sync_with_rollup(
@@ -310,22 +206,12 @@ def sync_with_rollup(
     rollup: StateStore,
     group_col: str,
     sum_col: str,
-    epoch: int | None = None,
 ) -> None:
-    """One micro-batch: MERGE the (folded, typed) batch into ``state`` and
-    maintain the rollup view around it with the module's one protocol —
-    exactly-once under checkpoint replay with ``epoch`` (the foreachBatch
-    batch id), at-most-once without."""
-    buckets = state.buckets_of(typed_batch)
-    delta = pre_merge_delta(
-        spark, state, typed_batch, buckets, rollup, group_col, sum_col, epoch
-    )
-    upsert_many(
-        spark,
-        [(state, typed_batch)],
-        affected={os.path.basename(state.path.rstrip("/")): buckets},
-    )
-    post_merge_apply(spark, rollup, delta, group_col, epoch)
+    """One micro-batch: MERGE the (folded, typed) batch into ``state``,
+    then ``refresh_rollup`` — exactly-once, and a re-run after a crash
+    anywhere converges (module docstring)."""
+    state.upsert_batch(typed_batch)
+    refresh_rollup(spark, state, rollup, group_col, sum_col)
 
 
 # -- non-invertible aggregates (min/max): re-aggregate touched groups -------
@@ -359,7 +245,7 @@ def maintain_minmax(
     re-reads base rows, but only the touched groups' — the honest lower
     bound for min/max maintenance without an auxiliary per-group heap.
     Re-aggregation is naturally idempotent (recomputing from the merged
-    base gives the same rows), so no epoch machinery is needed.
+    base gives the same rows), so it needs no replay bookkeeping.
 
     ``touched``: one-column DataFrame of group values (pre ∪ post groups —
     include the PRE-merge groups of moved keys or their old group keeps a

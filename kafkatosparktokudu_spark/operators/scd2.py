@@ -33,9 +33,9 @@ Why recompute wins here:
   record crossing the batch boundary).
 - EXACTLY-ONCE FOR FREE. Both writes are idempotent (keyed upsert of
   deterministic rows), and ``hist`` is a pure function of ``raw``: crash
-  anywhere, replay the epoch, converge — no write-ahead delta, no epoch
-  stamps (the rollup machinery exists because aggregate deltas are NOT
-  idempotent; this derivation is).
+  anywhere, replay the epoch, converge — no version bookkeeping (the
+  rollup view records the base version it reflects because aggregate
+  deltas are NOT idempotent; this derivation is).
 
 Cost: a batch pays O(total changes of the keys it touches) — the same
 touched-group re-aggregation trade as the min/max rollup. Hot keys with

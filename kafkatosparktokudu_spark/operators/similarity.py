@@ -1737,11 +1737,16 @@ def semantic_dedup_prune(
     from ..functions.vectors import dot, norm_flat
 
     a = kmeans_assign(emb, k, n_iters, n_dims)
-    # nv staged once per row; PIN before the self-join — otherwise both
-    # join sides recompute the full k-means lineage (two assignment scans
-    # each, the dd04 persist-before-self-join lesson)
+    # v cut to its first n_dims components, the prefix norm_flat and the
+    # k-means assignment use, so the pair dot covers the same prefix; nv
+    # staged once per row; PIN before the self-join — otherwise both join
+    # sides recompute the full k-means lineage (two assignment scans each,
+    # the dd04 persist-before-self-join lesson)
     m = a.select(
-        "vec_id", "cluster", "v", norm_flat(F.col("v"), n_dims).alias("nv")
+        "vec_id",
+        "cluster",
+        F.slice("v", 1, n_dims).alias("v"),
+        norm_flat(F.col("v"), n_dims).alias("nv"),
     ).persist()
     m.count()
     x = m.alias("x")

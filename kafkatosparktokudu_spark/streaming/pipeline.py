@@ -121,9 +121,9 @@ def start_cdc_sync(
     stops — the deterministic test/backfill mode; the default is the
     reference's 5-second processing-time cadence. ``rollups``
     (cdc.RollupSpec list) adds continuously-maintained aggregate views,
-    updated by deltas inside the same foreachBatch epoch — exactly-once
-    under checkpoint replay (write-ahead pending delta + per-group epoch
-    stamp, operators/rollup.py).
+    updated by deltas inside the same foreachBatch batch — exactly-once
+    under checkpoint replay, because each view commits the base version it
+    reflects (operators/rollup.py).
 
     The source is read once per batch: there is no ``isEmpty()`` pre-read.
     ``sync_batch``'s first job counts the batch; a batch of 0 records
@@ -143,8 +143,7 @@ def start_cdc_sync(
             now_str=now_str,
             dead_letter_dir=cfg.dead_letter_dir,
             rollups=rollups,
-            # the batch id makes rollup-view maintenance exactly-once
-            # under checkpoint replay (operators/rollup.py docstring)
+            # names the batch's Spark jobs (cdc.<phase> epoch=<id>)
             epoch_id=epoch_id,
         )
         if m.total == 0:

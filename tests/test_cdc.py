@@ -621,82 +621,173 @@ def _view_vs_direct(state, rollup):
     return view, direct
 
 
-def test_rollup_replay_crash_between_merge_and_apply(spark, tmp_path):
-    """The exact failure VERDICT r4 #2 named: die AFTER the base merge,
-    BEFORE the rollup write. The write-ahead pending delta (staged durably
-    pre-merge) must make the replayed epoch converge — without it the
-    replay recomputes pre == post and the batch's contribution is lost."""
-    from kafkatosparktokudu_spark.operators.rollup import (
-        maintain_rollup,
-        read_pending,
-        rollup_delta,
-        sync_with_rollup,
-        write_pending,
-    )
-    from kafkatosparktokudu_spark.operators.merge import merge_upserts
+def _emp(spark, rows):
+    return spark.createDataFrame(rows, _emp_schema())
 
-    schema = _emp_schema()
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], schema, 4)
+
+def _source_version(rollup):
+    return rollup._manifest().get("source_version")
+
+
+def test_rollup_replay_crash_between_merge_and_apply(spark, tmp_path, monkeypatch):
+    """Die AFTER the base merge, BEFORE the view commit, with no batch id
+    anywhere: the view still names the base version before the merge, so
+    re-running the batch counts that merge (and the replayed re-merge,
+    whose rows are identical, adds nothing)."""
+    from kafkatosparktokudu_spark.operators import rollup as rollup_mod
+
+    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
     rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    b1 = spark.createDataFrame(
-        [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")], schema
+    rollup_mod.sync_with_rollup(
+        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")]),
+        rollup, "dept_id", "salary",
     )
-    sync_with_rollup(spark, state, b1, rollup, "dept_id", "salary", epoch=0)
+    b2 = _emp(spark, [("1", 20, None, "0", "t"), ("3", 10, 50.0, "0", "t")])
+    real = rollup_mod.maintain_rollup
 
-    # epoch 1, first attempt: replicate sync_with_rollup's epoch path up to
-    # and including the base merge, then "crash" (no rollup apply).
-    b2 = spark.createDataFrame(
-        [("1", 20, None, "0", "t"), ("3", 10, 50.0, "0", "t")], schema
-    )
-    keys = b2.select(state.key_cols).distinct()
-    pre = state.read().join(keys, state.key_cols).localCheckpoint()
-    post_est = merge_upserts(pre, b2, state.key_cols)
-    write_pending(rollup_delta(pre, post_est, "dept_id", "salary"), rollup, 1)
-    state.upsert_batch(b2)
-    # -- crash here --
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(rollup_mod, "maintain_rollup", real)
+        raise RuntimeError("crash before the view commit")
 
-    # replay of epoch 1 (checkpoint re-delivers the same batch)
-    sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary", epoch=1)
+    monkeypatch.setattr(rollup_mod, "maintain_rollup", crash_once)
+    with pytest.raises(RuntimeError, match="crash before"):
+        rollup_mod.sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary")
+    assert _source_version(rollup) == state._manifest()["version"] - 1
+
+    rollup_mod.sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary")
     view, direct = _view_vs_direct(state, rollup)
     # id1 moved 10 → 20 keeping its 100 salary (partial update), id3 joined
-    # dept 10 — the replayed epoch recovered BOTH sides of the move.
+    # dept 10 — the re-run recovered BOTH sides of the move.
     assert view == direct == {10: (1, 50.0), 20: (2, 300.0)}
+    assert _source_version(rollup) == state._manifest()["version"]
 
 
 def test_rollup_replay_does_not_double_apply(spark, tmp_path):
-    """Crash AFTER the rollup apply but BEFORE the pending cleanup: the
-    per-group last_epoch stamp must make the re-applied stored delta a
-    no-op (each group is in exactly one atomically-swapped bucket, so the
-    stamp and the values move together)."""
+    """Replay AFTER a full commit: the base is re-merged to a new version
+    with the same rows, so the version diff is zero and the view stays put.
+    A refresh with no base write in between is skipped whole: it commits
+    nothing."""
     from kafkatosparktokudu_spark.operators.rollup import (
-        rollup_delta,
+        refresh_rollup,
         sync_with_rollup,
-        write_pending,
     )
-    from kafkatosparktokudu_spark.operators.merge import merge_upserts
 
-    schema = _emp_schema()
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], schema, 4)
+    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
     rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    b1 = spark.createDataFrame(
-        [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")], schema
+    sync_with_rollup(
+        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")]),
+        rollup, "dept_id", "salary",
     )
-    sync_with_rollup(spark, state, b1, rollup, "dept_id", "salary", epoch=0)
-    b2 = spark.createDataFrame([("3", 10, 50.0, "0", "t")], schema)
-    # keep a copy of what epoch 1's write-ahead delta was, then run the
-    # epoch to full commit (apply + cleanup)
-    pre = state.read().join(
-        b2.select(state.key_cols).distinct(), state.key_cols
-    ).localCheckpoint()
-    delta_rows = rollup_delta(
-        pre, merge_upserts(pre, b2, state.key_cols), "dept_id", "salary"
-    )
-    sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary", epoch=1)
-    # "crash before clear_pending": restore the pending dir and replay
-    write_pending(delta_rows, rollup, 1)
-    sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary", epoch=1)
+    b2 = _emp(spark, [("3", 10, 50.0, "0", "t")])
+    for _ in range(2):
+        sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary")
     view, direct = _view_vs_direct(state, rollup)
     assert view == direct == {10: (2, 150.0), 20: (1, 200.0)}
+
+    committed = rollup._manifest()["version"]
+    refresh_rollup(spark, state, rollup, "dept_id", "salary")
+    assert rollup._manifest()["version"] == committed
+
+
+def test_rollup_counts_base_writes_made_without_the_view(spark, tmp_path):
+    """A base write made without the view between two refreshes — here an
+    upsert and then a rebucket, so the diff also spans a geometry change —
+    is counted by the next refresh."""
+    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
+
+    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
+    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
+    sync_with_rollup(
+        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t")]), rollup,
+        "dept_id", "salary",
+    )
+    state.upsert_batch(_emp(spark, [("2", 10, 50.0, "0", "t")]))
+    state.rebucket(8)
+    sync_with_rollup(
+        spark, state, _emp(spark, [("3", 20, 7.0, "0", "t")]), rollup,
+        "dept_id", "salary",
+    )
+    view, direct = _view_vs_direct(state, rollup)
+    assert view == direct == {10: (2, 150.0), 20: (1, 7.0)}
+
+
+def test_rollup_view_created_over_a_nonempty_base_starts_from_all_of_it(
+    spark, tmp_path
+):
+    """A view never written reflects version 0, the empty base, so its
+    first refresh counts every base row, not only the current batch's."""
+    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
+
+    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
+    state.upsert_batch(
+        _emp(spark, [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")])
+    )
+    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
+    sync_with_rollup(
+        spark, state, _emp(spark, [("1", 20, None, "0", "t")]), rollup,
+        "dept_id", "salary",
+    )
+    view, direct = _view_vs_direct(state, rollup)
+    assert view == direct == {20: (2, 300.0)}
+
+
+def test_rollup_commit_with_an_empty_delta_advances_the_source_version(
+    spark, tmp_path
+):
+    """Batches whose rows have no group change no group, but the view must
+    still commit the base version it now reflects — or that version would
+    fall out of the base's retention."""
+    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
+
+    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
+    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
+    for i in range(2):
+        sync_with_rollup(
+            spark, state, _emp(spark, [(str(i), None, 1.0, "0", "t")]), rollup,
+            "dept_id", "salary",
+        )
+        assert _source_version(rollup) == state._manifest()["version"] == i + 1
+    assert rollup.read().count() == 0
+
+
+def test_rollup_refuses_a_retired_source_version(spark, tmp_path):
+    """More base commits between two refreshes than the base keeps: the
+    version the view reflects is gone, and the refresh raises instead of
+    committing a wrong view."""
+    from kafkatosparktokudu_spark.operators.merge import _KEEP_VERSIONS
+    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
+
+    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
+    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
+    sync_with_rollup(
+        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t")]), rollup,
+        "dept_id", "salary",
+    )
+    before = sorted(tuple(r) for r in rollup.read().collect())
+    # with the batch's own merge, _KEEP_VERSIONS + 1 base commits
+    for i in range(_KEEP_VERSIONS):
+        state.upsert_batch(_emp(spark, [(f"x{i}", 10, 1.0, "0", "t")]))
+    with pytest.raises(ValueError, match="version 1 is no longer kept"):
+        sync_with_rollup(
+            spark, state, _emp(spark, [("2", 20, 5.0, "0", "t")]), rollup,
+            "dept_id", "salary",
+        )
+    assert sorted(tuple(r) for r in rollup.read().collect()) == before
+
+
+def test_rollup_refuses_a_view_without_source_version(spark, tmp_path):
+    """A view directory with rows but no recorded source version (the
+    layout from before views recorded it) raises, naming the directory."""
+    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
+
+    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
+    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
+    rollup.upsert_batch(spark.createDataFrame([(10, 1, None)], rollup.schema))
+    with pytest.raises(ValueError, match="roll: a rollup view without a source_version"):
+        sync_with_rollup(
+            spark, state, _emp(spark, [("1", 10, 100.0, "0", "t")]), rollup,
+            "dept_id", "salary",
+        )
 
 
 def test_sync_batch_epoch_replay_converges(spark, fixture_lines, tmp_path):
@@ -725,15 +816,35 @@ def test_sync_batch_epoch_replay_converges(spark, fixture_lines, tmp_path):
     assert view == direct and view
 
 
+def test_sync_batch_rollup_survives_an_epoch_restart(spark, fixture_lines, tmp_path):
+    """Batch ids restart at 0 with a new checkpoint against the same
+    warehouse; store versions do not. A batch delivered under a restarted
+    id must still reach the view."""
+    from kafkatosparktokudu_spark.cdc import RollupSpec
+
+    wh = str(tmp_path / "wh")
+    spec = RollupSpec(table="emp", group_col="dept_id", sum_col="salary")
+    mid = len(fixture_lines) // 2
+    for epoch, b in ((5, fixture_lines[:mid]), (0, fixture_lines[mid:])):
+        df = spark.createDataFrame([(line,) for line in b], "value string")
+        sync_batch(
+            spark, df, wh, now_str=NOW, n_buckets=8, rollups=[spec],
+            epoch_id=epoch,
+        )
+    state = StateStore(
+        spark, f"{wh}/emp", ["id"], default_catalog()["emp"].full_schema, 8
+    )
+    view, direct = _view_vs_direct(state, spec.store(spark, wh, 8))
+    assert view == direct and view
+
+
 def test_sync_batch_crash_between_merge_and_rollup_apply(
     spark, fixture_lines, tmp_path, monkeypatch
 ):
-    """sync_batch dies AFTER the base merge, BEFORE the rollup apply
-    (maintain_rollup raises once on epoch 1). Replaying epoch 1 must apply
-    the write-ahead delta — recomputed, it would be zero — and leave no
-    pending delta behind."""
-    import os
-
+    """sync_batch dies AFTER the base merge, BEFORE the view commit
+    (maintain_rollup raises once on the second batch). The view still
+    names the base version before that merge; replaying the batch brings
+    it to the base's newest version and equal to a direct aggregation."""
     from kafkatosparktokudu_spark.cdc import RollupSpec
     from kafkatosparktokudu_spark.operators import rollup as rollup_mod
 
@@ -758,15 +869,15 @@ def test_sync_batch_crash_between_merge_and_rollup_apply(
             spark, b2, wh, now_str=NOW, n_buckets=8, rollups=[spec], epoch_id=1
         )
     view = spec.store(spark, wh, 8)
-    assert os.path.isdir(rollup_mod.pending_path(view, 1))
-
-    sync_batch(spark, b2, wh, now_str=NOW, n_buckets=8, rollups=[spec], epoch_id=1)
     state = StateStore(
         spark, f"{wh}/emp", ["id"], default_catalog()["emp"].full_schema, 8
     )
+    assert _source_version(view) == state._manifest()["version"] - 1
+
+    sync_batch(spark, b2, wh, now_str=NOW, n_buckets=8, rollups=[spec], epoch_id=1)
     got, direct = _view_vs_direct(state, view)
     assert got == direct and got
-    assert not os.path.exists(rollup_mod.pending_path(view, 1))
+    assert _source_version(view) == state._manifest()["version"]
 
 
 def test_sync_batch_rejects_unknown_rollup_table(spark, fixture_lines, tmp_path):
@@ -1111,6 +1222,11 @@ def test_statestore_rebucket_equivalence(spark, tmp_path):
     # into the 32-bucket store, where lookups miss them: it is refused
     with pytest.raises(ValueError, match="staged at 8 buckets"):
         opened_before.upsert_batch(spark.createDataFrame([("7", "LOST")], schema))
+    # ...but it still reads: a lookup hashes at the geometry of the
+    # manifest it reads, not at the handle's
+    keys = [str(i) for i in range(100)]
+    got = {r["id"]: r["v"] for r in opened_before.lookup(keys).collect()}
+    assert got == {k: f"v{k}" for k in keys}
     manifest = store._manifest()
     assert manifest["n_buckets"] == 32
     buckets = {int(b) for b in manifest["buckets"]}

@@ -812,6 +812,30 @@ def test_semdedup_prunes_planted_twins(spark):
     assert all(not out[i * 10]["is_dup"] for i in range(12))
 
 
+def test_semdedup_uses_only_the_first_n_dims(spark):
+    """Vectors longer than ``n_dims`` (the k-means seed, vec 1, has exactly
+    ``n_dims``) are compared on their first ``n_dims`` components, the
+    prefix k-means and the norms use: vectors equal on that prefix are
+    twins whatever their tails."""
+    from kafkatosparktokudu_spark.operators.similarity import semantic_dedup_prune
+
+    head = [0.5, -0.25, 1.0, 0.75]
+    emb = spark.createDataFrame(
+        [
+            (1, head, 0),
+            (2, head + [5.0, 5.0, 5.0], 0),
+            (3, head + [-5.0, -5.0, -5.0], 0),
+            (4, [-x for x in head] + [0.0, 0.0, 0.0], 0),
+        ],
+        "vec_id long, embedding array<float>, label int",
+    )
+    out = {
+        r["vec_id"]: (r["is_dup"], r["matched_id"])
+        for r in semantic_dedup_prune(emb, k=1, n_dims=4, threshold=0.99).collect()
+    }
+    assert out == {1: (False, None), 2: (True, 1), 3: (True, 1), 4: (False, None)}
+
+
 def test_constraint_report_planted_violations(spark):
     """Each check class counts exactly its planted violations: nulls,
     out-of-range, off-domain, duplicate keys, FK orphans — and null FKs
