@@ -16,16 +16,16 @@ Handles the three classic subtleties of incremental view maintenance:
   coalesced current values, so contributions are always whole-row.
 
 Only invertible aggregates (count, sum — and anything derived from them:
-avg, ratios) can be maintained by deltas; for min/max this module provides
-``maintain_minmax`` / ``sync_with_minmax`` instead — touched-group
-re-aggregation, the honest cost floor for non-invertible aggregates.
+avg, ratios) can be maintained by deltas; min/max views re-aggregate the
+groups of the changed rows instead, the honest cost floor for
+non-invertible aggregates.
 Sums accumulate in DECIMAL so incremental and from-scratch
 aggregation agree bit-for-bit (float addition is not associative; decimal
 addition is) — the ``cdc_dept_rollup`` query hash-checks exactly that
 equivalence against a from-scratch DuckDB fold.
 
-ONE PROTOCOL, the version diff, run AFTER the base merge by both
-``cdc.sync_batch`` and ``sync_with_rollup`` (``refresh_rollup``). Every
+ONE PROTOCOL, the version diff, run AFTER the base merge for both view
+kinds by ``refresh_rollup`` (sum/count) and ``refresh_minmax``. Every
 StateStore write publishes a numbered manifest (operators/merge.py), and
 the view's own manifest records ``source_version``, the base version it
 reflects:
@@ -36,11 +36,11 @@ reflects:
 2. if ``new`` is the source version, the view is current: stop;
 3. the buckets whose file lists differ between ``old`` and ``new`` hold
    every changed row (file names are version-unique, so after a rebucket
-   every bucket differs). The delta is ``rollup_delta`` of those buckets
-   at ``old`` and at ``new``; an unchanged row in them appears on both
-   sides and cancels (DECIMAL, so bit-exact);
-4. ``maintain_rollup`` commits the view's rows and ``source_version =
-   new`` in one manifest publish.
+   every bucket differs; steps 1-3 are ``_changed_rows``);
+4. a sum/count view adds ``rollup_delta`` of the two sides (an unchanged
+   row appears on both and cancels, DECIMAL so bit-exact); a min/max view
+   re-aggregates every group either side names. Either commits its rows
+   and ``source_version = new`` in one manifest publish.
 
 The view is exactly-once whatever happened to the base in between, with
 or without a streaming batch id: a crash between the base merge and the
@@ -54,7 +54,8 @@ the refresh raises ``ValueError`` rather than guess.
 
 Scale shape: contributions are two hash aggs over the changed buckets,
 the delta is group-keyed (tiny), and the rollup update reads/rewrites
-only the delta's groups' buckets (partition-pruned).
+only the delta's groups' buckets (partition-pruned). A min/max refresh
+adds one scan of the base at ``new``, semi-joined to the touched groups.
 """
 
 from __future__ import annotations
@@ -165,6 +166,34 @@ def maintain_rollup(
         delta.unpersist()
 
 
+def _changed_rows(
+    state: StateStore, view: StateStore
+) -> tuple[DataFrame, DataFrame, dict] | None:
+    """Steps 1-3 of the protocol, for both view kinds: the rows of
+    ``state``'s changed buckets at the version ``view`` reflects and at the
+    newest one, and the newest manifest; ``None`` when the view is current.
+    A view written before views recorded their source version raises
+    ``ValueError``: delete it, and the next refresh rebuilds it."""
+    manifest = view._manifest()
+    source = manifest.get("source_version", 0)
+    if manifest["version"] and "source_version" not in manifest:
+        raise ValueError(
+            f"{view.path}: a rollup view without a source_version, written "
+            "before views recorded the base version they reflect; delete it "
+            "and the next refresh rebuilds it from the whole base"
+        )
+    new = state._manifest()
+    if source == new["version"]:
+        return None
+    old = state._manifest(source)
+    changed = [
+        int(b)
+        for b in old["buckets"].keys() | new["buckets"].keys()
+        if old["buckets"].get(b) != new["buckets"].get(b)
+    ]
+    return state._scan(old, changed), state._scan(new, changed), new
+
+
 def refresh_rollup(
     spark: SparkSession,
     state: StateStore,
@@ -172,31 +201,13 @@ def refresh_rollup(
     group_col: str,
     sum_col: str,
 ) -> None:
-    """Bring the view up to ``state``'s newest version — the module's one
-    protocol, run after the base merge. A view written before views
-    recorded their source version raises ``ValueError``: delete it, and the
-    next refresh rebuilds it from the whole base."""
-    view = rollup._manifest()
-    source = view.get("source_version", 0)
-    if view["version"] and "source_version" not in view:
-        raise ValueError(
-            f"{rollup.path}: a rollup view without a source_version, written "
-            "before views recorded the base version they reflect; delete it "
-            "and the next refresh rebuilds it from the whole base"
-        )
-    new = state._manifest()
-    if source == new["version"]:
-        return
-    old = state._manifest(source)
-    changed = [
-        int(b)
-        for b in old["buckets"].keys() | new["buckets"].keys()
-        if old["buckets"].get(b) != new["buckets"].get(b)
-    ]
-    delta = rollup_delta(
-        state._scan(old, changed), state._scan(new, changed), group_col, sum_col
-    )
-    maintain_rollup(spark, rollup, delta, group_col, new["version"])
+    """Bring the sum/count view up to ``state``'s newest version — the
+    module's one protocol, run after the base merge."""
+    diff = _changed_rows(state, rollup)
+    if diff is not None:
+        pre, post, new = diff
+        delta = rollup_delta(pre, post, group_col, sum_col)
+        maintain_rollup(spark, rollup, delta, group_col, new["version"])
 
 
 def sync_with_rollup(
@@ -230,58 +241,50 @@ def minmax_schema(group_field: T.StructField, val_type: T.DataType) -> T.StructT
     )
 
 
-def maintain_minmax(
+def refresh_minmax(
     spark: SparkSession,
     state: StateStore,
     view: StateStore,
-    touched: DataFrame,
     group_col: str,
     val_col: str,
 ) -> None:
-    """Refresh min/max (non-invertible — a delete can retire the current
-    extreme, so no delta formula exists) for exactly the groups the batch
-    TOUCHED: one scan of the base table filtered to those groups, one
-    upsert of the recomputed rows. Unlike the sum/count delta path this
-    re-reads base rows, but only the touched groups' — the honest lower
-    bound for min/max maintenance without an auxiliary per-group heap.
-    Re-aggregation is naturally idempotent (recomputing from the merged
-    base gives the same rows), so it needs no replay bookkeeping.
-
-    ``touched``: one-column DataFrame of group values (pre ∪ post groups —
-    include the PRE-merge groups of moved keys or their old group keeps a
-    stale extreme).
-
-    At 100 TB: the filter on the group column prunes via parquet min/max
-    row-group stats when base files are clustered by group (write_zordered
-    or a group-partitioned layout); worst case it is one full column scan
-    per batch — if that dominates, keep a sum/count delta view and accept
-    eventual min/max refresh instead.
+    """Bring the min/max view up to ``state``'s newest version — the
+    protocol of ``refresh_rollup``, but min/max are non-invertible (a
+    delete can retire the current extreme), so every group named in the
+    changed buckets at either version (a moved key's old group included) is
+    re-aggregated from the base at the newest version. A group left with
+    no live row gets a zero row (``n_alive`` 0, null extremes). The base
+    scan is pruned by row-group stats when the base is clustered by group
+    (write_zordered); else it is one column scan per refresh.
     """
-    t = touched.select(F.col(group_col)).distinct().localCheckpoint()
-    alive = state.read().join(t, group_col).filter(
-        (F.col(DELETE_STATE).isNull() | (F.col(DELETE_STATE) != "1"))
-        & F.col(group_col).isNotNull()
-    )
-    recomputed = alive.groupBy(group_col).agg(
-        F.min(val_col).alias("min_val"),
-        F.max(val_col).alias("max_val"),
-        F.count(F.lit(1)).alias("n_alive"),
-    )
-    # groups whose last alive row vanished need an explicit zero row (the
-    # aggregate above simply has no row for them)
-    gone = t.join(recomputed.select(group_col), group_col, "left_anti").select(
-        F.col(group_col),
-        F.lit(None).cast(
-            next(f.dataType for f in view.schema.fields if f.name == "min_val")
-        ).alias("min_val"),
-        F.lit(None).cast(
-            next(f.dataType for f in view.schema.fields if f.name == "max_val")
-        ).alias("max_val"),
-        F.lit(0).cast("long").alias("n_alive"),
-    )
-    # replace_rows: a re-aggregated NULL extreme must OVERWRITE the stale
-    # stored value, not coalesce with it
-    view.upsert_batch(recomputed.unionByName(gone), replace_rows=True)
+    diff = _changed_rows(state, view)
+    if diff is None:
+        return
+    pre, post, new = diff
+    touched = pre.unionByName(post).select(group_col).dropna().distinct().persist()
+    try:
+        alive = state._scan(new).join(touched, group_col, "left_semi").filter(
+            F.col(DELETE_STATE).isNull() | (F.col(DELETE_STATE) != "1")
+        )
+        recomputed = alive.groupBy(group_col).agg(
+            F.min(val_col).alias("min_val"),
+            F.max(val_col).alias("max_val"),
+            F.count(F.lit(1)).alias("n_alive"),
+        )
+        rows = touched.join(recomputed, group_col, "left").select(
+            group_col, "min_val", "max_val",
+            F.coalesce("n_alive", F.lit(0).cast("long")).alias("n_alive"),
+        )
+        # replace_rows: a re-aggregated NULL extreme must OVERWRITE the
+        # stale stored value, not coalesce with it. No touched group still
+        # commits, so the source version advances.
+        upsert_many(
+            spark, [(view, rows)],
+            {os.path.basename(view.path.rstrip("/")): view.buckets_of(touched)},
+            replace_rows=True, source_version=new["version"],
+        )
+    finally:
+        touched.unpersist()
 
 
 def sync_with_minmax(
@@ -292,15 +295,6 @@ def sync_with_minmax(
     group_col: str,
     val_col: str,
 ) -> None:
-    """One micro-batch: MERGE into ``state`` and refresh the min/max view
-    for the touched groups (pre-merge groups of the batch's keys ∪ the
-    batch's own groups, so group moves retire the old group's extremes)."""
-    keys = typed_batch.select(state.key_cols).distinct()
-    pre_groups = (
-        state.read().join(keys, state.key_cols).select(group_col)
-    )
-    touched = pre_groups.unionByName(
-        typed_batch.select(group_col)
-    ).filter(F.col(group_col).isNotNull()).distinct().localCheckpoint()
+    """``sync_with_rollup`` for a min/max view."""
     state.upsert_batch(typed_batch)
-    maintain_minmax(spark, state, view, touched, group_col, val_col)
+    refresh_minmax(spark, state, view, group_col, val_col)

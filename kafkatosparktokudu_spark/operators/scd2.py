@@ -114,10 +114,9 @@ class Scd2Store:
             bucket_cols=[target.key],
         )
 
-    def apply_batch(self, changes: DataFrame, epoch: int | None = None) -> None:
+    def apply_batch(self, changes: DataFrame) -> None:
         """Apply one batch of NORMALIZED change rows (already filtered to
-        this table). ``epoch`` is accepted for foreachBatch signature
-        parity but unused — the protocol is idempotent without stamps."""
+        this table). Idempotent, so a replayed batch needs no epoch."""
         # Pin the batch ONCE: the bucket collect, the raw upsert and the
         # affected-key semi-join must all see the same rows — a
         # non-deterministic input recomputed between those three uses

@@ -37,19 +37,18 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 
-    # Merge with (never overwrite) excluded rules supplied via
-    # spark-defaults.conf / SPARK_CONF_DIR (ADVICE r13): an operator may
-    # legitimately exclude other rules per deployment.
+    # Merge with (never overwrite) the excluded rules of spark-defaults.conf
+    # / SPARK_CONF_DIR and of the caller's extra_conf (ADVICE r13): an
+    # operator may legitimately exclude other rules per deployment.
     from pyspark import SparkConf
 
-    _infer = (
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-    )
-    _pre = SparkConf().get("spark.sql.optimizer.excludedRules", None)
-    if _pre and _infer not in [r.strip() for r in _pre.split(",")]:
-        _excluded = f"{_pre},{_infer}"
-    else:
-        _excluded = _pre or _infer
+    extra_conf = dict(extra_conf or {})
+    rules_key = "spark.sql.optimizer.excludedRules"
+    given = [SparkConf().get(rules_key, ""), extra_conf.pop(rules_key, "")]
+    rules = [r.strip() for g in given for r in g.split(",") if r.strip()]
+    rules.append("org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    # half the machine's memory, at most 48g: the heap grows towards its cap
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
 
     builder = (
         SparkSession.builder.master(master)
@@ -74,11 +73,14 @@ def get_spark(
         # rows); the hot paths are also fixed structurally with
         # explode_outer + null-guard so they stay fast under sessions
         # that don't set this (e.g. the driver's correctness harness).
-        .config("spark.sql.optimizer.excludedRules", _excluded)
+        .config(rules_key, ",".join(dict.fromkeys(rules)))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", f"{min(half_mb, 48 << 10)}m"),
+        )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

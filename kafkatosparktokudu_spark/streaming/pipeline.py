@@ -966,7 +966,7 @@ def start_scd2_sync(
         seq = F.col("seq") if "seq" in batch_df.columns else None
         valid, _dead = split_valid(parse_ogg(batch_df, seq_col=seq))
         changes = normalize(valid).filter(F.col("tab_name") == table)
-        store.apply_batch(changes, epoch=epoch_id)
+        store.apply_batch(changes)
 
     return _start_foreach_batch(
         source, _sync, checkpoint_dir,

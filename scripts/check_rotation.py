@@ -9,7 +9,8 @@ window, and nothing caught it. Now the claim is a computation:
     python scripts/check_rotation.py [--base REF]
 
 - ``--base`` defaults to the newest commit whose subject starts with
-  "round " (the driver's round-end commit).
+  "round " (the driver's round-end commit) or "PR <n>:" (the previous
+  change of the PR series).
 - Changed files under the package come from ``git diff base..HEAD``
   plus the working tree.
 - EVERY changed file is attributed at FUNCTION/constant/dict-entry
@@ -34,6 +35,7 @@ import ast
 import difflib
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -49,13 +51,22 @@ def _git(*args: str) -> str:
     ).stdout
 
 
-def _default_base() -> str:
-    out = _git("log", "--format=%H %s")
-    for line in out.splitlines():
+def _base_from_log(log: str) -> str | None:
+    """The newest commit in ``git log --format='%H %s'`` output whose
+    subject starts with "round " (the old driver's round-end commit) or
+    "PR <n>:" (one commit per change in the PR series)."""
+    for line in log.splitlines():
         sha, _, subject = line.partition(" ")
-        if subject.startswith("round "):
+        if subject.startswith("round ") or re.match(r"PR \d+:", subject):
             return sha
-    raise SystemExit("no 'round N' driver commit found; pass --base")
+    return None
+
+
+def _default_base() -> str:
+    base = _base_from_log(_git("log", "--format=%H %s"))
+    if base is None:
+        raise SystemExit("no 'round N' or 'PR N:' commit found; pass --base")
+    return base
 
 
 def _top_entries(src: str):

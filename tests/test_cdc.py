@@ -629,37 +629,138 @@ def _source_version(rollup):
     return rollup._manifest().get("source_version")
 
 
-def test_rollup_replay_crash_between_merge_and_apply(spark, tmp_path, monkeypatch):
-    """Die AFTER the base merge, BEFORE the view commit, with no batch id
-    anywhere: the view still names the base version before the merge, so
-    re-running the batch counts that merge (and the replayed re-merge,
-    whose rows are identical, adds nothing)."""
-    from kafkatosparktokudu_spark.operators import rollup as rollup_mod
+def _minmax_store(spark, path):
+    from pyspark.sql import types as T
 
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
-    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    rollup_mod.sync_with_rollup(
-        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")]),
-        rollup, "dept_id", "salary",
+    from kafkatosparktokudu_spark.operators.rollup import minmax_schema
+
+    return StateStore(
+        spark,
+        path,
+        ["dept_id"],
+        minmax_schema(
+            T.StructField("dept_id", T.IntegerType(), False), T.DoubleType()
+        ),
+        4,
     )
-    b2 = _emp(spark, [("1", 20, None, "0", "t"), ("3", 10, 50.0, "0", "t")])
-    real = rollup_mod.maintain_rollup
 
-    def crash_once(*args, **kwargs):
-        monkeypatch.setattr(rollup_mod, "maintain_rollup", real)
-        raise RuntimeError("crash before the view commit")
 
-    monkeypatch.setattr(rollup_mod, "maintain_rollup", crash_once)
-    with pytest.raises(RuntimeError, match="crash before"):
-        rollup_mod.sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary")
-    assert _source_version(rollup) == state._manifest()["version"] - 1
+def _minmax_vs_direct(state, view):
+    """The min/max view's live groups and a from-scratch min/max/count
+    over ``state.read()``; a group with no live row must read null
+    extremes."""
+    rows = view.read().collect()
+    assert all(
+        r["min_val"] is None and r["max_val"] is None
+        for r in rows
+        if r["n_alive"] == 0
+    )
+    got = {
+        r["dept_id"]: (r["min_val"], r["max_val"], r["n_alive"])
+        for r in rows
+        if r["n_alive"] > 0
+    }
+    direct = {
+        r["dept_id"]: (r["lo"], r["hi"], r["n"])
+        for r in state.read()
+        .filter(
+            (F.col("delete_state").isNull() | (F.col("delete_state") != "1"))
+            & F.col("dept_id").isNotNull()
+        )
+        .groupBy("dept_id")
+        .agg(
+            F.min("salary").alias("lo"),
+            F.max("salary").alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    }
+    return got, direct
 
-    rollup_mod.sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary")
-    view, direct = _view_vs_direct(state, rollup)
-    # id1 moved 10 → 20 keeping its 100 salary (partial update), id3 joined
-    # dept 10 — the re-run recovered BOTH sides of the move.
-    assert view == direct == {10: (1, 50.0), 20: (2, 300.0)}
-    assert _source_version(rollup) == state._manifest()["version"]
+
+class _ViewCase:
+    """A fresh emp base and a dept_id view over salary of one kind: "sum"
+    (count and DECIMAL sum, maintained by deltas) or "minmax"
+    (re-aggregated). Both kinds share one refresh protocol, so each
+    protocol test below runs its case on both."""
+
+    def __init__(self, spark, tmp_path, kind):
+        self.spark, self.kind = spark, kind
+        self.state = StateStore(
+            spark, str(tmp_path / kind / "emp"), ["id"], _emp_schema(), 4
+        )
+        store = _dept_rollup_store if kind == "sum" else _minmax_store
+        self.view = store(spark, str(tmp_path / kind / "roll"))
+
+    def sync(self, rows):
+        from kafkatosparktokudu_spark.operators import rollup
+
+        sync = {"sum": rollup.sync_with_rollup, "minmax": rollup.sync_with_minmax}
+        batch = _emp(self.spark, rows)
+        sync[self.kind](self.spark, self.state, batch, self.view, "dept_id", "salary")
+
+    def refresh(self):
+        from kafkatosparktokudu_spark.operators import rollup
+
+        refresh = {"sum": rollup.refresh_rollup, "minmax": rollup.refresh_minmax}
+        refresh[self.kind](self.spark, self.state, self.view, "dept_id", "salary")
+
+    def vs_direct(self):
+        vs = _view_vs_direct if self.kind == "sum" else _minmax_vs_direct
+        return vs(self.state, self.view)
+
+
+def _view_cases(spark, tmp_path):
+    return [_ViewCase(spark, tmp_path, kind) for kind in ("sum", "minmax")]
+
+
+def test_rollup_replay_crash_between_merge_and_apply(spark, tmp_path, monkeypatch):
+    """Die AFTER the base merge, at the view's manifest publish, with no
+    batch id anywhere: the view still names the base version before the
+    merge, so re-running the batch counts that merge (and the replayed
+    re-merge, whose rows are identical, adds nothing). Key 3 moves out of
+    dept 20, which no other row of the batch names: a re-run that looked
+    up the batch's keys in the already-merged base would never revisit
+    dept 20 and leave its old extreme, (300.0, 300.0, 1), in a min/max
+    view."""
+    from kafkatosparktokudu_spark.operators import merge
+
+    b2 = [
+        ("2", None, None, "1", "t"),  # delete the dept-10 max
+        ("3", 10, None, "0", "t"),  # move 20 → 10, salary 300 kept
+        ("4", 30, 50.0, "0", "t"),
+    ]
+    want = {
+        "sum": {10: (2, 400.0), 30: (1, 50.0)},
+        "minmax": {10: (100.0, 300.0, 2), 30: (50.0, 50.0, 1)},
+    }
+    real = merge._publish
+    for case in _view_cases(spark, tmp_path):
+        case.sync(
+            [
+                ("1", 10, 100.0, "0", "t"),
+                ("2", 10, 900.0, "0", "t"),
+                ("3", 20, 300.0, "0", "t"),
+            ]
+        )
+
+        def crash_at_view_commit(store, *args, _view=case.view.path):
+            if store.path == _view:
+                monkeypatch.setattr(merge, "_publish", real)
+                raise RuntimeError("crash at the view commit")
+            return real(store, *args)
+
+        monkeypatch.setattr(merge, "_publish", crash_at_view_commit)
+        with pytest.raises(RuntimeError, match="crash at the view commit"):
+            case.sync(b2)
+        assert _source_version(case.view) == case.state._manifest()["version"] - 1
+
+        case.sync(b2)
+        view, direct = case.vs_direct()
+        assert view == direct == want[case.kind]
+        assert _source_version(case.view) == case.state._manifest()["version"]
+        if case.kind == "minmax":  # the emptied group is a zero row
+            assert tuple(case.view.lookup([20]).first()) == (20, None, None, 0)
 
 
 def test_rollup_replay_does_not_double_apply(spark, tmp_path):
@@ -667,68 +768,63 @@ def test_rollup_replay_does_not_double_apply(spark, tmp_path):
     with the same rows, so the version diff is zero and the view stays put.
     A refresh with no base write in between is skipped whole: it commits
     nothing."""
-    from kafkatosparktokudu_spark.operators.rollup import (
-        refresh_rollup,
-        sync_with_rollup,
-    )
+    want = {
+        "sum": {10: (2, 150.0), 20: (1, 200.0)},
+        "minmax": {10: (50.0, 100.0, 2), 20: (200.0, 200.0, 1)},
+    }
+    for case in _view_cases(spark, tmp_path):
+        case.sync([("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")])
+        for _ in range(2):
+            case.sync([("3", 10, 50.0, "0", "t")])
+        view, direct = case.vs_direct()
+        assert view == direct == want[case.kind]
 
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
-    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    sync_with_rollup(
-        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")]),
-        rollup, "dept_id", "salary",
-    )
-    b2 = _emp(spark, [("3", 10, 50.0, "0", "t")])
-    for _ in range(2):
-        sync_with_rollup(spark, state, b2, rollup, "dept_id", "salary")
-    view, direct = _view_vs_direct(state, rollup)
-    assert view == direct == {10: (2, 150.0), 20: (1, 200.0)}
-
-    committed = rollup._manifest()["version"]
-    refresh_rollup(spark, state, rollup, "dept_id", "salary")
-    assert rollup._manifest()["version"] == committed
+        committed = case.view._manifest()["version"]
+        case.refresh()
+        assert case.view._manifest()["version"] == committed
 
 
 def test_rollup_counts_base_writes_made_without_the_view(spark, tmp_path):
     """A base write made without the view between two refreshes — here an
     upsert and then a rebucket, so the diff also spans a geometry change —
     is counted by the next refresh."""
-    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
-
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
-    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    sync_with_rollup(
-        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t")]), rollup,
-        "dept_id", "salary",
-    )
-    state.upsert_batch(_emp(spark, [("2", 10, 50.0, "0", "t")]))
-    state.rebucket(8)
-    sync_with_rollup(
-        spark, state, _emp(spark, [("3", 20, 7.0, "0", "t")]), rollup,
-        "dept_id", "salary",
-    )
-    view, direct = _view_vs_direct(state, rollup)
-    assert view == direct == {10: (2, 150.0), 20: (1, 7.0)}
+    want = {
+        "sum": {10: (2, 150.0), 20: (1, 7.0)},
+        "minmax": {10: (50.0, 100.0, 2), 20: (7.0, 7.0, 1)},
+    }
+    for case in _view_cases(spark, tmp_path):
+        case.sync([("1", 10, 100.0, "0", "t")])
+        case.state.upsert_batch(_emp(spark, [("2", 10, 50.0, "0", "t")]))
+        case.state.rebucket(8)
+        case.sync([("3", 20, 7.0, "0", "t")])
+        view, direct = case.vs_direct()
+        assert view == direct == want[case.kind]
 
 
 def test_rollup_view_created_over_a_nonempty_base_starts_from_all_of_it(
     spark, tmp_path
 ):
     """A view never written reflects version 0, the empty base, so its
-    first refresh counts every base row, not only the current batch's."""
-    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
-
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
-    state.upsert_batch(
-        _emp(spark, [("1", 10, 100.0, "0", "t"), ("2", 20, 200.0, "0", "t")])
-    )
-    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    sync_with_rollup(
-        spark, state, _emp(spark, [("1", 20, None, "0", "t")]), rollup,
-        "dept_id", "salary",
-    )
-    view, direct = _view_vs_direct(state, rollup)
-    assert view == direct == {20: (2, 300.0)}
+    first refresh counts every base row, not only the current batch's:
+    dept 30, which the batch never names, is in the view too."""
+    want = {
+        "sum": {20: (2, 300.0), 30: (1, 7.0)},
+        "minmax": {20: (100.0, 200.0, 2), 30: (7.0, 7.0, 1)},
+    }
+    for case in _view_cases(spark, tmp_path):
+        case.state.upsert_batch(
+            _emp(
+                spark,
+                [
+                    ("1", 10, 100.0, "0", "t"),
+                    ("2", 20, 200.0, "0", "t"),
+                    ("3", 30, 7.0, "0", "t"),
+                ],
+            )
+        )
+        case.sync([("1", 20, None, "0", "t")])
+        view, direct = case.vs_direct()
+        assert view == direct == want[case.kind]
 
 
 def test_rollup_commit_with_an_empty_delta_advances_the_source_version(
@@ -737,17 +833,15 @@ def test_rollup_commit_with_an_empty_delta_advances_the_source_version(
     """Batches whose rows have no group change no group, but the view must
     still commit the base version it now reflects — or that version would
     fall out of the base's retention."""
-    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
-
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
-    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    for i in range(2):
-        sync_with_rollup(
-            spark, state, _emp(spark, [(str(i), None, 1.0, "0", "t")]), rollup,
-            "dept_id", "salary",
-        )
-        assert _source_version(rollup) == state._manifest()["version"] == i + 1
-    assert rollup.read().count() == 0
+    for case in _view_cases(spark, tmp_path):
+        for i in range(2):
+            case.sync([(str(i), None, 1.0, "0", "t")])
+            assert (
+                _source_version(case.view)
+                == case.state._manifest()["version"]
+                == i + 1
+            )
+        assert case.view.read().count() == 0
 
 
 def test_rollup_refuses_a_retired_source_version(spark, tmp_path):
@@ -755,39 +849,30 @@ def test_rollup_refuses_a_retired_source_version(spark, tmp_path):
     version the view reflects is gone, and the refresh raises instead of
     committing a wrong view."""
     from kafkatosparktokudu_spark.operators.merge import _KEEP_VERSIONS
-    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
 
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
-    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    sync_with_rollup(
-        spark, state, _emp(spark, [("1", 10, 100.0, "0", "t")]), rollup,
-        "dept_id", "salary",
-    )
-    before = sorted(tuple(r) for r in rollup.read().collect())
-    # with the batch's own merge, _KEEP_VERSIONS + 1 base commits
-    for i in range(_KEEP_VERSIONS):
-        state.upsert_batch(_emp(spark, [(f"x{i}", 10, 1.0, "0", "t")]))
-    with pytest.raises(ValueError, match="version 1 is no longer kept"):
-        sync_with_rollup(
-            spark, state, _emp(spark, [("2", 20, 5.0, "0", "t")]), rollup,
-            "dept_id", "salary",
-        )
-    assert sorted(tuple(r) for r in rollup.read().collect()) == before
+    for case in _view_cases(spark, tmp_path):
+        case.sync([("1", 10, 100.0, "0", "t")])
+        before = sorted(map(tuple, case.view.read().collect()), key=repr)
+        # with the batch's own merge, _KEEP_VERSIONS + 1 base commits
+        for i in range(_KEEP_VERSIONS):
+            case.state.upsert_batch(_emp(spark, [(f"x{i}", 10, 1.0, "0", "t")]))
+        with pytest.raises(ValueError, match="version 1 is no longer kept"):
+            case.sync([("2", 20, 5.0, "0", "t")])
+        assert sorted(map(tuple, case.view.read().collect()), key=repr) == before
 
 
 def test_rollup_refuses_a_view_without_source_version(spark, tmp_path):
     """A view directory with rows but no recorded source version (the
     layout from before views recorded it) raises, naming the directory."""
-    from kafkatosparktokudu_spark.operators.rollup import sync_with_rollup
-
-    state = StateStore(spark, str(tmp_path / "emp"), ["id"], _emp_schema(), 4)
-    rollup = _dept_rollup_store(spark, str(tmp_path / "roll"))
-    rollup.upsert_batch(spark.createDataFrame([(10, 1, None)], rollup.schema))
-    with pytest.raises(ValueError, match="roll: a rollup view without a source_version"):
-        sync_with_rollup(
-            spark, state, _emp(spark, [("1", 10, 100.0, "0", "t")]), rollup,
-            "dept_id", "salary",
+    for case in _view_cases(spark, tmp_path):
+        n_values = len(case.view.schema.fields) - 1
+        case.view.upsert_batch(
+            spark.createDataFrame([(10,) + (None,) * n_values], case.view.schema)
         )
+        with pytest.raises(
+            ValueError, match="roll: a rollup view without a source_version"
+        ):
+            case.sync([("1", 10, 100.0, "0", "t")])
 
 
 def test_sync_batch_epoch_replay_converges(spark, fixture_lines, tmp_path):
@@ -1577,7 +1662,7 @@ def _emp_norm(spark):
 def test_scd2_incremental_matches_batch_and_replays(spark, tmp_path):
     """Two-batch incremental SCD2 == one-shot history operator (versions,
     intervals, payload inheritance across the batch boundary), and
-    replaying the last epoch is a no-op (per-key epoch guard)."""
+    replaying the last batch is a no-op (idempotent upserts)."""
     from pyspark.sql import functions as F
 
     from kafkatosparktokudu_spark.catalog import default_catalog
@@ -1591,13 +1676,13 @@ def test_scd2_incremental_matches_batch_and_replays(spark, tmp_path):
     store = Scd2Store(
         spark, str(tmp_path / "h"), default_catalog()["emp"], n_buckets=8
     )
-    store.apply_batch(norm.filter(F.col("seq") < cut), epoch=0)
-    store.apply_batch(norm.filter(F.col("seq") >= cut), epoch=1)
+    store.apply_batch(norm.filter(F.col("seq") < cut))
+    store.apply_batch(norm.filter(F.col("seq") >= cut))
     cols = [f.name for f in QUERIES["cdc_emp_history"](spark, sf).schema.fields]
     got = sorted(map(tuple, store.history().select(*cols).collect()), key=repr)
     assert got == ref
     # replay the last epoch: identical history afterwards
-    store.apply_batch(norm.filter(F.col("seq") >= cut), epoch=1)
+    store.apply_batch(norm.filter(F.col("seq") >= cut))
     again = sorted(map(tuple, store.history().select(*cols).collect()), key=repr)
     assert again == ref
 
@@ -1619,7 +1704,7 @@ def test_scd2_crash_between_writes_replays_to_convergence(spark, tmp_path):
     store = Scd2Store(
         spark, str(tmp_path / "h"), default_catalog()["emp"], n_buckets=8
     )
-    store.apply_batch(norm.filter(F.col("seq") < cut), epoch=0)
+    store.apply_batch(norm.filter(F.col("seq") < cut))
 
     class Boom(RuntimeError):
         pass
@@ -1633,12 +1718,12 @@ def test_scd2_crash_between_writes_replays_to_convergence(spark, tmp_path):
 
     store.hist.upsert_batch = dying  # crash window: raw written, hist not
     try:
-        store.apply_batch(norm.filter(F.col("seq") >= cut), epoch=1)
+        store.apply_batch(norm.filter(F.col("seq") >= cut))
     except Boom:
         pass
     assert calls["n"] == 1
     store.hist.upsert_batch = real
-    store.apply_batch(norm.filter(F.col("seq") >= cut), epoch=1)  # replay
+    store.apply_batch(norm.filter(F.col("seq") >= cut))  # replay
     cols = [f.name for f in QUERIES["cdc_emp_history"](spark, sf).schema.fields]
     got = sorted(map(tuple, store.history().select(*cols).collect()), key=repr)
     assert got == ref

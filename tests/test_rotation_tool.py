@@ -76,3 +76,22 @@ def test_body_edit_implicates_function_and_callers():
 def test_new_file_marks_everything():
     got = _changed_names("", BASE)
     assert {"TAU", "helper", "query_a", "query_b", "query_c"} <= got
+
+
+def test_default_base_is_the_newest_round_or_pr_commit():
+    """Without --base the diff starts at the newest "PR <n>:" or "round "
+    commit, so a change is checked against the previous one, not the
+    start of the series; other subjects never qualify."""
+    log = "\n".join(
+        [
+            "aaa re-anchor @ PR 5: ROADMAP",
+            "bbb Fix PR 3: a typo",
+            "ccc PR 13: [simplicity] A rollup view commits its base version",
+            "ddd PR 11: [simplicity] One manifest commit per write",
+            "eee round 14: verdict/advice/correctness/bench",
+        ]
+    )
+    assert check_rotation._base_from_log(log) == "ccc"
+    assert check_rotation._base_from_log(log.split("\n", 3)[3]) == "ddd"
+    assert check_rotation._base_from_log(log.splitlines()[-1]) == "eee"
+    assert check_rotation._base_from_log("fff PR: no number\nggg prose") is None
