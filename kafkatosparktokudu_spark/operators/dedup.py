@@ -19,6 +19,7 @@ oracle reproduces signatures bit-for-bit.
 
 from __future__ import annotations
 
+import os
 import random
 
 from pyspark.sql import Column, DataFrame
@@ -26,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import MERSENNE31, md5_hash32, md5_hash60
+from .merge import StateStore, upsert_many
 from .text import tokens
 
 # ---------------------------------------------------------------------------
@@ -280,285 +282,117 @@ def _explode_bands(sig: DataFrame, id_col: str) -> DataFrame:
     ).select(id_col, "bh.band_idx", "bh.h")
 
 
-GATE_META = "_STORE_META.json"
+# Buckets of each gate store at creation. Both stores take every batch as
+# one upsert, which rewrites each bucket the batch's docs hash into as one
+# file: ~4 band hashes per accepted doc reach every bucket of a small
+# store. Measured warm on px06 and st04 (250-doc batches, 4 vCPUs), 8 and
+# 16 buckets tie within run-to-run spread (px06 4.6-5.7 s, st04
+# 6.6-7.8 s) and 32 or 64 cost 1-2 s more per query in file and task
+# overhead; 8 writes the fewest files. A gate whose history outgrows it
+# grows each store in place with ``StateStore.rebucket`` (a handle adopts
+# the manifest's count).
+GATE_BUCKETS = 8
 
 
-def _gate_meta(spark, store_dir: str) -> dict | None:
-    """Persisted gate-store geometry (the merge.py ``_STORE_META``
-    discipline): the bucket modulus travels WITH the directory, so a
-    reader can never probe with the wrong layout.
+def _gate_stores(spark, store_dir: str, id_col: str):
+    """The gate's two ``StateStore``s under ``store_dir``:
 
-    Read through the Hadoop FileSystem API (ADVICE r12): the store itself
-    is read/written via spark.read, so on an HDFS/S3 ``store_dir`` a
-    driver-local ``open()`` never sees the meta — the bucketed store would
-    silently degrade to the flat arm with an EMPTY history (every epoch
-    re-admits duplicates and appends flat parquet into the store root,
-    corrupting the layout). Absence → None (new or flat store); an
-    EXISTING meta that fails to parse raises — never fall back silently."""
-    import json
+    - ``bands``: one row per (band hash ``h``, ``band_idx``, id) of every
+      accepted doc, bucketed on ``h`` alone, so a probe reads only the
+      buckets the batch's band hashes fall in;
+    - ``payload``: the accepted doc's hashed shingle set ``hs`` by id, read
+      only for the ids the band probe returns.
 
-    from ..streaming.fsio import read_text
-
-    raw = read_text(spark, f"{store_dir.rstrip('/')}/{GATE_META}")
-    if raw is None:
-        return None
-    try:
-        return json.loads(raw)
-    except ValueError as exc:
+    The id is ``bigint`` in both. Like every ``StateStore`` the gate is
+    local-filesystem-only. A directory in the layout from before these
+    stores (parquet files or ``_STORE_META.json`` at its root) raises
+    ``ValueError``: rebuild it by re-ingesting its accepted docs."""
+    root = store_dir.rstrip("/")
+    if os.path.isdir(root) and any(
+        e.endswith(".parquet") or e == "_STORE_META.json" for e in os.listdir(root)
+    ):
         raise ValueError(
-            f"gate store meta {store_dir}/{GATE_META} exists but is "
-            f"unreadable ({exc}); refusing to guess the layout — repair or "
-            "rebuild the store"
-        ) from exc
-
-
-def _write_gate_meta(spark, store_dir: str, n_buckets: int) -> None:
-    import json
-
-    from ..streaming.fsio import write_text_atomic
-
-    write_text_atomic(
+            f"gate store {root} is in the layout from before its bands/ and "
+            "payload/ StateStores, which this module does not read; rebuild "
+            "it by ingesting its accepted documents into a new directory"
+        )
+    ident = T.StructField(id_col, T.LongType())
+    bands = StateStore(
         spark,
-        f"{store_dir.rstrip('/')}/{GATE_META}",
-        json.dumps({"layout": "bucketed", "n_buckets": n_buckets}),
+        f"{root}/bands",
+        ["h", "band_idx", id_col],
+        T.StructType(
+            [
+                T.StructField("h", T.StringType()),
+                T.StructField("band_idx", T.IntegerType()),
+                ident,
+            ]
+        ),
+        n_buckets=GATE_BUCKETS,
+        bucket_cols=["h"],
     )
+    payload = StateStore(
+        spark,
+        f"{root}/payload",
+        [id_col],
+        T.StructType([ident, T.StructField("hs", T.ArrayType(T.LongType()))]),
+        n_buckets=GATE_BUCKETS,
+    )
+    return bands, payload
 
 
-def migrate_gate_store(spark, store_dir: str, n_buckets: int) -> None:
-    """Migrate a FLAT-layout ingest-gate store into the BUCKETED layout
-    in place (ADVICE r12 — the alternative to rejecting ``bucketed_n``
-    over an existing history). Idempotent and decision-free under crash
-    replay, the merge.py rebucket discipline:
-
-    1. rewrite the flat history into ``store/bands`` (exploded, bucketed
-       on the band-hash prefix) and ``store/payload`` (hs, bucketed on
-       doc_id) with mode=overwrite — a re-run after a crash here simply
-       rewrites the same content;
-    2. write ``_STORE_META.json`` LAST — only now do probes route to the
-       bucketed arm;
-    3. delete the flat parquet files from the store root (cleanup; the
-       bucketed arm never reads the root, so a crash between 2 and 3
-       leaves harmless stale files that a re-run removes).
-
-    A store whose meta already exists is either fully migrated (no flat
-    files left → error, nothing to do — re-running overwrite against a
-    store that has accepted post-migration epochs would DROP them) or in
-    the step-3 crash window (flat files still present → finish cleanup)."""
-    from ..streaming.fsio import delete_direct_files, dir_has_files
-
-    meta = _gate_meta(spark, store_dir)
-    flat_present = dir_has_files(spark, store_dir, suffix=".parquet")
-    if meta is not None:
-        if flat_present:
-            delete_direct_files(spark, store_dir, suffix=".parquet")
-            return
+def _gate_ids(df: DataFrame, id_col: str) -> DataFrame:
+    """``df`` with its id column cast to the stores' ``bigint``; an id that
+    is not an integer type raises ``ValueError`` naming the column."""
+    dtype = df.schema[id_col].dataType
+    if not isinstance(dtype, T.IntegralType):
         raise ValueError(
-            f"gate store {store_dir} is already bucketed "
-            f"(n_buckets={meta.get('n_buckets')}); nothing to migrate"
+            f"gate id column {id_col!r} is {dtype.simpleString()}; the gate "
+            "stores integer ids (bigint)"
         )
-    if not flat_present:
-        raise ValueError(
-            f"gate store {store_dir} holds no flat history; just pass "
-            "bucketed_n on the first ingest call instead"
-        )
-    # glob the root-level files only: a migration crashed between steps 1
-    # and 2 leaves bands/ and payload/ subdirs whose files a bare
-    # directory read would sweep into the flat-schema scan
-    old = spark.read.parquet(f"{store_dir}/*.parquet")
-    id_col = next(c for c in old.columns if c not in {"hs"} and not c.startswith("band"))
-    # revoked docs are dropped by the rewrite — migration doubles as the
-    # flat layout's physical reclamation (revoke_from_gate_store)
-    revoked = _read_gate_revoked(spark, store_dir, id_col)
-    if revoked is not None:
-        old = old.join(F.broadcast(revoked), id_col, "left_anti")
-    bands_dir, payload_dir = f"{store_dir}/bands", f"{store_dir}/payload"
-    (
-        _explode_bands(old, id_col)
-        .withColumn("bucket", _band_bucket(F.col("h"), n_buckets))
-        .repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(bands_dir)
-    )
-    (
-        old.select(id_col, "hs")
-        .withColumn("idb", F.pmod(F.col(id_col), F.lit(n_buckets)).cast("int"))
-        .repartition(F.col("idb"))
-        .write.mode("overwrite")
-        .partitionBy("idb")
-        .parquet(payload_dir)
-    )
-    _write_gate_meta(spark, store_dir, int(n_buckets))
-    delete_direct_files(spark, store_dir, suffix=".parquet")
-    if revoked is not None:
-        # the rewrite physically dropped the revoked rows; clear the
-        # tombstones last (a crash here leaves tombstones over already-
-        # purged rows — the anti-join treats them as a no-op)
-        from ..streaming.fsio import delete_dir
-
-        delete_dir(spark, f"{store_dir.rstrip('/')}/_revoked")
-
-
-def _read_gate_revoked(spark, store_dir: str, id_col: str):
-    """Revoked doc ids as a 1-column frame, or None when the store has
-    no revocations (the common case — the gate's probe then keeps its
-    exact pre-revocation plan, no anti-join node)."""
-    from ..streaming.fsio import dir_nonempty
-
-    rev_dir = f"{store_dir.rstrip('/')}/_revoked"
-    if not dir_nonempty(spark, rev_dir):
-        return None
-    return spark.read.parquet(rev_dir).select(id_col).distinct()
+    return df.withColumn(id_col, F.col(id_col).cast("bigint"))
 
 
 def revoke_from_gate_store(
-    spark, store_dir: str, doc_ids: DataFrame, epoch: int, id_col: str = "doc_id"
+    spark, store_dir: str, doc_ids: DataFrame, id_col: str = "doc_id"
 ) -> None:
-    """REVOKE previously-accepted documents from the ingest-gate's
-    signature store — the gate-side half of right-to-be-forgotten
-    (VERDICT-r13-continuity #4): after a compliance delete removes a
-    document from the corpus, a gate still holding its signatures keeps
-    suppressing future near-duplicates of a document that no longer
-    exists (and keeps DERIVED DATA of the forgotten document — the
-    shingle hashes — alive). The serving-index tombstone recipe,
-    simplified to the gate's needs:
+    """REVOKE previously-accepted documents from the ingest gate — the
+    gate-side half of right-to-be-forgotten: after a compliance delete
+    removes a document from the corpus, a gate still holding its
+    signatures keeps suppressing future near-duplicates of a document that
+    no longer exists (and keeps derived data of it, the shingle hashes).
 
-    - revoked ids land as parquet under ``{store}/_revoked/epoch=N``
-      (underscore prefix: invisible to both layouts' store scans; the
-      epoch dir makes a replayed revocation an idempotent overwrite);
-      no sidecar is needed — the gate keeps no corpus stats — and the
-      failure direction of a crashed write is CONSERVATIVE: missing
-      tombstones mean the gate keeps suppressing, never re-admits;
-    - both probe arms anti-join the revoked ids out of the accepted
-      history (flat: the root scan; bucketed: the band-bucket scan —
-      a revoked doc then can't become an LSH candidate, so the payload
-      read needs no second join); a store with no revocations keeps
-      its exact prior plan;
-    - physical reclamation: ``purge_revoked_gate_store`` (bucketed —
-      partition-pruned rewrite) or ``migrate_gate_store`` (flat→
-      bucketed migration drops revoked rows in the same pass).
+    ``doc_ids``' first column holds the ids. Their ``hs`` are read from
+    ``payload``, their band rows recomputed from it, and then two
+    ``rewrite_buckets`` delete them: from ``bands`` first, from ``payload``
+    second. A crash in between leaves a doc no probe can find (it has no
+    band rows), and a re-run still finds its ``hs`` and so its band
+    buckets; re-running a finished revocation deletes nothing more.
 
     Semantics note (the bounded-state trade extended): docs REJECTED
     earlier because they matched a now-revoked doc were never stored —
     revocation re-opens the door for FUTURE arrivals only."""
-    ids = doc_ids.select(
-        F.col(doc_ids.columns[0]).cast("bigint").alias(id_col)
+    bands, payload = _gate_stores(spark, store_dir, id_col)
+    ids = _gate_ids(
+        doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col)), id_col
     ).distinct()
-    ids.repartition(1).write.mode("overwrite").parquet(
-        f"{store_dir.rstrip('/')}/_revoked/epoch={int(epoch)}"
+    revoked = (
+        payload.read_buckets(payload.buckets_of(ids))
+        .join(F.broadcast(ids), id_col, "left_semi")
+        .persist()
     )
-
-
-def purge_revoked_gate_store(spark, store_dir: str, id_col: str = "doc_id") -> int:
-    """Physically remove revoked documents' rows from a BUCKETED gate
-    store and clear the tombstones — the reclamation step after
-    ``revoke_from_gate_store`` (a FLAT store reclaims by
-    ``migrate_gate_store``, which drops revoked rows during the
-    rewrite). Partition-pruned: the payload read for the revoked ids
-    (pruned to their ``idb`` buckets) recovers their shingle sets, the
-    band expressions recompute exactly which ``bucket`` partitions hold
-    their band rows, and only those partitions are rewritten via
-    dynamic partition overwrite. Crash-safe by replay: partition
-    rewrites converge (a second pass removes nothing more) and
-    ``_revoked`` is deleted LAST — a crash leaves tombstones over
-    already-purged rows, which the anti-join treats as a no-op.
-    Returns the number of revoked ids purged."""
-    from ..streaming.fsio import delete_dir
-
-    meta = _gate_meta(spark, store_dir)
-    if meta is None:
-        raise ValueError(
-            f"gate store {store_dir} is FLAT — physical reclamation of "
-            "revoked rows happens via migrate_gate_store (the rewrite "
-            "drops them); purge_revoked_gate_store needs the bucketed "
-            "layout's partition pruning"
-        )
-    rev = _read_gate_revoked(spark, store_dir, id_col)
-    if rev is None:
-        return 0
-    n_buckets = int(meta["n_buckets"])
-    rev = rev.persist()
-    n_rev = rev.count()
-    bands_dir, payload_dir = f"{store_dir}/bands", f"{store_dir}/payload"
-    # payload: revoked ids pin their idb partitions directly
-    idbs = sorted(
-        r["idb"]
-        for r in rev.select(
-            F.pmod(F.col(id_col), F.lit(n_buckets)).cast("int").alias("idb")
-        )
-        .distinct()
-        .collect()
-    )
-    if idbs:
-        payload = spark.read.parquet(payload_dir).filter(
-            F.col("idb").isin(idbs)
-        )
-        # recompute the revoked docs' band hashes FROM their stored hs —
-        # exactly the rows the band side holds for them — to pin the
-        # touched band buckets without scanning the whole band table
-        rev_payload = payload.join(F.broadcast(rev), id_col, "left_semi")
-        rev_bands = (
-            _explode_bands(
-                _bands_from_hashed(rev_payload.select(id_col, "hs"), id_col),
-                id_col,
+    try:
+        rev_bands = _explode_bands(_bands_from_hashed(revoked, id_col), id_col)
+        for store, held in (
+            (bands, bands.buckets_of(rev_bands)),
+            (payload, payload.buckets_of(revoked)),
+        ):
+            store.rewrite_buckets(
+                held,
+                store.read_buckets(held).join(F.broadcast(ids), id_col, "left_anti"),
             )
-            .withColumn("bucket", _band_bucket(F.col("h"), n_buckets))
-        )
-        touched = sorted(
-            r["bucket"] for r in rev_bands.select("bucket").distinct().collect()
-        )
-        if touched:
-            # localCheckpoint: cut lineage BEFORE overwriting the dir the
-            # frame reads from (Spark refuses a write over its own input
-            # otherwise), same rationale as the gate's flags frame
-            kept_bands = (
-                spark.read.parquet(bands_dir)
-                .filter(F.col("bucket").isin(touched))
-                .join(F.broadcast(rev), id_col, "left_anti")
-                .select(id_col, "band_idx", "h", "bucket")
-                .localCheckpoint()
-            )
-            kept_bands.repartition(F.col("bucket")).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "bucket"
-            ).parquet(bands_dir)
-            # dynamic overwrite only rewrites partitions PRESENT in the
-            # output — a touched bucket left with zero kept rows must be
-            # deleted explicitly or its revoked rows survive
-            kept_bkts = {
-                r["bucket"]
-                for r in kept_bands.select("bucket").distinct().collect()
-            }
-            for b in set(touched) - kept_bkts:
-                delete_dir(spark, f"{bands_dir}/bucket={b}")
-        kept_payload = (
-            payload.join(F.broadcast(rev), id_col, "left_anti")
-            .select(id_col, "hs", "idb")
-            .localCheckpoint()
-        )
-        kept_payload.repartition(F.col("idb")).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "idb"
-        ).parquet(payload_dir)
-        kept_idbs = {
-            r["idb"] for r in kept_payload.select("idb").distinct().collect()
-        }
-        for b in set(idbs) - kept_idbs:
-            delete_dir(spark, f"{payload_dir}/idb={b}")
-    rev.unpersist()
-    delete_dir(spark, f"{store_dir.rstrip('/')}/_revoked")
-    return n_rev
-
-
-def _band_bucket(h: Column, n_buckets: int) -> Column:
-    """Bucket of a band hash (an md5 HEX string): its first 8 hex digits
-    as an int, mod the store modulus — deterministic and engine-portable
-    (the md5_hash32 recipe applied to an already-md5 value)."""
-    return F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"), F.lit(n_buckets)
-    ).cast("int")
+    finally:
+        revoked.unpersist()
 
 
 def incremental_neardup_ingest(
@@ -566,37 +400,28 @@ def incremental_neardup_ingest(
     store_dir: str,
     threshold: float = 0.2,
     id_col: str = "doc_id",
-    bucketed_n: int | None = None,
 ) -> DataFrame:
     """Ingest-time near-dup gate over a PERSISTENT signature store — the
     continuously-fed corpus shape: each arriving batch is (1) deduplicated
     within itself (LSH pairs → connected components → min-id keeper, the
     px02 recipe), then (2) its keepers are checked against the signatures
     of every previously-ACCEPTED document; only novel keepers' signatures
-    are appended to the store. Returns one row per batch doc:
+    enter the store. Returns one row per batch doc:
     ``(doc_id, is_dup, matched_id)`` where matched_id is the in-batch
-    cluster keeper or the smallest matching stored id.
+    cluster keeper or the smallest matching stored id. Ids must be of an
+    integer type and come back as ``bigint``.
 
-    TWO store layouts, selected by the store's own ``_STORE_META.json``
-    (the merge.py discipline — geometry travels with the directory):
+    The store is two ``StateStore``s (``_gate_stores``). The probe reads
+    the ``bands`` buckets the keepers' band hashes hash into, and then the
+    ``payload`` buckets of the candidate ids only, for the Jaccard verify;
+    per-epoch gate I/O tracks the batch, not the history. The accepted
+    docs are committed with one ``upsert_many`` over both stores.
 
-    - FLAT (default for new stores with ``bucketed_n=None``): plain
-      parquet of (doc_id, hs, band0..bandN). Every epoch re-reads and
-      re-explodes the whole history's band columns and the verify join
-      scans the whole ``hs`` payload column — fine while batches are a
-      sizable fraction of history (the st04 bench shape).
-    - BUCKETED (VERDICT r11 #5 — pass ``bucketed_n`` at store creation,
-      or let an existing meta pick it): ``store/bands`` holds the
-      EXPLODED (doc_id, band_idx, h) rows partitioned by
-      ``bucket = md5-prefix(h) % n``; ``store/payload`` holds
-      (doc_id, hs) partitioned by ``idb = doc_id % n``. The probe then
-      (a) lists only the band buckets the BATCH's hashes touch, and
-      (b) reads the hs payload only for the id-buckets of actual LSH
-      candidates — per-epoch gate I/O tracks the BATCH, not the history.
-      That is the trickle-ingest regime (batch ≪ history, n ≫ the
-      batch's distinct band hashes); measured in
-      scripts/stress_ingest_gate.py. Flags output is IDENTICAL across
-      layouts (equivalence test in test_extensions.py).
+    Replay: the probe drops a stored row with the probed doc's own id, so
+    a re-delivered accepted doc is ``(False, None)`` again and its
+    re-upsert changes nothing. Two keepers of one batch never match each
+    other (they would share a cluster), so a re-run after a crash at
+    either store's commit returns the first run's flags and converges.
 
     State grows with ACCEPTED docs only — the bounded-state trade every
     incremental dedup makes: a duplicate's signature is discarded, so a
@@ -605,19 +430,17 @@ def incremental_neardup_ingest(
     chain them. Documented semantics, pinned by test_incremental_ingest_*.
 
     Scale shape: per batch — one shingle+hash pass over the batch, one
-    in-batch LSH (sub-quadratic), one band join against the store
-    (file-pruned to touched buckets under the bucketed layout), a
-    candidates-only Jaccard verify (payload file-pruned to candidate
-    id-buckets), one append. Nothing rescans the accepted corpus' text."""
+    in-batch LSH (sub-quadratic), one band join against the touched
+    buckets, a candidates-only Jaccard verify, one upsert. Nothing
+    rescans the accepted corpus."""
     spark = batch.sparkSession
+    bands, payload = _gate_stores(spark, store_dir, id_col)
+    batch = _gate_ids(batch, id_col)
     hs_new = hashed_shingles(batch, id_col).persist()
-    # Pin the BAND frame alongside hs (r14): the epoch's minhash + band
-    # md5 chain used to evaluate up to FOUR times — once per LSH
-    # self-join side, once in the store probe, once in the append — all
-    # from the cached hs. One count() on the persisted bands
-    # materializes hs AND bands in a single job (computing a band
-    # partition pulls its hs partition through the cache layer), so the
-    # chain now runs exactly once per epoch.
+    # Pin the BAND frame alongside hs: the in-batch LSH self-join, the
+    # store probe and the upsert all read it. One count() on the persisted
+    # bands materializes hs AND bands in a single job (computing a band
+    # partition pulls its hs partition through the cache layer).
     bands_all = _bands_from_hashed(hs_new, id_col).persist()
     bands_all.count()
     # (1) within-batch: pairs → clusters → min-id keeper
@@ -629,80 +452,27 @@ def incremental_neardup_ingest(
         F.col(id_col), F.col("cluster_id").alias("matched_in")
     )
     keepers = hs_new.join(in_dup.select(id_col), id_col, "left_anti")
-    # same rows as _bands_from_hashed(keepers): the band columns are a
-    # deterministic per-row function of hs, and the anti-join filters
-    # the identical id set — but served from the pinned band cache
-    bands_new = bands_all.join(in_dup.select(id_col), id_col, "left_anti")
-    meta = _gate_meta(spark, store_dir)
-    if meta is not None:
-        flags = _ingest_gate_bucketed(
-            spark, store_dir, int(meta["n_buckets"]), threshold, id_col,
-            hs_new, in_dup, keepers, bands_new,
-        )
-        bands_all.unpersist()
-        return flags
-    if bucketed_n is not None:
-        # Refuse to bucket OVER an existing flat history (ADVICE r12):
-        # writing the meta here would switch every later probe to the
-        # bucketed arm while the accepted history still sits as flat
-        # parquet in the store root — silently abandoned, so duplicates
-        # of previously-accepted docs are re-admitted from this epoch on.
-        from ..streaming.fsio import dir_has_files as _dhf
-
-        if _dhf(spark, store_dir, suffix=".parquet"):
-            raise ValueError(
-                f"gate store {store_dir} already holds a FLAT-layout "
-                "history; run migrate_gate_store(spark, store_dir, "
-                "n_buckets) first (idempotent, crash-safe), then call "
-                "without bucketed_n — the meta routes the layout"
-            )
-        _write_gate_meta(spark, store_dir, int(bucketed_n))
-        flags = _ingest_gate_bucketed(
-            spark, store_dir, int(bucketed_n), threshold, id_col,
-            hs_new, in_dup, keepers, bands_new,
-        )
-        bands_all.unpersist()
-        return flags
-    # (2) keepers vs the accepted history. The existence probe goes through
-    # the Hadoop FileSystem API (fsio), NOT os.listdir: the store is read
-    # and appended via spark.read/write, so on an HDFS/S3 sig_dir a
-    # driver-local check would be always-False and every epoch would
-    # silently re-admit duplicates while the appends kept succeeding
-    # (ADVICE r10 — the same failure mode fsio closed for st04's counters).
-    from ..streaming.fsio import dir_has_files
-
-    store_exists = dir_has_files(spark, store_dir, suffix=".parquet")
-    if store_exists:
-        # root-level glob, not a directory read: a migrate_gate_store run
-        # crashed before its meta write leaves bands/payload subdirs that
-        # must not be swept into the flat-schema scan.
-        # Explicit schema (r14): the flat store's layout is this
-        # function's own append contract (id, band0..bandN, hs), so
-        # schema inference — a per-epoch driver pass over every store
-        # file's footer, measured in the 0.5-0.9s "probe frame built"
-        # phase — buys nothing. Parquet resolves columns by name, so
-        # column order in older files is irrelevant.
-        store_schema = T.StructType(
-            [batch.schema[id_col]]
-            + [T.StructField(f"band{b}", T.StringType()) for b in range(N_BANDS)]
-            + [T.StructField("hs", T.ArrayType(T.LongType()))]
-        )
-        old = spark.read.schema(store_schema).parquet(f"{store_dir}/*.parquet")
-        # revoked docs leave the accepted history (right-to-be-forgotten;
-        # broadcast anti-join, absent entirely on a store with no
-        # revocations)
-        revoked = _read_gate_revoked(spark, store_dir, id_col)
-        if revoked is not None:
-            old = old.join(F.broadcast(revoked), id_col, "left_anti")
+    new_bands = _explode_bands(
+        bands_all.join(in_dup.select(id_col), id_col, "left_anti"), id_col
+    )
+    # (2) keepers vs the accepted history
+    cand = None
+    if bands.exists():
+        probe = new_bands.withColumnRenamed(id_col, "new_id")
         cand = (
-            _explode_bands(bands_new.alias("n"), id_col)
-            .withColumnRenamed(id_col, "new_id")
-            .join(
-                _explode_bands(old, id_col).withColumnRenamed(id_col, "old_id"),
+            probe.join(
+                bands.read_buckets(bands.buckets_of(probe)).withColumnRenamed(
+                    id_col, "old_id"
+                ),
                 ["band_idx", "h"],
             )
+            .filter(F.col("new_id") != F.col("old_id"))  # the replay guard
             .select("new_id", "old_id")
             .distinct()
+            .persist()
+        )
+        stored = payload.read_buckets(
+            payload.buckets_of(cand.select(F.col("old_id").alias(id_col)))
         )
         jac = F.size(F.array_intersect("hs_n", "hs_o")).cast("double") / F.size(
             F.array_union("hs_n", "hs_o")
@@ -715,7 +485,7 @@ def incremental_neardup_ingest(
                 "new_id",
             )
             .join(
-                old.select(
+                stored.select(
                     F.col(id_col).alias("old_id"), F.col("hs").alias("hs_o")
                 ),
                 "old_id",
@@ -741,167 +511,23 @@ def incremental_neardup_ingest(
             F.coalesce("matched_in", "matched_old").alias("matched_id"),
         )
         # localCheckpoint, not persist: it CUTS lineage, so the result can
-        # neither be invalidated by hs_new.unpersist() below (cache drops
-        # cascade to dependents) nor silently recomputed against the store
-        # AFTER the append — a lazy flags re-scanning the store would see
-        # the batch's own rows and flag every accepted doc as its own dup
+        # neither be invalidated by the unpersists below (cache drops
+        # cascade to dependents) nor re-run lazily by a caller against a
+        # later store version
         .localCheckpoint()
     )
-    accepted = bands_new.join(
-        keepers.select(id_col, "hs"), id_col
-    ).join(
-        flags.filter(F.col("is_dup")).select(id_col), id_col, "left_anti"
+    accepted = flags.filter(~F.col("is_dup")).select(id_col)
+    upsert_many(
+        spark,
+        [
+            (bands, new_bands.join(accepted, id_col)),
+            (payload, keepers.join(accepted, id_col)),
+        ],
     )
-    accepted.write.mode("append").parquet(store_dir)
-    hs_new.unpersist()
-    bands_all.unpersist()
-    return flags
-
-
-def _ingest_gate_bucketed(
-    spark,
-    store_dir: str,
-    n_buckets: int,
-    threshold: float,
-    id_col: str,
-    hs_new: DataFrame,
-    in_dup: DataFrame,
-    keepers: DataFrame,
-    bands_new: DataFrame,
-) -> DataFrame:
-    """Bucketed-history arm of ``incremental_neardup_ingest`` (VERDICT r11
-    #5): the history-facing reads are FILE-PRUNED through the partitioned
-    layout —
-
-    - band probe: only the buckets the batch's band hashes touch are
-      listed (a trickle batch touches ~|batch bands| of n buckets);
-    - hs verify: only the id-buckets of actual LSH candidates are read
-      (the big shingle-payload column is never scanned wholesale).
-
-    The two distinct-bucket collects are bounded by n_buckets rows each —
-    the price of driver-side partition pruning, the merge.py StateStore
-    discipline. Flags output is identical to the flat layout (equivalence
-    pinned in test_extensions.py); only storage and probe I/O differ.
-    Assumes a NUMERIC id (the flat arm's empty-frame schema makes the
-    same assumption)."""
-    from ..streaming.fsio import dir_nonempty
-
-    bands_dir, payload_dir = f"{store_dir}/bands", f"{store_dir}/payload"
-    en = (
-        _explode_bands(bands_new, id_col)
-        .withColumnRenamed(id_col, "new_id")
-        .withColumn("bucket", _band_bucket(F.col("h"), n_buckets))
-        .persist()
-    )
-    en.count()  # pin: probed twice (touched-buckets collect + join) + append
-    cand = None
-    if dir_nonempty(spark, bands_dir):
-        touched = sorted(
-            r["bucket"] for r in en.select("bucket").distinct().collect()
-        )
-        old_bands = spark.read.parquet(bands_dir).filter(
-            F.col("bucket").isin(touched)
-        )
-        # revoked docs leave the accepted history (right-to-be-forgotten):
-        # one anti-join on the band side suffices — a revoked doc then
-        # can't become an LSH candidate, so the payload read (driven by
-        # candidate old_ids) never sees it either
-        revoked = _read_gate_revoked(spark, store_dir, id_col)
-        if revoked is not None:
-            old_bands = old_bands.join(
-                F.broadcast(revoked), id_col, "left_anti"
-            )
-        cand = (
-            en.select("new_id", "band_idx", "h")
-            .join(
-                old_bands.select(
-                    F.col(id_col).alias("old_id"), "band_idx", "h"
-                ),
-                ["band_idx", "h"],
-            )
-            .select("new_id", "old_id")
-            .distinct()
-            .persist()
-        )
-        idbs = sorted(
-            r["idb"]
-            for r in cand.select(
-                F.pmod(F.col("old_id"), F.lit(n_buckets))
-                .cast("int")
-                .alias("idb")
-            )
-            .distinct()
-            .collect()
-        )
-        if idbs:
-            payload = spark.read.parquet(payload_dir).filter(
-                F.col("idb").isin(idbs)
-            )
-            jac = F.size(F.array_intersect("hs_n", "hs_o")).cast(
-                "double"
-            ) / F.size(F.array_union("hs_n", "hs_o"))
-            old_matches = (
-                cand.join(
-                    keepers.select(
-                        F.col(id_col).alias("new_id"), F.col("hs").alias("hs_n")
-                    ),
-                    "new_id",
-                )
-                .join(
-                    payload.select(
-                        F.col(id_col).alias("old_id"), F.col("hs").alias("hs_o")
-                    ),
-                    "old_id",
-                )
-                .filter(jac >= threshold)
-                .groupBy("new_id")
-                .agg(F.min("old_id").alias("matched_old"))
-            )
-        else:
-            old_matches = spark.createDataFrame(
-                [], "new_id bigint, matched_old bigint"
-            )
-    else:
-        old_matches = spark.createDataFrame(
-            [], "new_id bigint, matched_old bigint"
-        )
-    flags = (
-        hs_new.select(id_col)
-        .join(in_dup, id_col, "left")
-        .join(
-            old_matches.withColumnRenamed("new_id", id_col), id_col, "left"
-        )
-        .select(
-            F.col(id_col),
-            (F.col("matched_in").isNotNull() | F.col("matched_old").isNotNull())
-            .alias("is_dup"),
-            F.coalesce("matched_in", "matched_old").alias("matched_id"),
-        )
-        # localCheckpoint for the same reason as the flat arm: cut lineage
-        # BEFORE the appends below, or a lazy flags would rescan the store
-        # post-append and flag every accepted doc as its own duplicate
-        .localCheckpoint()
-    )
-    accepted_ids = keepers.select(id_col).join(
-        flags.filter(F.col("is_dup")).select(id_col), id_col, "left_anti"
-    )
-    # appends: repartition ON the partition column first, so each writer
-    # task holds whole buckets (without it every task can emit a file into
-    # every bucket directory — n_tasks × n_buckets small files)
-    en.join(accepted_ids.withColumnRenamed(id_col, "new_id"), "new_id").select(
-        F.col("new_id").alias(id_col), "band_idx", "h", "bucket"
-    ).repartition(F.col("bucket")).write.mode("append").partitionBy(
-        "bucket"
-    ).parquet(bands_dir)
-    keepers.select(id_col, "hs").join(accepted_ids, id_col).withColumn(
-        "idb", F.pmod(F.col(id_col), F.lit(n_buckets)).cast("int")
-    ).repartition(F.col("idb")).write.mode("append").partitionBy(
-        "idb"
-    ).parquet(payload_dir)
     if cand is not None:
         cand.unpersist()
-    en.unpersist()
     hs_new.unpersist()
+    bands_all.unpersist()
     return flags
 
 

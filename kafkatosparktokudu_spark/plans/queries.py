@@ -3098,8 +3098,10 @@ def px06_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time incremental near-dup gate: the corpus arrives in two
     doc_id-ordered batches; each batch is cluster-deduped within itself,
     then its keepers are screened against the signature store of every
-    previously accepted doc (operators/dedup.py::incremental_neardup_ingest).
-    The oracle recomputes both phases from scratch in SQL — per-half
+    previously accepted doc — two StateStores, band rows and shingle
+    payload, that each batch's accepted docs are upserted into
+    (operators/dedup.py::incremental_neardup_ingest). The oracle
+    recomputes both phases from scratch in SQL — per-half
     transitive-closure clusters plus the cross-half signature screen."""
     import shutil
     import tempfile
@@ -4604,18 +4606,16 @@ def st09_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def px25_gate_revoke(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ingest gate FORGETTING accepted documents (r13 session 3 —
-    operators/dedup.py::revoke_from_gate_store): batch 1 ingests and its
-    accepted docs with doc_id % 5 == 0 are then revoked (tombstoned out
-    of the signature store — the gate-side half of right-to-be-
-    forgotten); batch 2's keepers are screened against the REDUCED
-    history, so near-duplicates of revoked docs are re-admitted where
-    px06 rejects them. Oracle = px06's two-phase SQL with the
-    revocation predicate applied to the accepted-history CTE
+    """The ingest gate FORGETTING accepted documents
+    (operators/dedup.py::revoke_from_gate_store): batch 1 ingests and its
+    accepted docs with doc_id % 5 == 0 are then revoked (their rows are
+    deleted from both gate stores, band rows first — the gate-side half
+    of right-to-be-forgotten); batch 2's keepers are screened against
+    the REDUCED history, so near-duplicates of revoked docs are
+    re-admitted where px06 rejects them. Oracle = px06's two-phase SQL
+    with the revocation predicate applied to the accepted-history CTE
     (revoke-equals-never-stored, the gate twin of the index families'
-    delete-equals-rebuild). Physical reclamation (partition-pruned
-    purge / revocation-aware migration) is pinned in
-    tests/test_extensions.py."""
+    delete-equals-rebuild)."""
     import shutil
     import tempfile
 
@@ -4640,7 +4640,6 @@ def px25_gate_revoke(spark: SparkSession, sf_dir: str) -> DataFrame:
             f1.filter(~F.col("is_dup"))
             .filter(F.col("doc_id") % 5 == 0)
             .select("doc_id"),
-            epoch=1,
         )
         f2 = incremental_neardup_ingest(
             docs.filter(F.col("doc_id") >= cut), store

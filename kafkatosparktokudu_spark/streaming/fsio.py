@@ -40,24 +40,6 @@ def list_epochs(spark: SparkSession, dir_uri: str) -> list[int]:
     return sorted(out)
 
 
-def dir_has_files(
-    spark: SparkSession, dir_uri: str, suffix: str = ".parquet"
-) -> bool:
-    """True iff ``dir_uri`` exists and directly contains at least one file
-    ending in ``suffix`` — the existence probe a parquet-backed state dir
-    needs before ``spark.read``. Goes through the Hadoop FileSystem API so
-    it is exactly as remote-capable as the reads/writes it guards
-    (ADVICE r10: the os.listdir version is always-False on HDFS/S3, which
-    silently resets incremental state)."""
-    fs, path = _fs_and_path(spark, dir_uri)
-    if not fs.exists(path):
-        return False
-    return any(
-        st.isFile() and st.getPath().getName().endswith(suffix)
-        for st in fs.listStatus(path)
-    )
-
-
 def epoch_is_complete(spark: SparkSession, dir_uri: str, epoch: int) -> bool:
     """True iff ``dir_uri/epoch=N`` carries the ``_SUCCESS`` marker Spark's
     file committer writes LAST — i.e. the snapshot write finished. A
@@ -89,27 +71,11 @@ def latest_epoch_before(
     return max(prior) if prior else None
 
 
-def dir_nonempty(spark: SparkSession, dir_uri: str) -> bool:
-    """True iff ``dir_uri`` exists and has at least one child entry (file
-    OR subdirectory) — the existence probe for PARTITIONED parquet state
-    dirs, whose direct children are ``col=value`` directories rather than
-    files (``dir_has_files`` is the probe for flat stores). Same Hadoop
-    FileSystem API rationale: exactly as remote-capable as the
-    reads/writes it guards."""
-    fs, path = _fs_and_path(spark, dir_uri)
-    if not fs.exists(path):
-        return False
-    return len(fs.listStatus(path)) > 0
-
-
 def read_text(spark: SparkSession, file_uri: str) -> str | None:
-    """Contents of a small control file (store meta, commit markers) via
+    """Contents of a small control file (an index's meta sidecar) via
     the Hadoop FileSystem API, or None if the file does not exist. Read
-    errors OTHER than absence propagate — a store whose meta exists but
-    cannot be read must fail loudly, never silently degrade (ADVICE r12:
-    a driver-local ``open()`` on an HDFS/S3 store dir swallowed OSError
-    and demoted a bucketed gate store to the flat arm with an empty
-    history)."""
+    errors OTHER than absence propagate — an index whose meta exists but
+    cannot be read must fail loudly, never silently degrade."""
     fs, path = _fs_and_path(spark, file_uri)
     if not fs.exists(path):
         return None
@@ -148,24 +114,6 @@ def write_text_atomic(spark: SparkSession, file_uri: str, text: str) -> None:
         fs.delete(path, False)
     if not fs.rename(tmp, path):
         raise OSError(f"atomic rename failed for {file_uri}")
-
-
-def delete_direct_files(
-    spark: SparkSession, dir_uri: str, suffix: str = ".parquet"
-) -> int:
-    """Delete the files DIRECTLY under ``dir_uri`` ending in ``suffix``
-    (subdirectories untouched) and return how many — the cleanup step of
-    a flat→bucketed store migration, via the same Hadoop FileSystem API
-    as everything else here."""
-    fs, path = _fs_and_path(spark, dir_uri)
-    if not fs.exists(path):
-        return 0
-    n = 0
-    for st in fs.listStatus(path):
-        if st.isFile() and st.getPath().getName().endswith(suffix):
-            fs.delete(st.getPath(), False)
-            n += 1
-    return n
 
 
 def delete_dir(spark: SparkSession, dir_uri: str) -> bool:

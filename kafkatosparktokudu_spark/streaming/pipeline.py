@@ -395,16 +395,17 @@ def start_dedup_ingest(
     streaming face of ``operators.dedup.incremental_neardup_ingest``:
     each micro-batch is cluster-deduped within itself, screened against
     the signature store of everything previously accepted, and only novel
-    keepers' signatures are appended; per-doc (is_dup, matched_id) flags
-    land in ``flags_dir`` as parquet for the downstream writer.
+    keepers' signatures are upserted into it; per-doc (is_dup, matched_id)
+    flags land in ``flags_dir`` as parquet for the downstream writer.
 
     Exactly-once shape: the flag write is idempotent per epoch (overwrite
-    of the epoch's own subdirectory), and a replayed batch re-screens
-    against a store that already contains its accepted docs — those
-    re-match themselves and are NOT re-appended, so the store converges
-    (pinned by test_stream_dedup_ingest_replay_converges).
+    of the epoch's own subdirectory), and the gate is an idempotent sink:
+    a replayed batch's accepted docs do not match their own stored rows,
+    so they get the first delivery's flags and their re-upsert changes
+    nothing (pinned by
+    test_stream_dedup_ingest_matches_batch_and_replay_converges).
 
-    ``docs_stream`` must carry (doc_id, text).
+    ``docs_stream`` must carry (doc_id, text), doc_id of an integer type.
     """
 
     def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
@@ -412,20 +413,6 @@ def start_dedup_ingest(
 
         flags = incremental_neardup_ingest(
             batch_df.select("doc_id", "text"), store_dir, threshold
-        )
-        # replay guard: a re-delivered epoch's accepted docs are already in
-        # the store and match themselves — normalize the flags so the
-        # replayed epoch's output equals the original delivery's
-        flags = flags.withColumn(
-            "is_dup",
-            F.when(F.col("matched_id") == F.col("doc_id"), F.lit(False)).otherwise(
-                F.col("is_dup")
-            ),
-        ).withColumn(
-            "matched_id",
-            F.when(F.col("matched_id") == F.col("doc_id"), F.lit(None)).otherwise(
-                F.col("matched_id")
-            ),
         )
         flags.write.mode("overwrite").parquet(f"{flags_dir}/epoch={epoch_id}")
 
@@ -453,9 +440,8 @@ def ingest_shards_epoch(
     Per epoch:
       1. ``incremental_neardup_ingest`` screens the batch within itself
          and against the signature store of everything previously
-         accepted (replay-normalized like ``start_dedup_ingest``: a
-         re-delivered epoch's accepted docs match themselves in the
-         store and stay accepted).
+         accepted (a re-delivered epoch's accepted docs do not match
+         their own stored rows, so they stay accepted).
       2. Accepted docs get the px14 quality score, a value band
          (``least(n_bands-1, floor(p_keep*n_bands))``) and the px19
          md5-32 order key.
@@ -491,18 +477,6 @@ def ingest_shards_epoch(
     spark = batch_df.sparkSession
     flags = incremental_neardup_ingest(
         batch_df.select("doc_id", "text"), store_dir, threshold
-    )
-    # replay guard (see start_dedup_ingest): self-matches stay accepted
-    flags = flags.withColumn(
-        "is_dup",
-        F.when(F.col("matched_id") == F.col("doc_id"), F.lit(False)).otherwise(
-            F.col("is_dup")
-        ),
-    ).withColumn(
-        "matched_id",
-        F.when(F.col("matched_id") == F.col("doc_id"), F.lit(None)).otherwise(
-            F.col("matched_id")
-        ),
     )
     flags.write.mode("overwrite").parquet(f"{out_dir}/flags/epoch={epoch_id}")
     # reuse the flags frame directly (r14): it hangs off a

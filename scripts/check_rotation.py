@@ -1,10 +1,8 @@
-"""Mechanical rotation check (VERDICT r10 #3/#9): every query whose
-implementing code changed this round must sit inside the driver's
-front-50 CORRECTNESS window (= the first 50 keys of QUERIES).
-
-The r10 miss this closes: NOTES claimed "dd07/tx19 rotated in", but
-tx19_bpe_merges — whose merge-table path WAS touched — never made the
-window, and nothing caught it. Now the claim is a computation:
+"""Which queries a change affects: every query whose implementing code
+changed, printed as the test node ids that re-check it (its
+``test_oracle_parity`` case, or ``test_all_queries_run`` for a query
+without an oracle), so the claim "these queries still match" is a
+computation:
 
     python scripts/check_rotation.py [--base REF]
 
@@ -24,8 +22,9 @@ window, and nothing caught it. Now the claim is a computation:
   plans/oracle.py intersect with the query/oracle key sets directly
   (subscript assigns like ``ORACLE_SQL["q"] = ...`` included).
 
-Exit 0 = every affected query is inside the window (prints the set so
-NOTES can quote it); exit 1 = violations listed.
+Exit 0 = the affected queries are printed, one node id a line, to run
+as ``python -m pytest <ids>``; exit 1 = an affected query is missing from
+fixtures/query_deps.json (regenerate it with scripts/gen_query_deps.py).
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 PKG = "kafkatosparktokudu_spark"
-WINDOW = 50
+ORACLE_TESTS = "tests/test_queries_oracle.py"
 
 
 def _git(*args: str) -> str:
@@ -147,10 +146,27 @@ def _changed_names(base_src: str, head_src: str) -> set[str]:
     return touched
 
 
+def verdict(
+    affected: set[str], queries: list[str], oracles: set[str], deps: dict
+) -> tuple[list[str], int]:
+    """(lines to print, exit code) for the ``affected`` query names: the
+    ``test_oracle_parity`` node id of each affected query with an oracle,
+    ``test_all_queries_run`` once for those without, and exit 1 when an
+    affected query is missing from the deps map."""
+    live = sorted(q for q in affected if q in queries)
+    lines = [f"affected queries ({len(live)}):"]
+    lines += [f"{ORACLE_TESTS}::test_oracle_parity[{q}]" for q in live if q in oracles]
+    if any(q not in oracles for q in live):
+        lines.append(f"{ORACLE_TESTS}::test_all_queries_run")
+    missing = [q for q in live if q not in deps]
+    if missing:
+        lines.append(f"NOT IN DEPS MAP (regenerate gen_query_deps.py): {missing}")
+    return lines, int(bool(missing))
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default=None)
-    ap.add_argument("--window", type=int, default=WINDOW)
     args = ap.parse_args()
     base = args.base or _default_base()
 
@@ -162,7 +178,6 @@ def main() -> int:
     from kafkatosparktokudu_spark.plans.oracle import ORACLE_SQL
     from kafkatosparktokudu_spark.plans.queries import QUERIES
 
-    order = list(QUERIES)
     with open(os.path.join(REPO, "fixtures", "query_deps.json"), encoding="utf-8") as fh:
         deps = json.load(fh)
 
@@ -194,37 +209,10 @@ def main() -> int:
         hits = {f"{f}::{n}" for n in changed}
         affected |= {q for q, sites in deps.items() if hits & set(sites)}
 
-    missing = [q for q in sorted(affected) if q not in deps and q in order]
-    window = order[: args.window]
-    overflow = sorted(q for q in affected if q in order and q not in set(window))
-    idle_slots = [q for q in window if q not in affected]
     print(f"base: {base[:12]}  changed package files: {len(changed_files)}")
-    print(f"affected queries ({len(affected)}): {sorted(affected)}")
-    if missing:
-        print(f"NOT IN DEPS MAP (regenerate gen_query_deps.py): {missing}")
-    if not overflow:
-        print(
-            f"rotation OK: all affected queries sit inside the "
-            f"front-{args.window} window"
-        )
-        return 0
-    # Wide-refactor rounds can implicate more queries than the window
-    # holds. The invariant then: the window must be SATURATED — no slot
-    # wasted on an unaffected query while an affected one waits outside.
-    if not idle_slots:
-        print(
-            f"rotation OK (window saturated): {len(overflow)} affected "
-            f"queries overflow a fully-packed front-{args.window} — quote "
-            f"the overflow in NOTES for next round's rotation: {overflow}"
-        )
-        return 0
-    print(
-        f"ROTATION VIOLATION: affected queries outside the window "
-        f"({len(overflow)}): {overflow}\n"
-        f"while unaffected queries hold window slots ({len(idle_slots)}): "
-        f"{idle_slots}"
-    )
-    return 1
+    lines, code = verdict(affected, list(QUERIES), set(ORACLE_SQL), deps)
+    print("\n".join(lines))
+    return code
 
 
 if __name__ == "__main__":

@@ -1,12 +1,9 @@
 """Generate fixtures/query_deps.json: query key -> package files whose
 code executes when the query builds/runs at sf0.001.
 
-Why: the rotation rule (VERDICT r10 #3/#9) says every query whose
-implementing code changed in a round must sit inside the driver's
-front-50 CORRECTNESS window. r10 broke it silently (tx19 was
-local_frame-touched but not rotated). This map makes the rule checkable
-mechanically: scripts/check_rotation.py diffs the round's changed files
-against it.
+Why: every query whose implementing code a change touched must be
+re-checked. This map makes that set mechanical: scripts/check_rotation.py
+diffs the change's files against it and prints the tests to run.
 
 Granularity: FUNCTION-level everywhere (r11.2) — each row maps a query
 to the ``path::root_qualname`` code objects that actually executed

@@ -580,6 +580,17 @@ def test_shard_export_offsets_match_tarfile(spark, tmp_path):
     assert seen == len(payloads)
 
 
+def _gate_ids_stored(spark, store):
+    """The ids a gate store has accepted, read from both of its stores
+    (they must agree)."""
+    from kafkatosparktokudu_spark.operators.dedup import _gate_stores
+
+    bands, payload = _gate_stores(spark, store, "doc_id")
+    ids = {r["doc_id"] for r in payload.read().collect()}
+    assert {r["doc_id"] for r in bands.read().collect()} == ids
+    return ids
+
+
 def test_incremental_ingest_flags_and_store(spark, tmp_path):
     """Ingest-time near-dup gate semantics: in-batch clusters keep the min
     id; keepers are checked against previously-ACCEPTED signatures only;
@@ -613,8 +624,7 @@ def test_incremental_ingest_flags_and_store(spark, tmp_path):
           for r in incremental_neardup_ingest(b2, store).collect()}
     assert f2 == {4: (True, 1), 5: (False, None), 6: (True, 5)}
 
-    stored = {r["doc_id"] for r in spark.read.parquet(store).collect()}
-    assert stored == {1, 3, 5}
+    assert _gate_ids_stored(spark, store) == {1, 3, 5}
 
     # re-ingesting an accepted doc's twin still dedups against the store
     b3 = spark.createDataFrame(
@@ -3221,126 +3231,71 @@ def test_hybrid_index_serving_reads_no_raw_table(spark, tmp_path):
         assert "testdata" not in ln, ln
 
 
-def test_incremental_ingest_bucketed_equivalence(spark, tmp_path):
-    """VERDICT r11 #5: the BUCKETED gate-store layout (bands exploded and
-    partitioned by band-hash bucket, hs payload partitioned by id bucket)
-    must produce flag-for-flag identical output to the flat layout over
-    the same batch sequence, including the sticky-store semantics (a
-    later twin of an accepted doc still dedups) and the meta-driven
-    geometry (a second call without bucketed_n adopts the stored
-    modulus). The layouts differ ONLY in probe I/O."""
-    import os
-
-    from kafkatosparktokudu_spark.operators.dedup import (
-        incremental_neardup_ingest,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " \
-           "lam mu nu xi omicron pi rho sigma tau upsilon"
-    uniq1 = "one two three four five six seven eight nine ten " \
-            "eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen nineteen twenty"
-    uniq2 = "red orange yellow green blue indigo violet black white gray " \
-            "pink brown cyan magenta olive navy teal maroon silver gold"
-    batches = [
-        [(1, base), (2, base + " extra tail"), (3, uniq1)],
-        [(4, base + " tiny change"), (5, uniq2), (6, uniq2 + " small tweak")],
-        [(7, uniq2 + " later copy")],
-    ]
-    flat, buck = str(tmp_path / "flat"), str(tmp_path / "buck")
-    for i, rows in enumerate(batches):
-        b = spark.createDataFrame(rows, "doc_id bigint, text string")
-        ff = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-              for r in incremental_neardup_ingest(b, flat).collect()}
-        # bucketed_n only on the FIRST call — later calls must adopt the
-        # persisted _STORE_META geometry
-        fb = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-              for r in incremental_neardup_ingest(
-                  b, buck, bucketed_n=32 if i == 0 else None
-              ).collect()}
-        assert fb == ff, (i, fb, ff)
-    # layout sanity: partitioned subdirs + meta, and the same accepted set
-    assert os.path.exists(f"{buck}/_STORE_META.json")
-    bands = spark.read.parquet(f"{buck}/bands")
-    payload = spark.read.parquet(f"{buck}/payload")
-    assert "bucket" in bands.columns and "idb" in payload.columns
-    assert {r["doc_id"] for r in payload.select("doc_id").distinct().collect()} \
-        == {1, 3, 5}
-    # replay: re-delivering batch 2 reproduces its flags bit-for-bit
-    b = spark.createDataFrame(batches[1], "doc_id bigint, text string")
-    fb = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-          for r in incremental_neardup_ingest(b, buck).collect()}
-    # 5 matches its own stored signature (the pipeline-level replay guard
-    # rewrites self-matches; at THIS layer a replayed accepted doc reports
-    # matched_id == itself, exactly like the flat layout)
-    ff = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-          for r in incremental_neardup_ingest(b, flat).collect()}
-    assert fb == ff
-
-
-def test_gate_store_flat_to_bucketed_migration(spark, tmp_path):
-    """ADVICE r12: (a) passing bucketed_n over an EXISTING flat history
-    must refuse (writing the meta would silently abandon the accepted
-    history and re-admit its duplicates); (b) migrate_gate_store rewrites
-    flat→bucketed in place, after which probes match a never-migrated
-    flat store flag-for-flag; (c) a second migrate refuses (re-running
-    overwrite would drop post-migration epochs); (d) a corrupt meta
-    fails loudly instead of silently degrading to the flat arm."""
+def test_gate_pins_bigint_ids(spark, tmp_path):
+    """The gate stores ids as bigint whatever integer type a batch
+    carries: a bigint batch and then an int batch share one store (the
+    int batch's near-dup of a stored doc is found), and an id column that
+    is not an integer raises ValueError naming it, writing nothing."""
     import pytest
 
     from kafkatosparktokudu_spark.operators.dedup import (
         incremental_neardup_ingest,
-        migrate_gate_store,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " \
            "lam mu nu xi omicron pi rho sigma tau upsilon"
-    uniq = "red orange yellow green blue indigo violet black white gray " \
-           "pink brown cyan magenta olive navy teal maroon silver gold"
-    b1 = spark.createDataFrame(
-        [(1, base), (2, uniq)], "doc_id bigint, text string")
-    b2 = spark.createDataFrame(
-        [(3, base + " tiny change"), (4, uniq + " small tweak")],
-        "doc_id bigint, text string")
-    flat, mig = str(tmp_path / "flat"), str(tmp_path / "mig")
-    incremental_neardup_ingest(b1, flat).collect()
-    incremental_neardup_ingest(b1, mig).collect()
-    # (a) bucketed_n over a flat history refuses
-    with pytest.raises(ValueError, match="FLAT-layout history"):
-        incremental_neardup_ingest(b2, mig, bucketed_n=16).collect()
-    # (b) migrate, then the next batch matches the flat twin exactly
-    migrate_gate_store(spark, mig, 16)
-    import os
-    assert os.path.exists(f"{mig}/_STORE_META.json")
-    assert not [f for f in os.listdir(mig) if f.endswith(".parquet")]
-    ff = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-          for r in incremental_neardup_ingest(b2, flat).collect()}
-    fm = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-          for r in incremental_neardup_ingest(b2, mig).collect()}
-    assert fm == ff and ff[3] == (True, 1)
-    # (c) re-migrating an already-bucketed store refuses
-    with pytest.raises(ValueError, match="already bucketed"):
-        migrate_gate_store(spark, mig, 16)
-    # (c2) step-3 crash window: meta written but root cleanup didn't run
-    # (stale flat files next to a live bucketed store) — a migrate re-run
-    # finishes the cleanup instead of refusing or double-writing
-    import shutil
-    stale = str(tmp_path / "flat2")
-    incremental_neardup_ingest(b1, stale).collect()
-    for f in os.listdir(stale):
-        if f.endswith(".parquet"):
-            shutil.copy(f"{stale}/{f}", f"{mig}/{f}")
-    before = spark.read.parquet(f"{mig}/payload").count()
-    migrate_gate_store(spark, mig, 16)  # cleanup-only re-run
-    assert not [f for f in os.listdir(mig) if f.endswith(".parquet")]
-    assert spark.read.parquet(f"{mig}/payload").count() == before
-    # (d) a corrupt meta raises instead of silently picking a layout
-    # (corrupt THROUGH the Hadoop FS so the local-FS .crc sidecar stays
-    # consistent — a raw Python overwrite surfaces as ChecksumException,
-    # which is also loud, but here we pin the parse-failure path)
-    from kafkatosparktokudu_spark.streaming.fsio import write_text_atomic
-    write_text_atomic(spark, f"{mig}/_STORE_META.json", "{not json")
-    with pytest.raises(ValueError, match="unreadable"):
-        incremental_neardup_ingest(b2, mig).collect()
+    store = str(tmp_path / "sigs")
+    f1 = incremental_neardup_ingest(
+        spark.createDataFrame([(1, base)], "doc_id bigint, text string"), store
+    )
+    assert [tuple(r) for r in f1.collect()] == [(1, False, None)]
+    f2 = incremental_neardup_ingest(
+        spark.createDataFrame(
+            [(2, base + " tiny change")], "doc_id int, text string"
+        ),
+        store,
+    )
+    assert [tuple(r) for r in f2.collect()] == [(2, True, 1)]
+    with pytest.raises(ValueError, match="'doc_id' is string"):
+        incremental_neardup_ingest(
+            spark.createDataFrame([("3", base)], "doc_id string, text string"),
+            store,
+        )
+    assert _gate_ids_stored(spark, store) == {1}
+
+
+def test_gate_refuses_old_layout_and_remote_paths(spark, tmp_path):
+    """A directory in the gate's old layouts — parquet files at its root
+    (flat) or a _STORE_META.json (bucketed) — raises ValueError naming
+    it, for an ingest and a revocation alike, instead of being read as an
+    empty or partial history. A URI raises too: the gate's StateStores
+    are local-filesystem-only."""
+    import re
+
+    import pytest
+
+    from kafkatosparktokudu_spark.operators.dedup import (
+        incremental_neardup_ingest,
+        revoke_from_gate_store,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon")], "doc_id bigint, text string"
+    )
+    flat = tmp_path / "flat"
+    docs.write.parquet(str(flat))
+    bucketed = tmp_path / "bucketed"
+    bucketed.mkdir()
+    (bucketed / "_STORE_META.json").write_text(
+        '{"layout": "bucketed", "n_buckets": 8}'
+    )
+    for old in (str(flat), str(bucketed)):
+        with pytest.raises(ValueError, match=re.escape(old) + ".*rebuild"):
+            incremental_neardup_ingest(docs, old)
+        with pytest.raises(ValueError, match=re.escape(old) + ".*rebuild"):
+            revoke_from_gate_store(spark, old, docs.select("doc_id"))
+    with pytest.raises(ValueError, match="local-filesystem-only"):
+        incremental_neardup_ingest(docs, f"file://{tmp_path}/remote")
 
 
 def test_two_level_blocking_planted_dup_recall(spark):
@@ -4096,18 +4051,19 @@ def test_index_delete_crash_window_invisible(spark, tmp_path):
 
 
 def test_gate_revoke_readmission_and_layout_parity(spark, tmp_path):
-    """revoke_from_gate_store (r13): after revoking batch-1's accepted
-    docs (doc_id % 5 == 0), batch-2 near-dups whose only match was a
-    revoked doc are RE-ADMITTED (revoke-equals-never-stored), other
-    flags unchanged; the flat and bucketed arms agree flag-for-flag
-    with revocations present; and a revocation is probe-invisible
-    after physical reclamation (purge) — a third epoch sees identical
-    flags either way."""
+    """revoke_from_gate_store: after revoking batch-1's accepted docs with
+    doc_id % 5 == 0, both gate stores hold exactly the rows of the same
+    ingest minus the revoked ids' rows — their band rows and payload are
+    gone and every other row is untouched (layout parity with
+    never-stored) — and a second revocation of the same ids changes no
+    row. Batch 3, re-keyed copies of batch 1, then re-admits copies whose
+    stored match was revoked, and nothing moves the other way
+    (re-admission is strictly FROM dup TO admitted)."""
     import pyspark.sql.functions as F
 
     from kafkatosparktokudu_spark.operators.dedup import (
+        _gate_stores,
         incremental_neardup_ingest,
-        purge_revoked_gate_store,
         revoke_from_gate_store,
     )
     from kafkatosparktokudu_spark.sources.batch import load_table
@@ -4116,86 +4072,38 @@ def test_gate_revoke_readmission_and_layout_parity(spark, tmp_path):
         "doc_id", "text"
     )
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    cut = lo + (hi - lo) // 2
-    b1 = docs.filter(F.col("doc_id") < cut)
-    b2 = docs.filter(F.col("doc_id") >= cut)
+    b1 = docs.filter(F.col("doc_id") < lo + (hi - lo) // 2)
     # batch 3 = re-keyed copies of batch 1: every doc an exact dup of its
     # batch-1 twin, so its fate depends purely on the store's history
     b3 = b1.select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text")
 
-    def run(store, bucketed_n=None, revoke=False, purge=False):
-        f1 = incremental_neardup_ingest(b1, store, bucketed_n=bucketed_n)
-        f1.count()
-        if revoke:
-            revoke_from_gate_store(
-                spark,
-                store,
-                f1.filter(~F.col("is_dup"))
-                .filter(F.col("doc_id") % 5 == 0)
-                .select("doc_id"),
-                epoch=1,
-            )
-        if purge:
-            assert purge_revoked_gate_store(spark, store) > 0
-        f2 = incremental_neardup_ingest(b2, store)
-        f2.count()
-        f3 = incremental_neardup_ingest(b3, store)
-        return {tuple(r) for r in f2.collect()}, {
-            tuple(r) for r in f3.collect()
-        }
+    def stored_rows(store):
+        bands, payload = _gate_stores(spark, store, "doc_id")
+        return (
+            sorted(tuple(r) for r in bands.read().collect()),
+            sorted((r["doc_id"], tuple(r["hs"])) for r in payload.read().collect()),
+        )
 
-    _, f3_base = run(str(tmp_path / "s0"))
-    f2_flat, f3_flat = run(str(tmp_path / "s1"), revoke=True)
-    # copies of revoked batch-1 keepers are RE-ADMITTED; nothing moves
-    # the other way (re-admission is strictly FROM dup TO admitted)
-    base_dups = {t[0] for t in f3_base if t[1]}
-    rev_dups = {t[0] for t in f3_flat if t[1]}
-    assert rev_dups < base_dups
-    f2_buck, f3_buck = run(str(tmp_path / "s2"), bucketed_n=8, revoke=True)
-    assert f2_flat == f2_buck  # layout parity under revocation
-    # purge is probe-invisible: third epoch identical with/without it
-    f2_purged, f3_purged = run(
-        str(tmp_path / "s3"), bucketed_n=8, revoke=True, purge=True
+    kept, rev = str(tmp_path / "kept"), str(tmp_path / "rev")
+    f1 = incremental_neardup_ingest(b1, kept)
+    incremental_neardup_ingest(b1, rev).count()
+    revoked = {
+        r["doc_id"] for r in f1.collect()
+        if not r["is_dup"] and r["doc_id"] % 5 == 0
+    }
+    assert revoked
+    bands_all, payload_all = stored_rows(kept)
+    want = (
+        [r for r in bands_all if r[2] not in revoked],
+        [r for r in payload_all if r[0] not in revoked],
     )
-    assert f2_purged == f2_buck and f3_purged == f3_buck
+    ids = spark.createDataFrame([(i,) for i in sorted(revoked)], "doc_id bigint")
+    for _ in range(2):
+        revoke_from_gate_store(spark, rev, ids)
+        assert stored_rows(rev) == want
 
-
-def test_gate_purge_empties_partitions(spark, tmp_path):
-    """purge_revoked_gate_store's empty-partition edge: revoking EVERY
-    accepted doc leaves every touched bands/payload partition with zero
-    kept rows — dynamic overwrite alone would leave the old files, so
-    the explicit partition deletes must fire and the store must read
-    back empty."""
-    import pyspark.sql.functions as F
-
-    from kafkatosparktokudu_spark.operators.dedup import (
-        incremental_neardup_ingest,
-        purge_revoked_gate_store,
-        revoke_from_gate_store,
-    )
-    from kafkatosparktokudu_spark.sources.batch import load_table
-
-    docs = (
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 100)
-    )
-    store = str(tmp_path / "s")
-    f1 = incremental_neardup_ingest(docs, store, bucketed_n=4)
-    accepted = f1.filter(~F.col("is_dup")).select("doc_id")
-    revoke_from_gate_store(spark, store, accepted, epoch=1)
-    n = purge_revoked_gate_store(spark, store)
-    assert n == accepted.count()
-    import os
-
-    for sub in ("bands", "payload"):
-        p = f"{store}/{sub}"
-        if os.path.exists(p):
-            assert (
-                spark.read.option("basePath", p).parquet(p).count() == 0
-                if any(
-                    e.startswith(("bucket=", "idb="))
-                    for e in os.listdir(p)
-                )
-                else True
-            )
+    f3_kept = incremental_neardup_ingest(b3, kept).collect()
+    f3_rev = incremental_neardup_ingest(b3, rev).collect()
+    kept_dups = {r["doc_id"] for r in f3_kept if r["is_dup"]}
+    rev_dups = {r["doc_id"] for r in f3_rev if r["is_dup"]}
+    assert rev_dups < kept_dups

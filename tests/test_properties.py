@@ -1161,14 +1161,101 @@ def test_sanitize_unicode_idempotent_and_bounded(spark, texts):
         assert n_after <= n_before
 
 
-# -- gate-store migration equivalence ----------------------------------------
+# -- the ingest gate against a pure-Python model -----------------------------
 _TOKENS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
 _doc_text = st.lists(
     st.sampled_from(_TOKENS), min_size=5, max_size=10
 ).map(" ".join)
 
 
-@settings(max_examples=5, deadline=None,
+def _gate_signatures(spark, docs):
+    """doc_id -> (set of shingle hashes, band hashes) of ``docs`` (a list
+    of (doc_id, text)), from the gate's own per-row Spark functions."""
+    from kafkatosparktokudu_spark.operators.dedup import (
+        N_BANDS,
+        _bands_from_hashed,
+        hashed_shingles,
+    )
+
+    hs = hashed_shingles(spark.createDataFrame(docs, "doc_id bigint, text string"))
+    return {
+        r["doc_id"]: (set(r["hs"]), [r[f"band{b}"] for b in range(N_BANDS)])
+        for r in _bands_from_hashed(hs).join(hs, "doc_id").collect()
+    }
+
+
+class _GateModel:
+    """The ingest gate in pure Python. Two docs match when they share a
+    band hash at the same band index and their shingle-hash Jaccard is
+    at least the threshold. A batch's docs form connected components of
+    matches, each keeping its min id; a keeper is screened against the
+    accepted docs other than itself and flagged with the min matching
+    one; unflagged keepers are accepted. A revocation forgets ids."""
+
+    def __init__(self, sigs, threshold=0.2):
+        self.sigs, self.threshold, self.accepted = sigs, threshold, set()
+
+    def _match(self, a, b):
+        (hs_a, bands_a), (hs_b, bands_b) = self.sigs[a], self.sigs[b]
+        return any(x == y for x, y in zip(bands_a, bands_b)) and (
+            len(hs_a & hs_b) / len(hs_a | hs_b) >= self.threshold
+        )
+
+    def ingest(self, ids):
+        label = {i: i for i in ids}
+
+        def root(i):
+            while label[i] != i:
+                i = label[i]
+            return i
+
+        for a in ids:
+            for b in ids:
+                if a < b and self._match(a, b):
+                    ra, rb = root(a), root(b)
+                    label[max(ra, rb)] = min(ra, rb)
+        flags = {}
+        for i in ids:
+            if root(i) != i:
+                flags[i] = (True, root(i))
+                continue
+            hits = [s for s in self.accepted if s != i and self._match(i, s)]
+            flags[i] = (True, min(hits)) if hits else (False, None)
+        self.accepted |= {i for i, (dup, _) in flags.items() if not dup}
+        return flags
+
+
+def _gate_flags(spark, rows, store):
+    from kafkatosparktokudu_spark.operators.dedup import (
+        incremental_neardup_ingest,
+    )
+
+    batch = spark.createDataFrame(rows, "doc_id bigint, text string")
+    return {
+        r["doc_id"]: (r["is_dup"], r["matched_id"])
+        for r in incremental_neardup_ingest(batch, store).collect()
+    }
+
+
+def _gate_stored(spark, store):
+    """The accepted ids each of the gate's two stores holds."""
+    from kafkatosparktokudu_spark.operators.dedup import _gate_stores
+
+    return [
+        {r["doc_id"] for r in s.read().select("doc_id").collect()}
+        for s in _gate_stores(spark, store, "doc_id")
+    ]
+
+
+def _gate_revoke(spark, store, ids):
+    from kafkatosparktokudu_spark.operators.dedup import revoke_from_gate_store
+
+    revoke_from_gate_store(
+        spark, store, spark.createDataFrame([(i,) for i in sorted(ids)], "doc_id bigint")
+    )
+
+
+@settings(max_examples=4, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
     batches=st.lists(
@@ -1176,32 +1263,118 @@ _doc_text = st.lists(
     ),
     data=st.data(),
 )
-def test_gate_migration_flags_equal_flat_twin(
-    spark, tmp_path_factory, batches, data
-):
-    """Migrating a flat gate store to the bucketed layout at ANY point in
-    an arbitrary epoch sequence leaves the per-doc (is_dup, matched_id)
-    flags identical to a never-migrated flat twin — the migration moves
-    bytes, never semantics. Doc texts draw from a tiny token pool so
-    near-dups (and therefore non-trivial in-batch clusters AND history
-    matches) occur constantly (ADVICE r12 / VERDICT r12 #6 paths)."""
-    from kafkatosparktokudu_spark.operators.dedup import (
-        incremental_neardup_ingest,
-        migrate_gate_store,
-    )
-
-    mig_at = data.draw(st.integers(1, len(batches)), label="migrate_after")
-    root = tmp_path_factory.mktemp("gate_prop")
-    flat, mig = str(root / "flat"), str(root / "mig")
-    next_id = 0
-    for i, texts in enumerate(batches):
-        rows = [(next_id + j, t) for j, t in enumerate(texts)]
+def test_gate_flags_and_store_equal_model(spark, tmp_path_factory, batches, data):
+    """Over an arbitrary epoch sequence — each batch optionally delivered
+    twice, as a replay after a crash would, and followed by an optional
+    revocation of any accepted ids — every batch's (is_dup, matched_id)
+    flags equal the pure-Python model's, and both gate stores hold exactly
+    the model's accepted ids. Doc texts draw from a tiny token pool so
+    near-dups (in-batch clusters AND history matches) occur constantly."""
+    rows, next_id = [], 0
+    for texts in batches:
+        rows.append([(next_id + j, t) for j, t in enumerate(texts)])
         next_id += len(texts)
-        b = spark.createDataFrame(rows, "doc_id bigint, text string")
-        ff = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-              for r in incremental_neardup_ingest(b, flat).collect()}
-        fm = {r["doc_id"]: (r["is_dup"], r["matched_id"])
-              for r in incremental_neardup_ingest(b, mig).collect()}
-        assert fm == ff, (i, mig_at, fm, ff)
-        if i + 1 == mig_at:
-            migrate_gate_store(spark, mig, 8)
+    model = _GateModel(_gate_signatures(spark, [d for b in rows for d in b]))
+    store = str(tmp_path_factory.mktemp("gate_prop") / "sigs")
+    for i, batch in enumerate(rows):
+        ids = [d for d, _ in batch]
+        want = model.ingest(ids)
+        assert _gate_flags(spark, batch, store) == want, (i, want)
+        if data.draw(st.booleans(), label=f"replay {i}"):
+            assert _gate_flags(spark, batch, store) == model.ingest(ids), i
+        revoked = data.draw(
+            st.sets(st.sampled_from(sorted(model.accepted | {-1}))),
+            label=f"revoke after {i}",
+        )
+        if revoked:
+            _gate_revoke(spark, store, revoked)
+            model.accepted -= revoked
+        assert _gate_stored(spark, store) == [model.accepted] * 2, i
+
+
+def _document_halves(spark):
+    from kafkatosparktokudu_spark.sources.batch import load_table
+
+    docs = sorted(
+        tuple(r)
+        for r in load_table(spark, "/root/testdata/sf0.001", "documents")
+        .select("doc_id", "text")
+        .collect()
+    )
+    return docs[: len(docs) // 2], docs[len(docs) // 2:]
+
+
+def _crash_at_payload_publish(monkeypatch):
+    """Make the next manifest publish of a gate's payload store raise,
+    once; publishes to other stores go through."""
+    from kafkatosparktokudu_spark.operators import merge
+
+    real = merge._publish
+
+    def crash(store, *args):
+        if store.path.endswith("/payload"):
+            monkeypatch.setattr(merge, "_publish", real)
+            raise RuntimeError("crash at the payload commit")
+        return real(store, *args)
+
+    monkeypatch.setattr(merge, "_publish", crash)
+
+
+def test_gate_ingest_crash_at_payload_commit_converges_to_model(
+    spark, tmp_path, monkeypatch
+):
+    """Die during the second batch's commit, after the bands store
+    published and before the payload store did: its accepted docs have
+    band rows but no shingle set. Re-running the batch returns the model's
+    flags (a doc never matches its own band rows, and a band row without
+    a payload row verifies nothing), and both stores end at the model's
+    accepted ids."""
+    import pytest
+
+    b1, b2 = _document_halves(spark)
+    model = _GateModel(_gate_signatures(spark, b1 + b2))
+    store = str(tmp_path / "sigs")
+    assert _gate_flags(spark, b1, store) == model.ingest([d for d, _ in b1])
+    before = set(model.accepted)
+    want = model.ingest([d for d, _ in b2])
+    assert model.accepted > before
+
+    _crash_at_payload_publish(monkeypatch)
+    with pytest.raises(RuntimeError, match="crash at the payload commit"):
+        _gate_flags(spark, b2, store)
+    assert _gate_stored(spark, store) == [model.accepted, before]
+
+    assert _gate_flags(spark, b2, store) == want
+    assert _gate_stored(spark, store) == [model.accepted] * 2
+
+
+def test_gate_revoke_crash_between_rewrites_converges(spark, tmp_path, monkeypatch):
+    """Die in a revocation after the bands rewrite committed and before
+    the payload rewrite did: the revoked docs have a shingle set but no
+    band rows, so no probe finds them, and re-running the revocation
+    recomputes their band buckets from that shingle set and finishes.
+    Then revoking every remaining doc empties both stores (every bucket
+    drops out), and the next batch is screened as the model screens it,
+    against an empty history."""
+    import pytest
+
+    b1, b2 = _document_halves(spark)
+    model = _GateModel(_gate_signatures(spark, b1 + b2))
+    store = str(tmp_path / "sigs")
+    assert _gate_flags(spark, b1, store) == model.ingest([d for d, _ in b1])
+    revoked = {d for d in model.accepted if d % 2 == 0}
+    kept = model.accepted - revoked
+    assert revoked and kept
+
+    _crash_at_payload_publish(monkeypatch)
+    with pytest.raises(RuntimeError, match="crash at the payload commit"):
+        _gate_revoke(spark, store, revoked)
+    assert _gate_stored(spark, store) == [kept, model.accepted]
+
+    _gate_revoke(spark, store, revoked)
+    assert _gate_stored(spark, store) == [kept, kept]
+    _gate_revoke(spark, store, kept)
+    assert _gate_stored(spark, store) == [set(), set()]
+    model.accepted = set()
+    assert _gate_flags(spark, b2, store) == model.ingest([d for d, _ in b2])
+    assert _gate_stored(spark, store) == [model.accepted] * 2

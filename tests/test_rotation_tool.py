@@ -95,3 +95,27 @@ def test_default_base_is_the_newest_round_or_pr_commit():
     assert check_rotation._base_from_log(log.split("\n", 3)[3]) == "ddd"
     assert check_rotation._base_from_log(log.splitlines()[-1]) == "eee"
     assert check_rotation._base_from_log("fff PR: no number\nggg prose") is None
+
+
+def test_verdict_lists_parity_node_ids_and_fails_only_on_missing_deps():
+    """The verdict names every affected query's re-check as a pytest node
+    id — its oracle parity case, or the run-everything test for a query
+    without an oracle — whatever the query's position in QUERIES (no
+    front-N window). It exits 1 only when an affected query is missing
+    from the deps map; names that are no query (an oracle-only key) are
+    dropped."""
+    queries = [f"q{i:02d}" for i in range(60)]
+    oracles = set(queries) - {"q55"}
+    deps = {q: [] for q in queries if q != "q57"}
+    lines, code = check_rotation.verdict({"q03", "q55", "gone"}, queries, oracles, deps)
+    assert code == 0
+    assert lines == [
+        "affected queries (2):",
+        "tests/test_queries_oracle.py::test_oracle_parity[q03]",
+        "tests/test_queries_oracle.py::test_all_queries_run",
+    ]
+    lines, code = check_rotation.verdict({"q57"}, queries, oracles, deps)
+    assert code == 1
+    assert lines[1] == "tests/test_queries_oracle.py::test_oracle_parity[q57]"
+    assert "q57" in lines[-1] and "NOT IN DEPS MAP" in lines[-1]
+    assert not hasattr(check_rotation, "WINDOW")
