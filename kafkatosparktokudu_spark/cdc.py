@@ -38,9 +38,11 @@ from .operators.ogg import (
     cast_payload,
     derive_pub_event,
     fold_table_changes,
+    is_valid,
     normalize,
     parse_ogg,
     split_valid,
+    table_name,
     typed_key,
     with_time_stamp,
 )
@@ -74,7 +76,7 @@ def apply_changes(
     catalog = catalog or default_catalog()
     seq = F.col("seq") if "seq" in raw.columns else None
     parsed = parse_ogg(raw, seq_col=seq)
-    valid, _dead = split_valid(parsed)
+    valid, _dead = split_valid(parsed, catalog)
     return _table_batches(normalize(valid), catalog, now_str)
 
 
@@ -264,7 +266,7 @@ def sync_batch(
     # over it. The batch is rate-capped (maxOffsetsPerTrigger), so it fits
     # in memory.
     parsed = parse_ogg(raw, seq_col=seq).cache()
-    valid, dead = split_valid(parsed)
+    valid, dead = split_valid(parsed, catalog)
     norm = normalize(valid)
     metrics = BatchMetrics(total=0, dead=0, tables=[])
 
@@ -272,9 +274,7 @@ def sync_batch(
         return _phase(spark, name, epoch_id, metrics.phases)
 
     try:
-        from .operators.ogg import is_valid
-
-        tab_expr = F.lower(F.element_at(F.split("table", "\\."), 2))
+        ok = is_valid(catalog)
 
         def _fill():
             # ONE job fills the cache and yields the total, the table list
@@ -284,7 +284,7 @@ def sync_batch(
             # (ConsumerMain.scala:101,113-116).
             with phase("fill"):
                 return parsed.groupBy(
-                    is_valid().alias("ok"), F.when(is_valid(), tab_expr).alias("t")
+                    ok.alias("ok"), F.when(ok, table_name()).alias("t")
                 ).count().collect()
 
         def _dead_letters():
@@ -295,7 +295,8 @@ def sync_batch(
                 F.when(F.col("table").isNull(), "null_table_or_unparseable")
                 .when(F.size(F.split("table", "\\.")) < 2, "malformed_table_name")
                 .when(F.col("after").isNull(), "missing_after")
-                .otherwise("missing_pk")
+                .when(F.col("after").getItem("ID").isNull(), "missing_pk")
+                .otherwise("bad_key")
             )
             with _phase(spark, "dead_letters", epoch_id, None):
                 dead.select(

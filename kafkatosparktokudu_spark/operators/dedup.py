@@ -236,11 +236,14 @@ def neardup_pairs_jaccard(
     evaluate the 16-permutation minhash + band-md5 chain once per join
     SIDE (the hs cache stops at the shingle hashes); one count() on the
     persisted bands materializes hs AND bands in a single job — same
-    job count as before, two fewer minhash passes per call."""
+    job count as before, two fewer minhash passes per call. Frames the
+    call persists itself are released before it returns (``_release``)."""
+    owned = []
     if hs_df is None:
         hs_df = hashed_shingles(docs, id_col, shingle_col=shingle_col).persist()
         if bands_df is None:
             bands_df = _bands_from_hashed(hs_df, id_col).persist()
+            owned.append(bands_df)
             # ONE materialization job pins BOTH caches: computing the band
             # partitions pulls the hs partitions through the cache layer
             # (the pre-r14 hs_df.count() populated hs only, and the band
@@ -250,6 +253,7 @@ def neardup_pairs_jaccard(
             # caller-pinned bands over a caller-built hs: materialize hs
             # before the self-join (the pre-r14 race rationale)
             hs_df.count()
+        owned.append(hs_df)
     elif bands_df is None:
         bands_df = _bands_from_hashed(hs_df, id_col)
     cands = lsh_candidate_pairs(docs, id_col, hs_df=hs_df, bands_df=bands_df)
@@ -260,10 +264,25 @@ def neardup_pairs_jaccard(
     jac = F.size(F.array_intersect("hs_a", "hs_b")).cast("double") / F.size(
         F.array_union("hs_a", "hs_b")
     )
-    return (
+    return _release(
         joined.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= threshold),
+        owned,
     )
+
+
+def _release(pairs: DataFrame, owned: list[DataFrame]) -> DataFrame:
+    """``pairs``, with the frames a pair function persisted itself
+    (``owned``) unpersisted; as those feed ``pairs`` lazily, the verified
+    pairs are first collected into a driver-local frame."""
+    if not owned:
+        return pairs
+    from ..functions.localframe import local_frame
+
+    rows = pairs.collect()
+    for frame in owned:
+        frame.unpersist()
+    return local_frame(pairs.sparkSession, rows, pairs.schema)
 
 
 def _explode_bands(sig: DataFrame, id_col: str) -> DataFrame:
@@ -1600,7 +1619,9 @@ def containment_pairs(
 
     Scale: identical cost shape to dd04 (banded candidates, exact set
     ops only on candidates); the hashed-shingle frame is persisted once
-    and shared across the band join and both verify sides."""
+    and shared across the band join and both verify sides, and released
+    before the call returns (``_release``)."""
+    owned = []
     if hs_df is None:
         hs_df = hashed_shingles(docs, id_col).persist()
         # pin bands next to hs — one job materializes both, and the band
@@ -1608,6 +1629,7 @@ def containment_pairs(
         # the neardup_pairs_jaccard rationale)
         bands_df = _bands_from_hashed(hs_df, id_col).persist()
         bands_df.count()
+        owned = [hs_df, bands_df]
     else:
         bands_df = _bands_from_hashed(hs_df, id_col)
     cands = lsh_candidate_pairs(docs, id_col, hs_df=hs_df, bands_df=bands_df)
@@ -1636,12 +1658,15 @@ def containment_pairs(
         .cast("bigint")
         .alias("jaccard_ppm"),
     )
-    return scored.filter(
-        F.greatest("cont_a_ppm", "cont_b_ppm") >= min_containment_ppm
-    ).withColumn(
-        "subset_dup",
-        (F.greatest("cont_a_ppm", "cont_b_ppm") >= 900_000)
-        & (F.col("jaccard_ppm") < 700_000),
+    return _release(
+        scored.filter(
+            F.greatest("cont_a_ppm", "cont_b_ppm") >= min_containment_ppm
+        ).withColumn(
+            "subset_dup",
+            (F.greatest("cont_a_ppm", "cont_b_ppm") >= 900_000)
+            & (F.col("jaccard_ppm") < 700_000),
+        ),
+        owned,
     )
 
 

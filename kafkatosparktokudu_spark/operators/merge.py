@@ -66,10 +66,11 @@ some stores at the new version; recovery relies on checkpoint replay +
 upsert idempotence (the reference's model: offsets persisted after
 writes, ConsumerMain.scala:128-151, duplicates absorbed by upsert).
 
-A manifest may carry one more key, ``source_version``: a rollup view
-(operators/rollup.py) records there the version of its base store it
-reflects, in the same publish as its rows. Base-store manifests carry no
-such key.
+A manifest may carry one more key, ``source_version``: a derived store
+(a rollup view, operators/rollup.py; the SCD2 history, operators/scd2.py)
+records there the base version it reflects, in the same
+``rewrite_buckets`` publish as its rows, and refreshes from the base
+buckets ``changes_since`` that version. Base-store manifests carry none.
 
 Retention: a frame stays readable for ``_KEEP_VERSIONS`` later commits of
 its store. A file's age counts from the version that superseded it, not
@@ -106,19 +107,13 @@ _KEEP_VERSIONS = 3
 
 
 def merge_upserts(
-    state: DataFrame, batch: DataFrame, key_cols: list[str],
-    replace_rows: bool = False,
+    state: DataFrame, batch: DataFrame, key_cols: list[str]
 ) -> DataFrame:
     """Pure merge: one row per key, column-wise ``coalesce(new, old)``.
 
     ``batch`` must already be folded to one row per key (fold_table_changes).
     Column set of both sides must match. Partial updates ride on coalesce:
     a folded column is null iff no record in the batch set it.
-
-    ``replace_rows=True`` switches to whole-row semantics: a key present in
-    the batch takes the batch row VERBATIM, nulls included — what a
-    recomputed aggregate view needs (a re-aggregated min of NULL must
-    overwrite the stale extreme, not coalesce with it).
 
     CONTRACT: key columns are primary keys and must be non-null on both
     sides (the CDC path guarantees this — is_valid drops null-ID records
@@ -133,16 +128,8 @@ def merge_upserts(
     )
     cond = [state[k] == b[f"_b_{k}"] for k in key_cols]
     joined = state.join(b, cond, "full_outer")
-    in_batch = b[f"_b_{key_cols[0]}"].isNotNull()
     out_cols = [
-        F.coalesce(b[f"_b_{k}"], state[k]).alias(k) for k in key_cols
-    ] + [
-        (
-            F.when(in_batch, b[f"_b_{c}"]).otherwise(state[c])
-            if replace_rows
-            else F.coalesce(b[f"_b_{c}"], state[c])
-        ).alias(c)
-        for c in value_cols
+        F.coalesce(b[f"_b_{c}"], state[c]).alias(c) for c in key_cols + value_cols
     ]
     return joined.select(*out_cols)
 
@@ -274,9 +261,6 @@ class StateStore:
         """Current state (without the bucket column)."""
         return self._scan(self._manifest()).drop(_BUCKET)
 
-    def _read_with_bucket(self) -> DataFrame:
-        return self._scan(self._manifest())
-
     def read_buckets(self, buckets: list[int]) -> DataFrame:
         """State rows of the given buckets only (only their files are
         scanned, bucket column dropped) — the shared read recipe of the
@@ -317,14 +301,17 @@ class StateStore:
         )
 
     # -- the merge ----------------------------------------------------------
-    def upsert_batch(self, batch: DataFrame, replace_rows: bool = False) -> None:
+    def upsert_batch(self, batch: DataFrame) -> None:
         """MERGE the (already folded, typed) batch into the store — a
         one-store ``upsert_many``: one job collects the touched buckets,
         one job merges them against their state and stages the result,
         then the next version is committed (module docstring)."""
-        upsert_many(self.spark, [(self, batch)], replace_rows=replace_rows)
+        upsert_many(self.spark, [(self, batch)])
 
-    def rewrite_buckets(self, buckets: list[int], content: DataFrame) -> None:
+    def rewrite_buckets(
+        self, buckets: list[int], content: DataFrame,
+        source_version: int | None = None,
+    ) -> None:
         """Replace the given buckets' contents WHOLESALE with ``content``
         (the caller supplies exactly those buckets' intended rows — this
         is the delete-capable primitive upsert can't be: rows absent from
@@ -333,47 +320,61 @@ class StateStore:
         hashing outside ``buckets`` raises instead of vanishing with the
         staging dir. A bucket with no surviving rows drops out of the new
         version. Cost tracks the rewritten buckets, never the table; the
-        commit is atomic across them (module docstring)."""
-        if not buckets:
-            return
-        _stage_and_commit(
-            content.select([F.col(f.name) for f in self.schema.fields])
-            .withColumn(_BUCKET, self._bucket_col())
-            .withColumn(_TABLE, F.lit(0)),
-            [(self, buckets)],
-        )
+        commit is atomic across them (module docstring). ``source_version``
+        goes into the new manifest (a derived store's base version); with
+        it, an empty ``buckets`` still commits, so that record advances."""
+        if buckets or source_version is not None:
+            self._write(content, buckets, source_version)
 
     def rebucket(self, n_new: int) -> None:
-        """Online bucket-count migration (VERDICT r10 #2 — the last 100 TB
-        maintenance op): ONE write of every row at the new hash geometry,
-        committed as the next version by the module's write protocol.
-        DEPLOY.md tells operators to scale n_buckets with table size (the
-        ×91 stress measured why: probe cost tracks touched buckets, so a
-        store that outgrew its bucket count serves every batch from a few
-        giant files).
-
-        The new manifest carries ``n_new``, so readers planned on the old
-        version keep reading it, and a handle opened afterwards adopts the
-        new geometry whatever ``n_buckets`` its call site passes. A crash
-        leaves the store at the old geometry or the new one, never a mix,
-        and re-running the call converges.
-
-        Cost: one full-table read+write — O(table), unavoidable for a
-        modulus change, but bounded, restartable, and done ONCE per
-        capacity step (vs every batch overpaying on a wrong geometry).
-        """
+        """Online bucket-count migration: ONE write of every row at the
+        new hash geometry, committed as the next version (DEPLOY.md: scale
+        n_buckets with table size, since probe cost tracks touched
+        buckets). The new manifest carries ``n_new``, so readers planned
+        on the old version keep reading it, and a handle opened afterwards
+        adopts the new geometry whatever ``n_buckets`` its call site
+        passes. A crash leaves the old geometry or the new one, never a
+        mix. Cost: one full-table read+write, once per capacity step."""
         if n_new < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_new}")
-        if n_new == self.n_buckets:
-            return
+        if n_new != self.n_buckets:
+            self._write(self.read(), list(range(n_new)), n_buckets=n_new)
+
+    def _write(
+        self, content: DataFrame, buckets: list[int],
+        source_version: int | None = None, n_buckets: int | None = None,
+    ) -> None:
+        """Commit ``content`` as the rows of ``buckets`` — or, given
+        ``n_buckets``, as the whole store at that geometry."""
+        n = n_buckets or self.n_buckets
         _stage_and_commit(
-            self.read()
-            .withColumn(_BUCKET, self._bucket_col(n_buckets=n_new))
+            content.select([F.col(f.name) for f in self.schema.fields])
+            .withColumn(_BUCKET, self._bucket_col(n))
             .withColumn(_TABLE, F.lit(0)),
-            [(self, list(range(n_new)))],
-            n_buckets=n_new,
+            [(self, buckets)],
+            n_buckets=n_buckets,
+            source_version=source_version,
         )
-        self.n_buckets = n_new
+        self.n_buckets = n
+
+    def changes_since(self, version: int | None) -> tuple[dict, dict | None, list[int]]:
+        """The version diff every derived store refreshes from: the newest
+        manifest, ``version``'s, and the buckets whose file lists differ
+        (names are version-unique, so every bucket a write touched does).
+        A ``version`` that is ``None`` or no longer kept gives no old
+        manifest, and every bucket counts as changed."""
+        new = self._manifest()
+        if version is None or (
+            version and version not in _versions(os.path.join(self.path, _MANIFESTS))
+        ):
+            return new, None, list(range(new["n_buckets"]))
+        old = self._manifest(version)
+        changed = sorted(
+            int(b)
+            for b in old["buckets"].keys() | new["buckets"].keys()
+            if old["buckets"].get(b) != new["buckets"].get(b)
+        )
+        return new, old, changed
 
     # -- housekeeping -------------------------------------------------------
     def purge_soft_deleted(
@@ -436,9 +437,9 @@ def _stage_and_commit(
     """The one write protocol (module docstring). ``staged`` carries
     ``_table`` (an index into ``targets``) and ``_bucket``; each target
     store's listed buckets are replaced wholesale by its staged rows.
-    ``n_buckets`` (``rebucket``'s one target): the rows are staged at this
-    geometry, and the new version holds them alone. ``source_version``
-    goes into every new manifest (``upsert_many``).
+    ``n_buckets`` (one target): the rows are staged at this geometry, and
+    the new version holds them alone. ``source_version`` goes into every
+    new manifest (``rewrite_buckets``).
 
     Staged under the first store's sibling ``{path}.__staging__``, so the
     moves stay on that store's filesystem."""
@@ -578,8 +579,6 @@ def upsert_many(
     spark: SparkSession,
     merges: list[tuple[StateStore, DataFrame]],
     affected: dict[str, list[int]] | None = None,
-    replace_rows: bool = False,
-    source_version: int | None = None,
 ) -> None:
     """MERGE several stores' folded batches with ONE staged write — the
     only merge path (``StateStore.upsert_batch`` is a one-store call).
@@ -604,16 +603,10 @@ def upsert_many(
     ``ValueError`` before any store changes (pinned by
     test_upsert_many_refuses_missed_bucket).
 
-    ``replace_rows`` applies to every store (see ``merge_upserts``). The
-    staged files carry the union-by-name schema (absent columns are
+    The staged files carry the union-by-name schema (absent columns are
     null-RLE, ~free in parquet); reads prune to each store's declared
     schema. Stores declaring one column name with different types cannot
     share a union, so they take one call each (same semantics, more jobs).
-
-    ``source_version``, when given, goes into each store's new manifest (a
-    rollup view's record of the base version it reflects). With
-    ``affected`` listing no bucket the call still commits: the new version
-    has the old rows and the new ``source_version``.
     """
     merges = [(s, b) for s, b in merges if b is not None]
     if not merges:
@@ -621,7 +614,7 @@ def upsert_many(
     stores = [s for s, _ in merges]
     if not _schemas_compatible(stores):
         for m in merges:
-            upsert_many(spark, [m], affected, replace_rows, source_version)
+            upsert_many(spark, [m], affected)
         return
     batches = [b.select([F.col(f.name) for f in s.schema.fields]) for s, b in merges]
     tagged = None
@@ -651,18 +644,12 @@ def upsert_many(
         merged = []
         for i, (store, batch, bs) in enumerate(zip(stores, batches, buckets)):
             if bs and store.exists():
-                batch = merge_upserts(
-                    store.read_buckets(bs), batch, store.key_cols,
-                    replace_rows=replace_rows,
-                )
+                batch = merge_upserts(store.read_buckets(bs), batch, store.key_cols)
             merged.append(
                 batch.withColumn(_BUCKET, store._bucket_col())
                 .withColumn(_TABLE, F.lit(i))
             )
-        _stage_and_commit(
-            _union_by_name(merged), list(zip(stores, buckets)),
-            source_version=source_version,
-        )
+        _stage_and_commit(_union_by_name(merged), list(zip(stores, buckets)))
     finally:
         if tagged is not None:
             tagged.unpersist()

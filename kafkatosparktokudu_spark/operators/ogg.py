@@ -62,33 +62,50 @@ def parse_ogg(df: DataFrame, value_col: str = "value", seq_col: Column | None = 
     return out
 
 
-def is_valid() -> Column:
+def table_name() -> Column:
+    """``"SCHEMA.TAB"`` → ``tab`` (S11), the name a record is routed by."""
+    return F.lower(F.element_at(F.split("table", "\\."), 2))
+
+
+def is_valid(catalog: dict[str, TargetTable] | None = None) -> Column:
     """Validity predicate: drop null-table control rows (S9), records whose
     ``after``/``after.ID`` is missing (reference NPE at KuduManager.scala:55),
     unparseable lines (null envelope), and table names without a
     ``SCHEMA.TAB`` qualifier — the reference's ``split("\\\\.")(1)`` throws
     on those (KuduManager.scala:66), and downstream they would produce a
     NULL tab_name, violating the merge path's non-null-key contract for
-    pub_event (merge_upserts joins with plain ``==``)."""
-    return (
+    pub_event (merge_upserts joins with plain ``==``).
+
+    Given ``catalog``, so is an ID that does not cast to its table's key
+    type (``bad_key``): ``typed_key``'s ANSI cast would fail the whole
+    batch, on every replay. A string-keyed table adds no expression."""
+    ok = (
         F.col("table").isNotNull()
         & (F.size(F.split("table", "\\.")) >= 2)
         & F.col("after").isNotNull()
         & F.col("after").getItem("ID").isNotNull()
     )
+    for name, target in (catalog or {}).items():
+        ktype = _key_type(target)
+        if ktype != T.StringType():
+            bad = F.col("after").getItem("ID").try_cast(ktype).isNull()
+            ok = ok & ~((table_name() == name) & bad)
+    return ok
 
 
-def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, dead-letter). Reference semantics: bad input is dropped with a
-    log line, never fatal (KuduManager.scala:117-122)."""
-    return df.filter(is_valid()), df.filter(~is_valid())
+def split_valid(
+    df: DataFrame, catalog: dict[str, TargetTable] | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(valid, dead-letter). Reference semantics: bad input is dropped with
+    a log line, never fatal (KuduManager.scala:117-122)."""
+    return df.filter(is_valid(catalog)), df.filter(~is_valid(catalog))
 
 
 def normalize(df: DataFrame) -> DataFrame:
     """Name/ts normalization (S11-S12): ``"SCHEMA.TAB"`` → ``tab`` and
     ISO ``T`` separator → space; extract the PK."""
     return df.select(
-        F.lower(F.element_at(F.split("table", "\\."), 2)).alias("tab_name"),
+        table_name().alias("tab_name"),
         F.col("after").getItem("ID").alias("id"),
         "op_type",
         "current_ts",
@@ -122,8 +139,11 @@ def typed_key(target: TargetTable) -> Column:
     and '7' into ONE row for key 7, and the key cdc.affected_buckets
     hashes, so its bucket set is the folded batch's. SCD2 history chains
     its versions on it too."""
-    ktype = next(f.dataType for f in target.payload.fields if f.name == target.key)
-    return F.col("id").cast(ktype)
+    return F.col("id").cast(_key_type(target))
+
+
+def _key_type(target: TargetTable) -> T.DataType:
+    return next(f.dataType for f in target.payload.fields if f.name == target.key)
 
 
 def fold_table_changes(df: DataFrame, target: TargetTable) -> DataFrame:

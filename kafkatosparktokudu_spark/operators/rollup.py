@@ -25,10 +25,10 @@ addition is) — the ``cdc_dept_rollup`` query hash-checks exactly that
 equivalence against a from-scratch DuckDB fold.
 
 ONE PROTOCOL, the version diff, run AFTER the base merge for both view
-kinds by ``refresh_rollup`` (sum/count) and ``refresh_minmax``. Every
-StateStore write publishes a numbered manifest (operators/merge.py), and
-the view's own manifest records ``source_version``, the base version it
-reflects:
+kinds by ``refresh_rollup`` (sum/count) and ``refresh_minmax`` (and by
+the SCD2 history, operators/scd2.py). Every StateStore write publishes a
+numbered manifest (operators/merge.py), and the view's own manifest
+records ``source_version``, the base version it reflects:
 
 1. ``new`` is the base's newest manifest, ``old`` the one at the view's
    source version (the empty version 0 for a view never written, so a view
@@ -39,7 +39,8 @@ reflects:
    every bucket differs; steps 1-3 are ``_changed_rows``);
 4. a sum/count view adds ``rollup_delta`` of the two sides (an unchanged
    row appears on both and cancels, DECIMAL so bit-exact); a min/max view
-   re-aggregates every group either side names. Either commits its rows
+   re-aggregates every group either side names. Either rewrites the view
+   buckets its groups hash into (``rewrite_buckets``), committing the rows
    and ``source_version = new`` in one manifest publish.
 
 The view is exactly-once whatever happened to the base in between, with
@@ -60,14 +61,12 @@ adds one scan of the base at ``new``, semi-joined to the touched groups.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import DELETE_STATE
-from .merge import StateStore, upsert_many
+from .merge import StateStore
 
 # Exact accumulation type for the maintained sum (DECIMAL addition is
 # associative, so incremental == from-scratch regardless of batch split).
@@ -137,29 +136,25 @@ def maintain_rollup(
 
     Only the delta's groups' BUCKETS are read and rewritten (the delta is
     group-keyed and tiny, so ``buckets_of`` is one small job; untouched
-    groups never move). An empty delta still commits, so the source
+    buckets never move). An empty delta still commits, so the source
     version advances. Zero-alive groups keep their row (n_alive=0) as an
     audit trail — readers filter ``n_alive > 0`` for the live view.
     """
     delta = delta.persist()
     try:
         buckets = rollup.buckets_of(delta)
-        cur = rollup.read_buckets(buckets).select(
-            F.col(group_col),
-            F.col("n_alive").alias("_cur_n"),
-            F.col("sum_dec").alias("_cur_sum"),
-        )
-        updated = delta.join(cur, group_col, "left").select(
-            F.col(group_col),
-            (F.coalesce(F.col("_cur_n"), F.lit(0)) + F.col("d_n")).alias("n_alive"),
-            (F.coalesce(F.col("_cur_sum"), F.lit(0).cast(_SUM_DEC)) + F.col("d_sum"))
-            .cast(_SUM_DEC)
-            .alias("sum_dec"),
-        )
-        upsert_many(
-            spark,
-            [(rollup, updated)],
-            affected={os.path.basename(rollup.path.rstrip("/")): buckets},
+        updated = rollup.read_buckets(buckets).join(delta, group_col, "full_outer")
+        zero = F.lit(0).cast(_SUM_DEC)
+        rollup.rewrite_buckets(
+            buckets,
+            updated.select(
+                F.col(group_col),
+                (F.coalesce("n_alive", F.lit(0)) + F.coalesce("d_n", F.lit(0)))
+                .alias("n_alive"),
+                (F.coalesce("sum_dec", zero) + F.coalesce("d_sum", zero))
+                .cast(_SUM_DEC)
+                .alias("sum_dec"),
+            ),
             source_version=source_version,
         )
     finally:
@@ -169,28 +164,28 @@ def maintain_rollup(
 def _changed_rows(
     state: StateStore, view: StateStore
 ) -> tuple[DataFrame, DataFrame, dict] | None:
-    """Steps 1-3 of the protocol, for both view kinds: the rows of
-    ``state``'s changed buckets at the version ``view`` reflects and at the
-    newest one, and the newest manifest; ``None`` when the view is current.
-    A view written before views recorded their source version raises
+    """Steps 1-3 of the protocol, for both view kinds, over
+    ``StateStore.changes_since``: the rows of ``state``'s changed buckets
+    at the version ``view`` reflects and at the newest one, and the newest
+    manifest; ``None`` when the view is current. A delta needs the old
+    rows, so a view without a source version, or with a retired one, raises
     ``ValueError``: delete it, and the next refresh rebuilds it."""
     manifest = view._manifest()
-    source = manifest.get("source_version", 0)
     if manifest["version"] and "source_version" not in manifest:
         raise ValueError(
             f"{view.path}: a rollup view without a source_version, written "
             "before views recorded the base version they reflect; delete it "
             "and the next refresh rebuilds it from the whole base"
         )
-    new = state._manifest()
+    source = manifest.get("source_version", 0)
+    new, old, changed = state.changes_since(source)
+    if old is None:
+        raise ValueError(
+            f"{state.path}: version {source} is no longer kept; delete "
+            f"{view.path} and the next refresh rebuilds it"
+        )
     if source == new["version"]:
         return None
-    old = state._manifest(source)
-    changed = [
-        int(b)
-        for b in old["buckets"].keys() | new["buckets"].keys()
-        if old["buckets"].get(b) != new["buckets"].get(b)
-    ]
     return state._scan(old, changed), state._scan(new, changed), new
 
 
@@ -275,13 +270,12 @@ def refresh_minmax(
             group_col, "min_val", "max_val",
             F.coalesce("n_alive", F.lit(0).cast("long")).alias("n_alive"),
         )
-        # replace_rows: a re-aggregated NULL extreme must OVERWRITE the
-        # stale stored value, not coalesce with it. No touched group still
-        # commits, so the source version advances.
-        upsert_many(
-            spark, [(view, rows)],
-            {os.path.basename(view.path.rstrip("/")): view.buckets_of(touched)},
-            replace_rows=True, source_version=new["version"],
+        # touched groups' rows are replaced whole (a NULL extreme
+        # overwrites); no touched group still commits the source version
+        buckets = view.buckets_of(touched)
+        kept = view.read_buckets(buckets).join(touched, group_col, "left_anti")
+        view.rewrite_buckets(
+            buckets, kept.unionByName(rows), source_version=new["version"]
         )
     finally:
         touched.unpersist()

@@ -6,20 +6,22 @@ INCREMENTALLY, batch by batch, the way a streaming CDC sync runs
 (KuduManager.scala keeps only latest state — this is the warehouse-native
 history the reference never had).
 
-Design: RECOMPUTE-PER-AFFECTED-KEY, not append-stitching. Two bucketed
-StateStores under one root, both bucket-pruned by the entity id alone
-(``bucket_cols`` prefix bucketing):
-
-- ``raw/``  (key = (id, seq), bucketed by id): the per-entity change log
-  — normalized change records, upserted idempotently.
-- ``hist/`` (key = (id, version), bucketed by id): the derived SCD2
-  rows, whole-row-replaced per batch for affected keys.
-
-Batch protocol (apply_batch): upsert the batch's records into ``raw``;
-then re-derive history_table_changes over the AFFECTED KEYS' complete
-change log (bucket-pruned read) and whole-row-replace those keys' rows
-in ``hist``. A key's version count only grows, so replacement leaves no
-stale rows.
+Design: the history is a DERIVED STORE over the change log, refreshed
+from the log's version diff like the rollup views (operators/rollup.py).
+Two StateStores under one root, both bucketed by the entity id alone
+(``bucket_cols``): ``raw/`` (key (id, seq)), the change log keyed on the
+catalog-typed id in its string form and upserted idempotently, and
+``hist/`` (key (id, version)), the SCD2 rows, whose manifest records
+``source_version``, the raw version they reflect. The stores CO-BUCKET
+(``_bucket_col`` hashes ``concat_ws`` of the bucket columns, which casts
+the typed key to raw's string id; test_scd2_raw_and_hist_co_bucket), so
+one protocol, ``refresh``, runs after every raw write: the history of
+raw's rows in the buckets ``raw.changes_since`` lists replaces exactly
+those hist buckets, and the same publish records raw's version — even
+with none changed, so it never falls out of raw's kept window. A hist
+with no source version, or a retired one, counts every bucket as
+changed; one at another geometry than raw (a crash inside ``rebucket``)
+is written whole at raw's.
 
 Why recompute wins here:
 
@@ -31,23 +33,16 @@ Why recompute wins here:
   perfectly, and the result provably equals the one-shot operator on the
   union of all batches (property-tested, including the planted late
   record crossing the batch boundary).
-- EXACTLY-ONCE FOR FREE. Both writes are idempotent (keyed upsert of
-  deterministic rows), and ``hist`` is a pure function of ``raw``: crash
-  anywhere, replay the epoch, converge — no version bookkeeping (the
-  rollup view records the base version it reflects because aggregate
-  deltas are NOT idempotent; this derivation is).
+- EXACTLY-ONCE BY THE RECORDED VERSION. The raw upsert is idempotent and
+  hist names the raw version it reflects, so after a crash between the
+  two commits, or a raw write made without a refresh, the next refresh
+  re-derives every bucket raw changed since: no batch has to come back.
 
-Cost: a batch pays O(total changes of the keys it touches) — the same
-touched-group re-aggregation trade as the min/max rollup. Hot keys with
-very long histories are the degenerate case; real systems cap or
-compact per-key history (purge closed versions past a retention bound —
-StateStore.purge-style bucket rewrite) — documented, not needed at
-fixture scale.
-
-Scale shape per batch: one keyed upsert into ``raw``, one bucket-pruned
-read of affected ids, one window pass keyed on the id (the
-history_table_changes exchange), one keyed upsert into ``hist``.
-Nothing scans unaffected keys, ever.
+Cost: a refresh pays O(total changes of the keys in the changed buckets);
+``purge_closed_before`` bounds hot keys' histories. Per batch: one keyed
+upsert into ``raw``, then one staged rewrite of the changed hist buckets
+(a pruned raw scan, one window pass keyed on the id). No key list, no
+read of hist; nothing scans unchanged buckets.
 """
 
 from __future__ import annotations
@@ -116,30 +111,30 @@ class Scd2Store:
 
     def apply_batch(self, changes: DataFrame) -> None:
         """Apply one batch of NORMALIZED change rows (already filtered to
-        this table). Idempotent, so a replayed batch needs no epoch."""
-        # Pin the batch ONCE: the bucket collect, the raw upsert and the
-        # affected-key semi-join must all see the same rows — a
-        # non-deterministic input recomputed between those three uses
-        # could leave hist stale for keys the collect never saw.
+        this table): upsert them into the raw log, then ``refresh``.
+        Idempotent, so a replayed batch needs no epoch."""
         # The raw log keys on the catalog-typed id, in its string form, so
         # an int-keyed table's '007' and '7' share one entity's log.
-        raw_rows = changes.select(
-            typed_key(self.target).cast("string").alias("id"),
-            "seq", "op_type", "current_ts", "current_ts_norm", "after",
-        ).persist()
-        try:
-            keys = raw_rows.select("id").distinct()
-            buckets = self.raw.buckets_of(keys)
-            if not buckets:
-                return
-            self.raw.upsert_batch(raw_rows)
-            all_changes = self.raw.read_buckets(buckets).join(
-                keys, "id", "left_semi"
+        self.raw.upsert_batch(
+            changes.select(
+                typed_key(self.target).cast("string").alias("id"),
+                "seq", "op_type", "current_ts", "current_ts_norm", "after",
             )
-            derived = history_table_changes(all_changes, self.target)
-            self.hist.upsert_batch(derived, replace_rows=True)
-        finally:
-            raw_rows.unpersist()
+        )
+        self.refresh()
+
+    def refresh(self) -> None:
+        """Bring hist up to raw's newest version (module docstring)."""
+        hist = self.hist._manifest()
+        source = hist.get("source_version", None if hist["version"] else 0)
+        new, _, changed = self.raw.changes_since(source)
+        n = new["n_buckets"] if hist["n_buckets"] != new["n_buckets"] else None
+        if n or source != new["version"]:
+            buckets = list(range(n)) if n else changed
+            self.hist._write(
+                history_table_changes(self.raw._scan(new, buckets), self.target),
+                buckets, new["version"], n_buckets=n,
+            )
 
     def history(self) -> DataFrame:
         """The full SCD2 table, in the exact shape (and column order) of
@@ -147,16 +142,12 @@ class Scd2Store:
         return self.hist.read()
 
     def rebucket(self, n_new: int) -> None:
-        """Online geometry migration for BOTH underlying stores (the r11
-        StateStore.rebucket: one full rewrite committed as the store's
-        next version, so a crash leaves each store at its old geometry or
-        its new one). The two migrations are not atomic with each other,
-        and don't need to be: each store's modulus lives in its own
-        manifest, so raw and hist geometries are independent — a crash
-        between them just leaves one store migrated, correct at either
-        geometry, and a re-run converges."""
+        """Online geometry migration: raw is rewritten at ``n_new``, then
+        the refresh writes hist whole at raw's new geometry. A crash in
+        between leaves hist at the old one, and the next refresh
+        converges."""
         self.raw.rebucket(n_new)
-        self.hist.rebucket(n_new)
+        self.refresh()
 
     def purge_closed_before(self, cutoff: str) -> int:
         """Hot-key retention: bound a key's re-derivation cost by
@@ -181,29 +172,23 @@ class Scd2Store:
         and equals the one-shot derivation on the retained log
         (property-tested).
 
-        Protocol (crash-safe by re-run): probe the buckets holding
-        purgeable rows (pushdown ts < cutoff, keys with >= 2 such
-        records), compute the compacted log for those buckets, persist
-        it, rewrite HIST first (affected keys' rows replaced wholesale —
-        version counts shrink, so this needs ``rewrite_buckets``'s
-        delete semantics, not an upsert), then rewrite RAW. A crash
-        between the two leaves raw uncompacted — re-running the purge
-        recomputes the identical compaction and converges; after the
-        raw rewrite lands the purge is a no-op. Returns the number of
-        raw records removed.
+        Protocol (crash-safe by re-run): ``refresh`` (so a hist left
+        behind by a crash after an earlier purge's raw commit catches
+        up), probe the buckets holding purgeable rows (pushdown ts <
+        cutoff, keys with >= 2 such records), rewrite them in RAW with
+        the compacted log, then ``refresh`` again, which re-derives their
+        hist buckets whole. Returns the number of raw records removed.
 
-        Scale: the probe is a pruned filter-agg; everything else tracks
-        the affected buckets only — one window pass keyed on id (the
-        same exchange class as the derivation) plus two staged bucket
-        rewrites. Unaffected keys are never scanned."""
+        Scale: a pruned filter-agg probe, then work on the affected
+        buckets only: one window pass keyed on id, two staged rewrites."""
         from pyspark.sql import Window
 
-        if not self.raw.exists():
-            return 0
+        self.refresh()
+        manifest = self.raw._manifest()
         # -- probe: buckets containing a key with >=2 records before the
         # cutoff (exactly the keys with >=1 closed-before-cutoff version)
         cand = (
-            self.raw._read_with_bucket()
+            self.raw._scan(manifest)
             .filter(F.col("current_ts_norm") < cutoff)
             .groupBy("_bucket", "id")
             .count()
@@ -216,7 +201,7 @@ class Scd2Store:
         if not buckets:
             return 0
 
-        raw_b = self.raw.read_buckets(buckets)
+        raw_b = self.raw._scan(manifest, buckets).drop("_bucket")
         w = Window.partitionBy("id").orderBy("current_ts", "seq")
         wk = Window.partitionBy("id")
         wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -277,7 +262,6 @@ class Scd2Store:
                 F.when(is_baseline, folded_after)
                 .otherwise(F.col("after"))
                 .alias("after"),
-                F.col("j").isNotNull().alias("__touched"),
             )
             .persist()
         )
@@ -286,25 +270,9 @@ class Scd2Store:
                 raw_b.count()
                 - compacted.count()  # also materializes the persist
             )
-            if n_purged == 0:
-                return 0
-            touched_keys = (
-                compacted.filter("__touched").select("id").distinct()
-            )
-            hist_keys = touched_keys.select(
-                typed_key(self.target).alias(self.target.key)
-            )
-            hist_buckets = self.hist.buckets_of(hist_keys)
-            new_hist = history_table_changes(
-                compacted.filter("__touched").drop("__touched"), self.target
-            )
-            old_keep = self.hist.read_buckets(hist_buckets).join(
-                F.broadcast(hist_keys), self.target.key, "left_anti"
-            )
-            self.hist.rewrite_buckets(
-                hist_buckets, old_keep.unionByName(new_hist)
-            )
-            self.raw.rewrite_buckets(buckets, compacted.drop("__touched"))
+            if n_purged:
+                self.raw.rewrite_buckets(buckets, compacted)
+                self.refresh()
             return int(n_purged)
         finally:
             compacted.unpersist()

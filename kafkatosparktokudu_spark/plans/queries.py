@@ -837,8 +837,8 @@ def cdc_emp_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_emp_history_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME SCD2 table as cdc_emp_history, maintained INCREMENTALLY:
     the change log arrives as two seq-split batches applied through
-    Scd2Store (raw change-log upsert + affected-key re-derivation,
-    operators/scd2.py). Shares cdc_emp_history's oracle — incremental and
+    Scd2Store (raw change-log upsert, then a refresh that re-derives the
+    history buckets whose raw buckets changed, operators/scd2.py). Shares cdc_emp_history's oracle — incremental and
     one-shot must agree exactly, including the fixture's planted
     late-arriving record that crosses the batch boundary."""
     import shutil

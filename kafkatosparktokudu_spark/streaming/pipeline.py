@@ -920,12 +920,13 @@ def start_scd2_sync(
 ) -> StreamingQuery:
     """Continuous SCD2 history maintenance for one target table — the
     streaming face of ``operators.scd2.Scd2Store``: every micro-batch's
-    change records are upserted into the per-entity raw log and the
-    affected keys' version history is re-derived in place. Exactly-once
-    under checkpoint replay without epoch stamps: both writes are
-    idempotent keyed upserts and the history is a pure function of the
-    raw log (see scd2.py's module docstring; late/out-of-order records
-    are spliced exactly, which append-style SCD2 sinks cannot do).
+    change records are upserted into the per-entity raw log, then the
+    history is refreshed from the raw version diff. Exactly-once without
+    epoch stamps: the history commits the raw version it reflects, so a
+    crash between the two writes heals on the next batch, replayed or not
+    (scd2.py's module docstring; late records are spliced exactly, which
+    append-style SCD2 sinks cannot do). A record whose ID does not cast to
+    the key type is dropped (``bad_key``).
 
     ``source`` carries the raw (value[, seq]) change lines, same as
     start_cdc_sync."""
@@ -938,7 +939,7 @@ def start_scd2_sync(
 
     def _sync(batch_df: DataFrame, epoch_id: int) -> None:
         seq = F.col("seq") if "seq" in batch_df.columns else None
-        valid, _dead = split_valid(parse_ogg(batch_df, seq_col=seq))
+        valid, _dead = split_valid(parse_ogg(batch_df, seq_col=seq), cat)
         changes = normalize(valid).filter(F.col("tab_name") == table)
         store.apply_batch(changes)
 

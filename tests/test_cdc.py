@@ -343,6 +343,37 @@ def test_dead_letter_capture(spark, tmp_path):
     assert reasons['{"table": "S.T", "op_type": "I", "after": {}}'] == "missing_pk"
 
 
+def test_bad_key_is_a_dead_letter_not_a_failed_batch(spark, tmp_path):
+    """A record whose ID does not cast to its table's key type (an
+    int-keyed table receiving 'x7') is a dead letter with reason
+    ``bad_key``, and the batch's other records still merge. typed_key's
+    ANSI cast used to fail the whole batch with CAST_INVALID_INPUT, on
+    every retry. apply_changes drops the record the same way."""
+    cat = _acct_catalog()
+    lines = [
+        '{"table": "S.ACCT", "op_type": "I", "current_ts": '
+        '"2024-01-01T10:00:00.000000", "pos": 1, "after": {"ID": "7", "BAL": "1"}}',
+        '{"table": "S.ACCT", "op_type": "I", "current_ts": '
+        '"2024-01-01T10:00:00.000000", "pos": 2, "after": {"ID": "x7", "BAL": "2"}}',
+        '{"table": "SCOTT.EMP", "op_type": "I", "current_ts": '
+        '"2024-01-01T10:00:00.000000", "pos": 3, "after": {"ID": "x7", "NAME": "a"}}',
+    ]
+    raw = spark.createDataFrame([(line,) for line in lines], "value string")
+    wh, dl = str(tmp_path / "wh"), str(tmp_path / "dead")
+    m = sync_batch(
+        spark, raw, wh, catalog=cat, now_str=NOW, n_buckets=8, dead_letter_dir=dl
+    )
+    assert (m.total, m.dead, m.tables) == (3, 1, ["acct", "emp"])
+    reasons = {r["raw"]: r["reason"] for r in spark.read.parquet(dl).collect()}
+    assert reasons == {lines[1]: "bad_key"}
+    acct = StateStore(spark, f"{wh}/acct", ["id"], cat["acct"].full_schema, 8)
+    assert [(r["id"], r["bal"]) for r in acct.read().collect()] == [(7, 1.0)]
+    emp = StateStore(spark, f"{wh}/emp", ["id"], cat["emp"].full_schema, 8)
+    assert [r["id"] for r in emp.read().collect()] == ["x7"]
+    replayed = apply_changes(spark, raw, catalog=cat, now_str=NOW)
+    assert [(r["id"], r["bal"]) for r in replayed["acct"].collect()] == [(7, 1.0)]
+
+
 def test_dead_letters_appended_only_for_batches_that_have_them(spark, tmp_path):
     """With ``dead_letter_dir`` set, a batch without dead letters appends
     nothing (it used to write an empty parquet file, in one extra job);
@@ -1687,13 +1718,16 @@ def test_scd2_incremental_matches_batch_and_replays(spark, tmp_path):
     assert again == ref
 
 
-def test_scd2_crash_between_writes_replays_to_convergence(spark, tmp_path):
-    """Die AFTER the raw-log upsert but BEFORE the derived-history write;
+def test_scd2_crash_between_writes_replays_to_convergence(
+    spark, tmp_path, monkeypatch
+):
+    """Die AFTER the raw-log upsert, at the history's manifest publish;
     replaying the batch must converge (raw upsert idempotent, history a
     pure function of raw)."""
     from pyspark.sql import functions as F
 
     from kafkatosparktokudu_spark.catalog import default_catalog
+    from kafkatosparktokudu_spark.operators import merge
     from kafkatosparktokudu_spark.operators.scd2 import Scd2Store
     from kafkatosparktokudu_spark.plans.queries import QUERIES
 
@@ -1709,20 +1743,23 @@ def test_scd2_crash_between_writes_replays_to_convergence(spark, tmp_path):
     class Boom(RuntimeError):
         pass
 
-    real = store.hist.upsert_batch
+    real = merge._publish
     calls = {"n": 0}
 
-    def dying(batch, replace_rows=False):
+    def dying(target, *args):
+        if target.path != store.hist.path:
+            return real(target, *args)
         calls["n"] += 1
         raise Boom()
 
-    store.hist.upsert_batch = dying  # crash window: raw written, hist not
+    # crash window: raw written, hist not
+    monkeypatch.setattr(merge, "_publish", dying)
     try:
         store.apply_batch(norm.filter(F.col("seq") >= cut))
     except Boom:
         pass
     assert calls["n"] == 1
-    store.hist.upsert_batch = real
+    monkeypatch.setattr(merge, "_publish", real)
     store.apply_batch(norm.filter(F.col("seq") >= cut))  # replay
     cols = [f.name for f in QUERIES["cdc_emp_history"](spark, sf).schema.fields]
     got = sorted(map(tuple, store.history().select(*cols).collect()), key=repr)
@@ -1803,6 +1840,127 @@ def test_scd2_chains_versions_on_typed_key(spark, tmp_path, split):
     for batch in batches:
         store.apply_batch(batch)
     assert chain(store.history()) == want
+
+
+def _crash_at_hist_publish(monkeypatch, hist_path):
+    """Make the next manifest publish of the store at ``hist_path`` raise,
+    once; publishes to other stores go through."""
+    from kafkatosparktokudu_spark.operators import merge
+
+    real = merge._publish
+
+    def crash(store, *args):
+        if store.path == hist_path:
+            monkeypatch.setattr(merge, "_publish", real)
+            raise RuntimeError("crash at the hist commit")
+        return real(store, *args)
+
+    monkeypatch.setattr(merge, "_publish", crash)
+
+
+def test_scd2_crash_at_hist_commit_heals_without_replay(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 1 dies at the history's manifest publish, after its raw
+    commit, and is never replayed; batch 2 touches other keys. The
+    history still records the raw version before batch 1, so batch 2's
+    refresh re-derives batch 1's buckets too, and the history equals the
+    one-shot derivation over both batches. Healing used to need the same
+    batch to come back."""
+    from kafkatosparktokudu_spark.operators.ogg import history_table_changes
+    from kafkatosparktokudu_spark.operators.scd2 import Scd2Store
+
+    norm = _emp_norm(spark)
+    ids = sorted(r["id"] for r in norm.select("id").distinct().collect())
+    b1 = norm.filter(F.col("id").isin(ids[: len(ids) // 2]))
+    b2 = norm.filter(~F.col("id").isin(ids[: len(ids) // 2]))
+    target = default_catalog()["emp"]
+    store = Scd2Store(spark, str(tmp_path / "h"), target, n_buckets=8)
+    _crash_at_hist_publish(monkeypatch, store.hist.path)
+    with pytest.raises(RuntimeError, match="crash at the hist commit"):
+        store.apply_batch(b1)
+    store.apply_batch(b2)
+    got = sorted(map(tuple, store.history().collect()), key=repr)
+    want = sorted(
+        map(tuple, history_table_changes(b1.unionByName(b2), target).collect()),
+        key=repr,
+    )
+    assert got == want and len(got) > 0
+
+
+def test_scd2_purge_crash_at_hist_commit_converges_on_rerun(
+    spark, tmp_path, monkeypatch
+):
+    """purge_closed_before dies at the history's manifest publish, after
+    raw is compacted. Re-running it compacts nothing more (returns 0) and
+    brings the history to the one-shot derivation over the compacted
+    raw log."""
+    from kafkatosparktokudu_spark.operators.ogg import history_table_changes
+    from kafkatosparktokudu_spark.operators.scd2 import Scd2Store
+
+    target = default_catalog()["emp"]
+    store = Scd2Store(spark, str(tmp_path / "h"), target, n_buckets=8)
+    store.apply_batch(_emp_norm(spark))
+    cutoff = "2024-01-02 00:00:00"
+    _crash_at_hist_publish(monkeypatch, store.hist.path)
+    with pytest.raises(RuntimeError, match="crash at the hist commit"):
+        store.purge_closed_before(cutoff)
+    assert store.purge_closed_before(cutoff) == 0
+    got = sorted(map(tuple, store.history().collect()), key=repr)
+    want = sorted(
+        map(tuple, history_table_changes(store.raw.read(), target).collect()),
+        key=repr,
+    )
+    assert got == want and len(got) > 0
+
+
+_KEY_TYPES = {
+    "string": ("string", ["a", "007", "x y"]),
+    "int": ("int", ["7", "-3", "2147483647"]),
+    "bigint": ("bigint", ["7", "-3", "9007199254740993"]),
+    "double": ("double", ["1.5", "-0.0", "1e300"]),
+    "float": ("float", ["1.5", "3.25", "-7"]),
+    "decimal": ("decimal(12,3)", ["1.5", "-0.001", "123456789.123"]),
+    "timestamp": (
+        "timestamp",
+        ["2024-01-01 10:00:00", "2024-06-30 23:59:59.123456", "1999-12-31 00:00:00"],
+    ),
+}
+
+
+@pytest.mark.parametrize("ktype", sorted(_KEY_TYPES))
+def test_scd2_raw_and_hist_co_bucket(spark, tmp_path, ktype):
+    """The SCD2 refresh rewrites the hist buckets of the changed raw
+    buckets, so a key must land in the same bucket number in both stores:
+    raw hashes the string ``id`` (the typed key cast to string), hist the
+    typed key itself. Pinned row by row for every key type the catalog
+    bridges."""
+    from pyspark.sql import types as T
+
+    from kafkatosparktokudu_spark.catalog import TargetTable
+    from kafkatosparktokudu_spark.operators.ogg import typed_key
+    from kafkatosparktokudu_spark.operators.scd2 import Scd2Store
+
+    ddl, values = _KEY_TYPES[ktype]
+    dtype = T._parse_datatype_string(ddl)
+    target = TargetTable(
+        "t", "id", T.StructType([T.StructField("id", dtype, False)])
+    )
+    store = Scd2Store(spark, str(tmp_path / ktype), target, n_buckets=64)
+    ids = spark.createDataFrame([(v,) for v in values], "id string").select(
+        typed_key(target).alias("typed")
+    )
+    # raw's id column is the typed key's string form; hist's is the key
+    rows = (
+        ids.select("typed", F.col("typed").cast("string").alias("id"))
+        .select("typed", store.raw._bucket_col().alias("raw_b"))
+        .select("typed", "raw_b", F.col("typed").alias("id"))
+        .select("typed", "raw_b", store.hist._bucket_col().alias("hist_b"))
+    )
+    got = rows.collect()
+    assert len(got) == len(values)
+    assert all(r["typed"] is not None for r in got)
+    assert [r["raw_b"] for r in got] == [r["hist_b"] for r in got]
 
 
 def test_upsert_many_staged_write_runs_on_every_core(spark, tmp_path):

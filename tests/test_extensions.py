@@ -55,6 +55,24 @@ def test_lsh_finds_planted_neardups(spark):
     assert top[0]["jaccard"] > 0.8  # planted prefix dups are ~0.9
 
 
+def test_bare_pair_calls_release_what_they_persist(spark):
+    """neardup_pairs_jaccard and containment_pairs called without an
+    hs/bands frame persist their own and must release them: no persisted
+    RDD the call made outlives it, and the returned pairs still read."""
+    from kafkatosparktokudu_spark.operators.dedup import containment_pairs
+
+    docs = _docs(spark).select("doc_id", "text")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for pair_fn in (neardup_pairs_jaccard, containment_pairs):
+        before = persisted()
+        pairs = pair_fn(docs)
+        assert persisted() - before == set(), pair_fn.__name__
+        assert pairs.count() > 0
+
+
 def test_lsh_candidates_subquadratic(spark):
     docs = _docs(spark)
     n = docs.count()
